@@ -223,9 +223,8 @@ object BenchStress {
     println(s"bm25 forget set: ${forgetIds.count()} ids")
     for ((label, corpus) <- Seq("1x" -> docs, s"${copies}x" -> stressed)) {
       val nm = s"stressbm$label".replace("x", "")
-      Seq("_postings", "_doclens", "_meta", "_tombstones", "_meta_vac",
-        "_postings_vac", "_doclens_vac").foreach(s =>
-        spark.sql(s"DROP TABLE IF EXISTS $nm$s"))
+      graft.ops.IndexStore.dropTables(spark,
+        Seq("_postings", "_doclens", "_meta", "_tombstones").map(nm + _))
       time(s"bm25 index build ($label)") {
         graft.ops.Search.writeBm25Index(corpus, "doc_id", "text", nm)
         spark.table(s"${nm}_postings").count()

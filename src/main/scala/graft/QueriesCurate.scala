@@ -597,9 +597,8 @@ object QueriesCurate {
     */
   val q140 = QueryDef("q140_index_vacuum", (spark, dir) => {
     val (corpus, delta) = QueriesText.q70Corpus(spark, dir)
-    Seq("_shingles", "_buckets", "_meta", "_shingles_vac", "_buckets_vac",
-      "_tombstones")
-      .foreach(s => spark.sql(s"DROP TABLE IF EXISTS q140idx$s"))
+    graft.ops.IndexStore.dropTables(spark,
+      Seq("_shingles", "_buckets", "_meta", "_tombstones").map("q140idx" + _))
     val idx = graft.ops.Dedup.writeNearDupIndex(corpus, "doc_id", "text",
       "q140idx", numBuckets = 8)
     graft.ops.Dedup.vacuumNearDupIndex(spark, "q140idx",

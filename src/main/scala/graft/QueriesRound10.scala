@@ -110,9 +110,9 @@ object QueriesRound10 {
     */
   val q209 = QueryDef("q209_token_neardup_index", (spark, dir) => {
     QueriesScale.reapStaleSideTables("q209_token_merges")
-    Seq("_shingles", "_buckets", "_meta", "_tombstones", "_merges",
-      "_shingles_vac", "_buckets_vac").foreach(s =>
-      spark.sql(s"DROP TABLE IF EXISTS q209idx$s"))
+    graft.ops.IndexStore.dropTables(spark,
+      Seq("_shingles", "_buckets", "_meta", "_tombstones", "_merges")
+        .map("q209idx" + _))
     val (corpus, delta) = QueriesText.q70Corpus(spark, dir)
     graft.ops.Bpe.learn(corpus, "text", numMerges = 20)
       .write.mode("overwrite").parquet(q209MergePath)

@@ -170,9 +170,9 @@ object QueriesRound12 {
     */
   val q222 = QueryDef("q222_stream_token_neardup", (spark, dir) => {
     QueriesScale.reapStaleSideTables("q222_token_merges")
-    Seq("_shingles", "_buckets", "_meta", "_tombstones", "_merges",
-      "_shingles_vac", "_buckets_vac").foreach(s =>
-      spark.sql(s"DROP TABLE IF EXISTS q222idx$s"))
+    graft.ops.IndexStore.dropTables(spark,
+      Seq("_shingles", "_buckets", "_meta", "_tombstones", "_merges")
+        .map("q222idx" + _))
     val (corpus, delta) = QueriesText.q70Corpus(spark, dir)
     graft.ops.Bpe.learn(corpus, "text", numMerges = 20)
       .write.mode("overwrite").parquet(q222MergePath)

@@ -119,10 +119,6 @@ object QueriesRound13 {
     val odd = docs.filter(col("doc_id") % 2 === 1).count()
     require(ingested == odd,
       s"ingest increments must cover the streamed docs: $ingested of $odd")
-    // the appends ran on the stream's cloned session — refresh THIS
-    // session's cached listings before reading the grown index
-    Seq("_postings", "_doclens", "_meta").foreach(s =>
-      spark.catalog.refreshTable(s"q228idx$s"))
     graft.ops.Search.bm25TopKIndexed(spark,
         graft.ops.Search.loadBm25Index(spark, "q228idx"),
         QueriesAnalytics.bm25Queries(docs), "query_id", "qtext", k = 5)

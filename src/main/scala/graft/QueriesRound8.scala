@@ -20,9 +20,8 @@ object QueriesRound8 {
     */
   val q178 = QueryDef("q178_index_vacuum_tombstone", (spark, dir) => {
     val (corpus, delta) = QueriesText.q70Corpus(spark, dir)
-    Seq("_shingles", "_buckets", "_meta", "_shingles_vac", "_buckets_vac",
-      "_tombstones")
-      .foreach(s => spark.sql(s"DROP TABLE IF EXISTS q178idx$s"))
+    graft.ops.IndexStore.dropTables(spark,
+      Seq("_shingles", "_buckets", "_meta", "_tombstones").map("q178idx" + _))
     val idx = graft.ops.Dedup.writeNearDupIndex(corpus, "doc_id", "text",
       "q178idx", numBuckets = 8)
     graft.ops.Dedup.vacuumNearDupIndex(spark, "q178idx",
@@ -206,8 +205,8 @@ object QueriesRound8 {
           concat(col("text"), lit("   ")).as("text")))
       .unionByName(docs.filter(col("doc_id") % 14 === 7)
         .select((col("doc_id") + 700000).as("doc_id"), col("text")))
-    Seq("_fps", "_fps_tombstones", "_fps_vac", "_fps_tombstones_vac")
-      .foreach(s => spark.sql(s"DROP TABLE IF EXISTS q181idx$s"))
+    graft.ops.IndexStore.dropTables(spark,
+      Seq("_fps", "_fps_tombstones").map("q181idx" + _))
     val idx = graft.ops.Dedup.writeFingerprintIndex(corpus, "text",
       "q181idx", numBuckets = 8)
     graft.ops.Dedup.vacuumFingerprintIndex(spark, "q181idx",

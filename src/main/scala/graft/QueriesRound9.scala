@@ -27,9 +27,8 @@ object QueriesRound9 {
     */
   val q198 = QueryDef("q198_bm25_vacuum", (spark, dir) => {
     val docs = t(spark, dir, "documents").select("doc_id", "text")
-    Seq("_postings", "_doclens", "_meta", "_tombstones",
-      "_postings_vac", "_doclens_vac", "_meta_vac")
-      .foreach(s => spark.sql(s"DROP TABLE IF EXISTS q198idx$s"))
+    graft.ops.IndexStore.dropTables(spark,
+      Seq("_postings", "_doclens", "_meta", "_tombstones").map("q198idx" + _))
     graft.ops.Search.writeBm25Index(docs, "doc_id", "text", "q198idx",
       numBuckets = 8)
     graft.ops.Search.vacuumBm25Index(spark, "q198idx",

@@ -169,6 +169,16 @@ object Dedup {
     * reported them all would be the blowup this cap exists to prevent.
     * The cap-vs-uncapped equality spec pins the no-hot-keys case on real
     * data; the hot-key spec pins exactness when the cap binds.
+    *
+    * Declared approximation — 64-bit shingle keys: shingles are compared
+    * by their xxhash64, not their text, before the first exchange. Two
+    * distinct shingles that collide count as one shared shingle, which
+    * can only RAISE a pair's Jaccard. By the birthday bound the chance of
+    * any collision among `s` distinct shingles is about `s² / 2⁶⁵`: ~3·10⁻⁸
+    * at a million distinct shingles, ~3·10⁻² at a billion. One collision
+    * moves one intersection count by one, so a score changes only for a
+    * pair sitting within one shared shingle of `threshold`. This is the
+    * same 64-bit identity the MinHash/LSH paths already rest on.
     */
   def jaccardPairs(docs: DataFrame, idCol: String, textCol: String,
                    threshold: Double, n: Int = 3,
@@ -388,7 +398,10 @@ object Dedup {
 
   /** Exact token-n-gram Jaccard pairs — [[jaccardPairs]] at BPE-piece
     * grain ([[tokenShingleTable]]); same inverted-index join, same
-    * size-ratio prune, same exact-under-cap frequency guard.
+    * size-ratio prune, same exact-under-cap frequency guard, and the
+    * same declared approximation: piece n-grams are compared by their
+    * xxhash64, so two colliding shingles count as shared (birthday bound
+    * `s² / 2⁶⁵` over `s` distinct shingles — see [[jaccardPairs]]).
     */
   def jaccardPairsTokens(docs: DataFrame, idCol: String, textCol: String,
                          merges: Array[Array[String]], threshold: Double,
@@ -572,16 +585,18 @@ object Dedup {
     */
   def loadFingerprintIndex(spark: org.apache.spark.sql.SparkSession,
                            name: String): FingerprintIndex = {
-    val idx = FingerprintIndex(name, 0)
-    require(spark.catalog.tableExists(idx.fpsTable),
-      s"no fingerprint index at ${idx.fpsTable}")
-    val nb = spark.sql(s"DESCRIBE EXTENDED ${idx.fpsTable}").collect()
-      .find(_.getString(0) == "Num Buckets")
-      .map(_.getString(1).trim.toInt)
-      .getOrElse(sys.error(s"${idx.fpsTable} exists but is not bucketed — " +
-        "not a writeFingerprintIndex table"))
-    FingerprintIndex(name, nb)
+    val store = fpStore(spark, name).open()
+    require(spark.catalog.tableExists(s"${name}_fps"),
+      s"no fingerprint index at ${name}_fps")
+    FingerprintIndex(name, store.bucketCounts.head)
   }
+
+  /** The fingerprint family's [[IndexStore]]: key `fp`, one bucketed
+    * table, tombstones in `<name>_fps_tombstones`.
+    */
+  private[graft] def fpStore(spark: org.apache.spark.sql.SparkSession,
+                             name: String): IndexStore =
+    IndexStore(spark, "fp", s"${name}_fps_tombstones", Seq(s"${name}_fps"))
 
   /** Incremental EXACT dedup against a persisted fingerprint index:
     * collapse exact duplicates WITHIN the delta (deterministic keep-first
@@ -595,22 +610,14 @@ object Dedup {
   def dropExactDuplicatesAgainst(index: FingerprintIndex, delta: DataFrame,
                                  idCol: String, textCol: String,
                                  appendAccepted: Boolean = false): DataFrame = {
-    val spark = delta.sparkSession
-    healFpStaging(spark, index.name)
+    val store = fpStore(delta.sparkSession, index.name).open()
     val withFp = delta.withColumn("_fp",
       TextFunctions.fingerprint(col(textCol)))
     val deltaClean = exactKeepFirst(withFp, Seq("_fp"), Seq(col(idCol)))
-    // visible index = stored fps minus the tombstoned (vacuumed) set —
-    // broadcast anti-join, so the co-bucketed corpus side keeps its
-    // exchange-free plan (the near-dup visibleRows contract)
-    val storedFps = fpTombstones(spark, index) match {
-      case Some(ts) => spark.table(index.fpsTable)
-        .join(broadcast(ts.select(col("fp").as("_ts_fp"))),
-          col("fp") === col("_ts_fp"), "left_anti")
-      case None => spark.table(index.fpsTable)
-    }
-    val accepted = deltaClean
-      .join(storedFps.select(col("fp").as("_fp")), Seq("_fp"), "left_anti")
+    // visible index = stored fps minus the tombstoned (vacuumed) set
+    val accepted = deltaClean.join(
+      store.visible(index.fpsTable).select(col("fp").as("_fp")), Seq("_fp"),
+      "left_anti")
     if (!appendAccepted) accepted.drop("_fp")
     else {
       // checkpoint WITH the computed fingerprint so the append reuses it
@@ -619,49 +626,17 @@ object Dedup {
       // cluster would drop localCheckpoint blocks mid-ingest); callers
       // reclaim it with Checkpoints.pathOf/delete once consumed.
       val materialized = graft.core.Checkpoints.truncate(accepted)
-      graft.core.io.Writer.writeBucketed(
-        materialized.select(col("_fp").as("fp")).distinct(),
-        index.fpsTable, Seq("fp"), index.numBuckets,
-        mode = org.apache.spark.sql.SaveMode.Append)
+      val fps = materialized.select(col("_fp").as("fp")).distinct()
+      // no append probe: the accepted fps were anti-joined against the
+      // visible index above, and a tombstoned fp re-appends by design
+      store.append(index.fpsTable, fps, assumeFresh = true)
       // re-accepting previously-forgotten CONTENT clears its tombstone
       // (unlike the near-dup index, identical content re-ingest is the
       // normal exact-dedup flow — the un-hidden old fp row and the
       // appended one are the same value, so visibility stays correct);
-      // staged swap, healed like the compact path, so a crash cannot
-      // resurrect forgotten fps
-      fpTombstones(spark, index).foreach { ts =>
-        val cleared = ts.join(
-          materialized.select(col("_fp").as("fp")).distinct(),
-          Seq("fp"), "left_anti")
-        val vac = s"${index.tombstonesTable}_vac"
-        graft.core.io.Writer.writeTable(
-          graft.core.Checkpoints.truncate(cleared), vac)
-        spark.sql(s"DROP TABLE ${index.tombstonesTable}")
-        spark.sql(s"ALTER TABLE $vac RENAME TO ${index.tombstonesTable}")
-      }
+      // a staged swap, so a crash cannot resurrect forgotten fps
+      store.untombstone(fps)
       materialized.drop("_fp")
-    }
-  }
-
-  private def fpTombstones(spark: org.apache.spark.sql.SparkSession,
-                           idx: FingerprintIndex): Option[DataFrame] =
-    if (spark.catalog.tableExists(idx.tombstonesTable))
-      Some(spark.table(idx.tombstonesTable))
-    else None
-
-  /** Heal a crashed fingerprint-index staged swap (compact, or the
-    * tombstone-clear rewrite in the append path): `_vac` with original
-    * missing rolls forward, with the original present rolls back.
-    */
-  private def healFpStaging(spark: org.apache.spark.sql.SparkSession,
-                            name: String): Unit = {
-    Seq(s"${name}_fps", s"${name}_fps_tombstones").foreach { table =>
-      val vac = s"${table}_vac"
-      if (spark.catalog.tableExists(vac)) {
-        if (!spark.catalog.tableExists(table))
-          spark.sql(s"ALTER TABLE $vac RENAME TO $table"): Unit
-        else spark.sql(s"DROP TABLE $vac"): Unit
-      }
     }
   }
 
@@ -682,54 +657,20 @@ object Dedup {
   def vacuumFingerprintIndex(spark: org.apache.spark.sql.SparkSession,
                              name: String, docs: DataFrame,
                              textCol: String): Long = {
-    healFpStaging(spark, name)
     val idx = loadFingerprintIndex(spark, name)
-    val fps = docs.select(TextFunctions.fingerprint(col(textCol)).as("fp"))
-      .distinct()
-    val already = fpTombstones(spark, idx)
-    val fresh0 = spark.table(idx.fpsTable)
-      .join(fps, Seq("fp"), "left_semi")
-    val fresh = already match {
-      case Some(ts) => fresh0.join(broadcast(ts), Seq("fp"), "left_anti")
-      case None => fresh0
-    }
-    val materialized = graft.core.Checkpoints.truncate(fresh.distinct())
-    val removed = materialized.count()
-    if (removed == 0) return 0L
-    graft.core.io.Writer.writeTable(materialized, idx.tombstonesTable,
-      mode = if (spark.catalog.tableExists(idx.tombstonesTable))
-               org.apache.spark.sql.SaveMode.Append
-             else org.apache.spark.sql.SaveMode.Overwrite)
-    removed
+    fpStore(spark, name).vacuum(
+      docs.select(TextFunctions.fingerprint(col(textCol)).as("fp")),
+      spark.table(idx.fpsTable))
   }
 
   /** Physically scrub tombstoned fingerprints — [[compactNearDupIndex]]'s
-    * twin: staged `_vac` rewrite of the bucketed fps table, catalog
+    * twin: staged rewrite of the bucketed fps table, catalog
     * swap, tombstones dropped last. Returns the fingerprints scrubbed.
     */
   def compactFingerprintIndex(spark: org.apache.spark.sql.SparkSession,
                               name: String): Long = {
-    healFpStaging(spark, name)
-    val idx = loadFingerprintIndex(spark, name)
-    val scrubbed = fpTombstones(spark, idx) match {
-      case None => 0L
-      case Some(ts) =>
-        val tsd = ts.distinct()
-        val n = spark.table(idx.fpsTable)
-          .join(tsd, Seq("fp"), "left_semi").count()
-        if (n > 0) {
-          val survivors = spark.table(idx.fpsTable)
-            .join(tsd, Seq("fp"), "left_anti")
-          graft.core.io.Writer.writeBucketed(survivors,
-            s"${idx.fpsTable}_vac", Seq("fp"), idx.numBuckets)
-          spark.sql(s"DROP TABLE ${idx.fpsTable}")
-          spark.sql(s"ALTER TABLE ${idx.fpsTable}_vac RENAME TO ${idx.fpsTable}")
-        }
-        n
-    }
-    if (spark.catalog.tableExists(idx.tombstonesTable))
-      spark.sql(s"DROP TABLE ${idx.tombstonesTable}"): Unit
-    scrubbed
+    loadFingerprintIndex(spark, name)
+    fpStore(spark, name).compact()
   }
 
   /** Materialize the near-dup index for `corpus`: the sized-shingle table
@@ -780,69 +721,26 @@ object Dedup {
     */
   def loadNearDupIndex(spark: org.apache.spark.sql.SparkSession,
                        name: String): NearDupIndex = {
+    val store = nearDupStore(spark, name).open()
     val m = spark.table(s"${name}_meta").head()
     val idx = NearDupIndex(name, m.getAs[Int]("n"), m.getAs[Int]("num_hashes"),
       m.getAs[Int]("num_bands"), m.getAs[Int]("num_buckets"))
-    Seq(idx.shinglesTable, idx.bucketsTable).foreach { t =>
-      val catalogNb = spark.sql(s"DESCRIBE EXTENDED $t").collect()
-        .find(_.getString(0) == "Num Buckets")
-        .map(_.getString(1).trim.toInt)
-        .getOrElse(sys.error(s"$t exists but is not bucketed — " +
-          "not a writeNearDupIndex table"))
-      require(catalogNb == idx.numBuckets,
-        s"$t is bucketed $catalogNb-way but ${name}_meta says " +
-          s"${idx.numBuckets} — the index is corrupt; rebuild with " +
-          "writeNearDupIndex before appending")
-    }
+    store.requireBuckets(idx.numBuckets, idx.metaTable)
     idx
   }
 
-  /** The tombstone id set hiding forgotten docs from every index read,
-    * or None when no vacuum has ever run (zero overhead on a
-    * never-vacuumed index).
+  /** The near-dup family's [[IndexStore]] (word and token grain share
+    * it): key `doc_id`, the shingle and bucket tables, tombstones in
+    * `<name>_tombstones`. Every pairing/verification read goes through
+    * its visible rows — and the broadcast tombstone anti-join keeps the
+    * zero-exchange co-bucketed pairing contract (spec-asserted in
+    * NearDupIndexSpec).
     */
-  private def tombstones(spark: org.apache.spark.sql.SparkSession,
-                         idx: NearDupIndex): Option[DataFrame] =
-    if (spark.catalog.tableExists(idx.tombstonesTable))
-      Some(spark.table(idx.tombstonesTable))
-    else None
-
-  /** An index table with tombstoned docs filtered out — the canonical
-    * read for every pairing/verification path. The filter is a BROADCAST
-    * anti-join (the tombstone set is the forget backlog, bounded by
-    * [[compactNearDupIndex]] cadence), and a broadcast hash join
-    * preserves the streamed side's output partitioning — so the
-    * zero-exchange co-bucketed pairing contract survives a vacuum
-    * (spec-asserted in NearDupIndexSpec).
-    */
-  private def visibleRows(spark: org.apache.spark.sql.SparkSession,
-                          idx: NearDupIndex, table: String): DataFrame = {
-    val t = spark.table(table)
-    tombstones(spark, idx) match {
-      case Some(ts) =>
-        t.join(broadcast(ts.select(col("doc_id").as("_ts_doc_id"))),
-          t("doc_id") === col("_ts_doc_id"), "left_anti")
-      case None => t
-    }
-  }
-
-  /** Heal a [[compactNearDupIndex]] crashed between swap steps: a `_vac`
-    * with its original missing rolls FORWARD (rename), with the original
-    * present rolls BACK (drop) — mirroring [[graft.core.io.Maintenance
-    * .deleteMatching]]'s manifest protocol at catalog grain.
-    */
-  private def healVacuumStaging(spark: org.apache.spark.sql.SparkSession,
-                                name: String): Unit = {
-    def heal(table: String): Unit = {
-      val vac = s"${table}_vac"
-      if (spark.catalog.tableExists(vac)) {
-        if (!spark.catalog.tableExists(table))
-          spark.sql(s"ALTER TABLE $vac RENAME TO $table"): Unit
-        else spark.sql(s"DROP TABLE $vac"): Unit
-      }
-    }
-    Seq(s"${name}_shingles", s"${name}_buckets").foreach(heal)
-  }
+  private[graft] def nearDupStore(spark: org.apache.spark.sql.SparkSession,
+                                  name: String): IndexStore =
+    IndexStore(spark, "doc_id", s"${name}_tombstones",
+      Seq(s"${name}_shingles", s"${name}_buckets"),
+      aux = Seq(s"${name}_meta", s"${name}_merges"))
 
   /** Forget documents FROM the persisted index — the [[graft.core.io
     * .Maintenance.deleteMatching]] counterpart for the near-dup tables:
@@ -851,9 +749,9 @@ object Dedup {
     * near-duplicates of deleted content (and keep the content's
     * signature derivable).
     *
-    * TOMBSTONE protocol (the Delta-Lake deletion-vector discipline,
-    * adapted to catalog grain): the forget ids APPEND to a small
-    * `<name>_tombstones` table and every index read anti-joins it
+    * TOMBSTONE protocol ([[IndexStore]] — the Delta-Lake deletion-vector
+    * discipline, adapted to catalog grain): the forget ids APPEND to a
+    * small `<name>_tombstones` table and every index read anti-joins it
     * (broadcast — no exchange added), so the vacuum WRITE cost is
     * ~deleted-ids, never an index rewrite. Bucketed tables cannot be
     * file-pruned like plain parquet (bucket-file naming IS the
@@ -871,24 +769,9 @@ object Dedup {
     */
   def vacuumNearDupIndex(spark: org.apache.spark.sql.SparkSession,
                          name: String, ids: DataFrame): Long = {
-    healVacuumStaging(spark, name)
     val idx = loadNearDupIndex(spark, name)
-    val idList = ids.select(col(ids.columns.head).as("doc_id")).distinct()
-    // semi-join BEFORE distinct: distinct-first shuffles every indexed
-    // doc's shingle rows; filtering against the (small, broadcast)
-    // forget list first leaves only matched rows for the distinct
-    val fresh = visibleRows(spark, idx, idx.shinglesTable)
-      .select("doc_id")
-      .join(idList, Seq("doc_id"), "left_semi")
-      .distinct()
-    val materialized = graft.core.Checkpoints.truncate(fresh)
-    val removed = materialized.count()
-    if (removed == 0) return 0L
-    graft.core.io.Writer.writeTable(materialized, idx.tombstonesTable,
-      mode = if (spark.catalog.tableExists(idx.tombstonesTable))
-               org.apache.spark.sql.SaveMode.Append
-             else org.apache.spark.sql.SaveMode.Overwrite)
-    removed
+    nearDupStore(spark, name).vacuum(ids,
+      spark.table(idx.shinglesTable).select("doc_id"))
   }
 
   /** Physically scrub tombstoned docs from the index tables — the
@@ -896,54 +779,18 @@ object Dedup {
     * run on a maintenance cadence (and within the GDPR compliance
     * window: only after compaction are the forgotten docs' shingles —
     * and thus their signatures — gone from disk). Each table is
-    * rewritten as a staged `_vac` table then swapped via catalog rename
-    * (crash healing on the next vacuum/compact rolls a half-finished
-    * swap forward or back), and the tombstone table is dropped last —
-    * a crash before that drop just re-runs a no-op rewrite.
+    * rewritten through a staged catalog swap (crash healing on the next
+    * open rolls a half-finished swap forward or back), and the tombstone
+    * table is dropped last — a crash before that drop just re-runs a
+    * no-op rewrite.
     *
     * Returns the number of docs physically scrubbed. No-op (zero
     * rewrites) when the tombstone set is empty.
     */
   def compactNearDupIndex(spark: org.apache.spark.sql.SparkSession,
                           name: String): Long = {
-    healVacuumStaging(spark, name)
-    val idx = loadNearDupIndex(spark, name)
-    val scrubbed = tombstones(spark, idx) match {
-      case None => 0L
-      case Some(ts) =>
-        val idList = ts.select("doc_id").distinct()
-        // count across BOTH tables so a crash-resume that already
-        // scrubbed the shingles still reports the bucket-row work
-        // semi-join before distinct — only tombstone-matched rows
-        // reach the distinct's shuffle (same set, far fewer bytes)
-        val n = spark.table(idx.shinglesTable).select("doc_id")
-          .unionByName(spark.table(idx.bucketsTable).select("doc_id"))
-          .join(idList, Seq("doc_id"), "left_semi").distinct().count()
-        // gate each rewrite on THAT table's own tombstone membership —
-        // gating both on the shingles count would let a crash between
-        // the shingles swap and the buckets rewrite resume as "n = 0,
-        // nothing to do", drop the tombstones, and leave the forgotten
-        // docs' bucket rows (band hashes — a derivable content
-        // signature) on disk permanently and unrecorded
-        Seq((idx.shinglesTable, Seq("doc_id")),
-          (idx.bucketsTable, Seq("band", "bandhash"))).foreach {
-          case (t, bcols) =>
-            val dirty = spark.table(t).select("doc_id")
-              .join(idList, Seq("doc_id"), "left_semi").take(1).nonEmpty
-            if (dirty) {
-              val survivors = spark.table(t)
-                .join(idList, Seq("doc_id"), "left_anti")
-              graft.core.io.Writer.writeBucketed(survivors, s"${t}_vac",
-                bcols, idx.numBuckets)
-              spark.sql(s"DROP TABLE $t")
-              spark.sql(s"ALTER TABLE ${t}_vac RENAME TO $t")
-            }
-        }
-        n
-    }
-    if (spark.catalog.tableExists(idx.tombstonesTable))
-      spark.sql(s"DROP TABLE ${idx.tombstonesTable}"): Unit
-    scrubbed
+    loadNearDupIndex(spark, name)
+    nearDupStore(spark, name).compact()
   }
 
   /** Append `accepted` docs' shingle and bucket rows to the index — the
@@ -965,9 +812,10 @@ object Dedup {
     */
   def appendToNearDupIndex(index: NearDupIndex, accepted: DataFrame,
                            idCol: String, textCol: String): Unit =
-    appendShinglesCore(index, accepted, idCol,
-      sizedShingles(accepted.select(col(idCol), col(textCol)),
-        idCol, textCol, index.n))
+    appendShinglesCore(nearDupStore(accepted.sparkSession, index.name).open(),
+      index, accepted, idCol,
+      sizedShingles(accepted.select(col(idCol), col(textCol)), idCol,
+        textCol, index.n))
 
   /** The append body shared by the word-grain and token-grain indexes —
     * identical table schemas, only the shingle derivation differs.
@@ -976,26 +824,14 @@ object Dedup {
     * aggregation is not recomputed; when absent the buckets derive from
     * `sh` as always.
     */
-  private def appendShinglesCore(index: NearDupIndex, accepted: DataFrame,
-                                 idCol: String, sh: DataFrame,
+  private def appendShinglesCore(store: IndexStore, index: NearDupIndex,
+                                 accepted: DataFrame, idCol: String,
+                                 sh: DataFrame,
                                  precomputedBuckets: Option[DataFrame] = None,
                                  assumeFresh: Boolean = false)
       : Unit = {
-    val spark = accepted.sparkSession
-    // a tombstoned id's physical rows still await compaction: appending
-    // NEW rows under the same id would leave them hidden behind the
-    // tombstone (and un-hiding it would resurrect the stale rows) —
-    // there is no consistent state short of a compact, so fail loudly.
-    // Broadcast semi-join probe, bounded by the forget backlog.
-    tombstones(spark, index).foreach { ts =>
-      val clash = accepted.select(col(idCol).as("doc_id")).distinct()
-        .join(broadcast(ts.select("doc_id")), Seq("doc_id"), "left_semi")
-        .take(1)
-      require(clash.isEmpty,
-        s"appendToNearDupIndex: doc_id ${clash.headOption.map(_.get(0))} " +
-          s"is tombstoned in ${index.tombstonesTable} — run " +
-          "compactNearDupIndex before re-ingesting a forgotten id")
-    }
+    store.requireNotTombstoned(accepted.select(idCol), "appendToNearDupIndex",
+      "compactNearDupIndex")
     // `assumeFresh`: the caller PROVES the batch's ids were never
     // appended (the streaming lanes' pre-append high-water mark — a
     // batch id above the mark never started an append, and ids are
@@ -1004,20 +840,9 @@ object Dedup {
     // batch — on a long-lived ingest it is the one per-batch term that
     // grows without bound. Replays and unknown marks take the probing
     // path unchanged.
-    def freshOnly(rows: DataFrame, table: String): DataFrame =
-      if (assumeFresh) rows
-      else rows.join(spark.table(table).select("doc_id").distinct(),
-        Seq("doc_id"), "left_anti")
-    graft.core.io.Writer.writeBucketed(
-      freshOnly(sh, index.shinglesTable), index.shinglesTable,
-      Seq("doc_id"), index.numBuckets,
-      mode = org.apache.spark.sql.SaveMode.Append)
-    graft.core.io.Writer.writeBucketed(
-      freshOnly(precomputedBuckets.getOrElse(
-          bandBuckets(sh, index.numHashes, index.numBands)),
-        index.bucketsTable),
-      index.bucketsTable, Seq("band", "bandhash"), index.numBuckets,
-      mode = org.apache.spark.sql.SaveMode.Append)
+    store.append(index.shinglesTable, sh, assumeFresh)
+    store.append(index.bucketsTable, precomputedBuckets.getOrElse(
+      bandBuckets(sh, index.numHashes, index.numBands)), assumeFresh)
   }
 
   /** [[minhashLshPairsAcross]] against a PERSISTED corpus index: same
@@ -1030,12 +855,11 @@ object Dedup {
                             idCol: String, textCol: String,
                             threshold: Double,
                             maxBandFreq: Option[Int]): DataFrame = {
-    val spark = delta.sparkSession
+    val store = nearDupStore(delta.sparkSession, index.name).open()
     val dSh = sizedShingles(delta, idCol, textCol, index.n)
-    crossPairs(visibleRows(spark, index, index.bucketsTable),
+    crossPairs(store.visible(index.bucketsTable),
       bandBuckets(dSh, index.numHashes, index.numBands),
-      visibleRows(spark, index, index.shinglesTable), dSh, threshold,
-      maxBandFreq)
+      store.visible(index.shinglesTable), dSh, threshold, maxBandFreq)
   }
 
   /** [[dropNearDuplicatesAgainst]] against a persisted index, optionally
@@ -1144,7 +968,7 @@ object Dedup {
                                    assumeFresh: Boolean = false)
       : (DataFrame, Option[DataFrame]) = {
     import org.apache.spark.storage.StorageLevel
-    val spark = delta.sparkSession
+    val store = nearDupStore(delta.sparkSession, index.name).open()
     // same shared-subtree staging as the corpus-variant overload: the
     // delta shingle/bucket tables feed the within-delta collapse AND the
     // index cross-pairing, across an eager-checkpoint job boundary —
@@ -1159,9 +983,8 @@ object Dedup {
       .filter(col("id") =!= col("comp"))
       .select(col("id").as(idCol))
     val deltaClean = delta.join(drop, Seq(idCol), "left_anti")
-    val pairs = crossPairs(visibleRows(spark, index, index.bucketsTable), dB,
-      visibleRows(spark, index, index.shinglesTable), dSh, threshold,
-      maxBandFreq)
+    val pairs = crossPairs(store.visible(index.bucketsTable), dB,
+      store.visible(index.shinglesTable), dSh, threshold, maxBandFreq)
     // distinct column name + expression join: the exclusion side projects
     // from the SAME delta plan that feeds the pairs, and a USING-join on a
     // shared name can silently resolve both sides to one attribute in a
@@ -1191,7 +1014,7 @@ object Dedup {
         // dropExactDuplicatesAgainst
         val materialized = graft.core.Checkpoints.truncate(accepted)
         val ids = materialized.select(col(idCol).as("doc_id"))
-        appendShinglesCore(index, materialized, idCol,
+        appendShinglesCore(store, index, materialized, idCol,
           dSh.join(ids, Seq("doc_id"), "left_semi")
             .select("doc_id", "shingle", "n_sh"),
           precomputedBuckets = Some(
@@ -1281,6 +1104,7 @@ object Dedup {
                                 idCol: String, textCol: String,
                                 merges: Array[Array[String]]): Unit = {
     val spark = accepted.sparkSession
+    val store = nearDupStore(spark, index.name).open()
     val mergesTable = s"${index.name}_merges"
     require(spark.catalog.tableExists(mergesTable),
       s"$mergesTable missing — not a token-grain index; " +
@@ -1293,9 +1117,9 @@ object Dedup {
         "under different merges would silently split the piece space " +
         "and miss near-dups — rebuild the index with " +
         "writeTokenNearDupIndex to change merges")
-    appendShinglesCore(index, accepted, idCol,
-      sizedTokenShingles(accepted.select(col(idCol), col(textCol)),
-        idCol, textCol, merges, index.n))
+    appendShinglesCore(store, index, accepted, idCol,
+      sizedTokenShingles(accepted.select(col(idCol), col(textCol)), idCol,
+        textCol, merges, index.n))
   }
 
   /** [[dropNearDuplicatesAgainst]] at TOKEN grain through a persisted

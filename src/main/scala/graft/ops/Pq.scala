@@ -217,30 +217,16 @@ object Pq {
       .write.mode("overwrite").parquet(s"$dir/meta")
   }
 
-  /** The tombstone set hiding forgotten vectors from every index read,
-    * or None when no vacuum has ever run. A parquet dir beside the
-    * codes (`$dir/tombstones`, one `cand_id` column) — the
-    * [[graft.ops.Dedup.vacuumNearDupIndex]] protocol at path grain.
+  /** The PQ family's [[IndexStore]] at path grain: key `cand_id`, the
+    * cell-partitioned `$dir/codes`, tombstones in a parquet dir beside
+    * them (`$dir/tombstones`). The read filter is a broadcast anti-join
+    * AFTER the cell-pruned scan, so file-level partition pruning
+    * survives a vacuum.
     */
-  private def pqTombstones(spark: org.apache.spark.sql.SparkSession,
-                           dir: String): Option[DataFrame] = {
-    val p = new org.apache.hadoop.fs.Path(s"$dir/tombstones")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(p)) Some(spark.read.parquet(p.toString)) else None
-  }
-
-  /** `codes` minus tombstoned vectors — broadcast anti-join AFTER the
-    * cell-pruned scan, so file-level partition pruning survives a
-    * vacuum (the tombstone set is the forget backlog, bounded by
-    * [[compactPqIndex]] cadence).
-    */
-  private def hideTombstoned(codes: DataFrame,
-                             ts: Option[DataFrame]): DataFrame = ts match {
-    case Some(t) =>
-      codes.join(broadcast(t.select(col("cand_id").as("_ts_cand_id"))),
-        codes("cand_id") === col("_ts_cand_id"), "left_anti")
-    case None => codes
-  }
+  private[graft] def pqStore(spark: org.apache.spark.sql.SparkSession,
+                             dir: String): IndexStore =
+    IndexStore(spark, "cand_id", s"$dir/tombstones",
+      dataDir = Some(s"$dir/codes"))
 
   /** Forget vectors FROM the persisted PQ index — PQ codes are a lossy
     * but real derivative of the embedding (ADC reconstructs approximate
@@ -252,19 +238,9 @@ object Pq {
     * tombstoned.
     */
   def vacuumPqIndex(spark: org.apache.spark.sql.SparkSession, dir: String,
-                    ids: DataFrame): Long = {
-    val idList = ids.select(col(ids.columns.head).as("cand_id")).distinct()
-    val fresh = hideTombstoned(
-        spark.read.parquet(s"$dir/codes").select("cand_id"),
-        pqTombstones(spark, dir))
-      .join(idList, Seq("cand_id"), "left_semi")
-      .distinct()
-    val materialized = graft.core.Checkpoints.truncate(fresh)
-    val removed = materialized.count()
-    if (removed == 0) return 0L
-    materialized.write.mode("append").parquet(s"$dir/tombstones")
-    removed
-  }
+                    ids: DataFrame): Long =
+    pqStore(spark, dir).vacuum(ids,
+      spark.read.parquet(s"$dir/codes").select("cand_id"))
 
   /** Physically scrub tombstoned vectors from the codes layout — a
     * targeted, file-pruned rewrite via [[graft.core.io.Maintenance
@@ -276,18 +252,8 @@ object Pq {
     * Returns the vectors physically scrubbed.
     */
   def compactPqIndex(spark: org.apache.spark.sql.SparkSession,
-                     dir: String): Long = {
-    pqTombstones(spark, dir) match {
-      case None => 0L
-      case Some(ts) =>
-        val r = graft.core.io.Maintenance.deleteMatching(
-          spark, s"$dir/codes", "cand_id", ts)
-        val p = new org.apache.hadoop.fs.Path(s"$dir/tombstones")
-        p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-          .delete(p, true)
-        r.rowsDeleted
-    }
-  }
+                     dir: String): Long =
+    pqStore(spark, dir).compact()
 
   /** The stored centroids as the ordered array [[graft.functions
     * .NativeFunctions.nearestCells]] broadcasts — cell id is the array
@@ -316,10 +282,8 @@ object Pq {
         graft.functions.NativeFunctions.nearestCells(col("embedding"), bc,
           nprobe)))
       .select(col("vec_id").as("probe_id"), col("cell"), col("embedding"))
-    val codes = hideTombstoned(
-      spark.read.parquet(s"$dir/codes")
-        .select(col("cand_id"), col("cell"), col("codes")),
-      pqTombstones(spark, dir))
+    val codes = pqStore(spark, dir).hide(spark.read.parquet(s"$dir/codes")
+      .select(col("cand_id"), col("cell"), col("codes")))
     adcTopKFused(codes, assigned, cb, topk)
   }
 
@@ -347,29 +311,18 @@ object Pq {
     */
   def appendPqIndex(spark: org.apache.spark.sql.SparkSession, dir: String,
                     delta: DataFrame, assumeFresh: Boolean): Unit = {
-    pqTombstones(spark, dir).foreach { ts =>
-      val clash = delta.select(col("vec_id").as("cand_id")).distinct()
-        .join(broadcast(ts.select("cand_id")), Seq("cand_id"), "left_semi")
-        .take(1)
-      require(clash.isEmpty,
-        s"appendPqIndex: vec_id ${clash.headOption.map(_.get(0))} is " +
-          s"tombstoned under $dir/tombstones — run compactPqIndex before " +
-          "re-ingesting a forgotten id")
-    }
-    val fresh =
-      if (assumeFresh) delta
-      else {
-        val existing = spark.read.parquet(s"$dir/codes")
-          .select(col("cand_id").as("vec_id")).distinct()
-        delta.join(existing, Seq("vec_id"), "left_anti")
-      }
+    val index = pqStore(spark, dir)
+    index.requireNotTombstoned(delta.select("vec_id"), "appendPqIndex",
+      "compactPqIndex")
+    val fresh = index.fresh(delta, spark.read.parquet(s"$dir/codes"), assumeFresh,
+      rowKey = "vec_id")
     val cb = codebookArrays(spark.read.parquet(s"$dir/codebook"))
     val bc = spark.sparkContext.broadcast(storedCentroids(spark, dir))
     val assigned = fresh.withColumn("cell", element_at(
       graft.functions.NativeFunctions.nearestCells(col("embedding"), bc, 1), 1))
-    encodePq(assigned, "embedding", cb)
+    IndexStore.step(s"append $dir/codes")(encodePq(assigned, "embedding", cb)
       .select(col("vec_id").as("cand_id"), col("cell"), col("codes"))
-      .write.mode("append").partitionBy("cell").parquet(s"$dir/codes")
+      .write.mode("append").partitionBy("cell").parquet(s"$dir/codes"))
   }
 
   /** End-to-end IVF-PQ: k-means cells prune the candidate set, PQ codes

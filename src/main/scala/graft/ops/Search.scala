@@ -173,87 +173,38 @@ object Search {
     idx
   }
 
-  /** The tombstone set hiding forgotten docs from every index read, or
-    * None when no vacuum has ever run (zero overhead on a
-    * never-vacuumed index). Rows are `(doc_id, dl)` — the doc length is
-    * captured at vacuum time so the visible corpus stats can be
-    * derived by exact integer subtraction even after the physical
-    * doclens rows are scrubbed mid-compact.
+  /** The BM25 family's [[IndexStore]]: key `doc_id`, the postings and
+    * doclens tables, and the meta table as its exact-recount summary.
+    * Tombstone rows are `(doc_id, dl)` — the doc length is captured at
+    * vacuum time so the visible corpus stats can be derived by exact
+    * integer subtraction even after the physical doclens rows are
+    * scrubbed mid-compact. The recount reads the stored doclens (never
+    * incremental arithmetic), which is what makes every append
+    * idempotent under replay.
     */
-  private def bm25Tombstones(spark: SparkSession,
-                             idx: Bm25Index): Option[DataFrame] =
-    if (spark.catalog.tableExists(idx.tombstonesTable))
-      Some(spark.table(idx.tombstonesTable))
-    else None
-
-  /** `df` minus tombstoned docs — broadcast anti-join (the
-    * [[graft.ops.Dedup]] visible-rows discipline): the tombstone set is
-    * the forget backlog, bounded by [[compactBm25Index]] cadence, and a
-    * broadcast join preserves the streamed side's scan shape, so bucket
-    * pruning on the postings read survives a vacuum.
-    */
-  private def hideTombstoned(df: DataFrame,
-                             ts: Option[DataFrame]): DataFrame = ts match {
-    case Some(t) =>
-      df.join(broadcast(t.select(col("doc_id").as("_ts_doc_id"))),
-        df("doc_id") === col("_ts_doc_id"), "left_anti")
-    case None => df
+  private[graft] def bm25Store(spark: SparkSession, name: String): IndexStore = {
+    val doclens = s"${name}_doclens"
+    val meta = s"${name}_meta"
+    IndexStore(spark, "doc_id", s"${name}_tombstones",
+      Seq(s"${name}_postings", doclens),
+      summary = Some(meta -> (() => spark.table(doclens)
+        .agg(count(lit(1)).as("n_docs"), coalesce(sum("dl"), lit(0L)).as("sum_dl"))
+        .crossJoin(spark.table(meta).select("num_buckets")))))
   }
 
   /** Heal a [[compactBm25Index]] / [[appendBm25Index]] crashed between
     * swap steps — run before trusting any table (load/vacuum/compact/
-    * append/search all call it; cost is a few catalog existence checks):
-    *
-    *  - a `_vac` postings/doclens table rolls FORWARD when its original
-    *    is missing, BACK otherwise (the [[graft.ops.Dedup]] rule);
-    *  - a staged `<name>_meta_vac` (always an exact recount of the
-    *    stored doclens at the moment it was written) rolls FORWARD when
-    *    the live meta is missing OR the tombstones are gone (the crash
-    *    fell after compact's tombstone drop, or after an append's
-    *    recount — either way the recount is the truth), and rolls BACK
-    *    while tombstones remain (reads stay consistent on
-    *    `old meta − Σ tombstone dl`; the next compact redoes the
-    *    recount).
+    * append/search all do; cost is a few catalog calls). The
+    * [[IndexStore]] heal rule: a staged postings/doclens table rolls
+    * FORWARD when its original is missing, BACK otherwise; the staged
+    * meta recount rolls FORWARD when the live meta is missing OR the
+    * tombstones are gone (the crash fell after compact's tombstone drop,
+    * or after an append's recount — either way the recount is the
+    * truth), and BACK while tombstones remain (reads stay consistent on
+    * `old meta − Σ tombstone dl`; the next compact redoes the recount).
     */
-  def healBm25Staging(spark: SparkSession, name: String): Unit = {
-    Seq(s"${name}_postings", s"${name}_doclens").foreach { t =>
-      val vac = s"${t}_vac"
-      if (spark.catalog.tableExists(vac)) {
-        if (!spark.catalog.tableExists(t))
-          spark.sql(s"ALTER TABLE $vac RENAME TO $t"): Unit
-        else spark.sql(s"DROP TABLE $vac"): Unit
-      }
-    }
-    val meta = s"${name}_meta"
-    val metaVac = s"${meta}_vac"
-    if (spark.catalog.tableExists(metaVac)) {
-      if (!spark.catalog.tableExists(meta))
-        spark.sql(s"ALTER TABLE $metaVac RENAME TO $meta"): Unit
-      else if (!spark.catalog.tableExists(s"${name}_tombstones")) {
-        spark.sql(s"DROP TABLE $meta")
-        spark.sql(s"ALTER TABLE $metaVac RENAME TO $meta"): Unit
-      } else spark.sql(s"DROP TABLE $metaVac"): Unit
-    }
-  }
-
-  /** Exact-recount refresh of the one-row stats table via a staged
-    * catalog swap (write `_vac`, drop, rename — [[healBm25Staging]]
-    * rolls a crash at any step to a consistent state). Recounting from
-    * the stored doclens — instead of incremental arithmetic — is what
-    * makes every caller idempotent under replay.
-    */
-  private def refreshBm25Meta(spark: SparkSession, idx: Bm25Index): Unit = {
-    import spark.implicits._
-    val agg = spark.table(idx.doclensTable)
-      .agg(count(lit(1)), coalesce(sum("dl"), lit(0L))).as[(Long, Long)].head()
-    val metaVac = s"${idx.metaTable}_vac"
-    spark.sql(s"DROP TABLE IF EXISTS $metaVac")
-    graft.core.io.Writer.writeTable(
-      Seq((agg._1, agg._2, idx.numBuckets))
-        .toDF("n_docs", "sum_dl", "num_buckets"), metaVac)
-    spark.sql(s"DROP TABLE ${idx.metaTable}")
-    spark.sql(s"ALTER TABLE $metaVac RENAME TO ${idx.metaTable}")
-  }
+  def healBm25Staging(spark: SparkSession, name: String): Unit =
+    bm25Store(spark, name).open(): Unit
 
   /** Forget documents FROM the persisted BM25 index — the
     * [[graft.ops.Dedup.vacuumNearDupIndex]] tombstone protocol applied
@@ -273,13 +224,8 @@ object Search {
     */
   def vacuumBm25Index(spark: SparkSession, name: String,
                       ids: DataFrame): Long = {
-    healBm25Staging(spark, name)
     val idx = loadBm25Index(spark, name)
-    val idList = ids.select(col(ids.columns.head).as("doc_id")).distinct()
-    val fresh = hideTombstoned(spark.table(idx.doclensTable),
-        bm25Tombstones(spark, idx))
-      .join(idList, Seq("doc_id"), "left_semi")
-      .select("doc_id", "dl")
+    val store = bm25Store(spark, name)
     // crash-orphan guard: a requested id ABSENT from doclens can still
     // hold postings — an append that crashed between the postings and
     // doclens writes and was never replayed. Left untombstoned, those
@@ -290,25 +236,17 @@ object Search {
     // orphans with NULL dl: they were never counted into the meta
     // totals, so the visible-stats subtraction must skip them
     // ([[bm25TopKIndexed]] counts only non-null dl into `tn`).
-    val unmatched = hideTombstoned(
-      idList.join(spark.table(idx.doclensTable).select("doc_id"),
-        Seq("doc_id"), "left_anti"),
-      bm25Tombstones(spark, idx))
-    val all =
-      if (unmatched.take(1).isEmpty) fresh
-      else fresh.unionByName(
-        spark.table(idx.postingsTable)
-          .join(broadcast(unmatched), Seq("doc_id"), "left_semi")
-          .select("doc_id").distinct()
-          .select(col("doc_id"), lit(null).cast("long").as("dl")))
-    val materialized = graft.core.Checkpoints.truncate(all)
-    val removed = materialized.count()
-    if (removed == 0) return 0L
-    graft.core.io.Writer.writeTable(materialized, idx.tombstonesTable,
-      mode = if (spark.catalog.tableExists(idx.tombstonesTable))
-               org.apache.spark.sql.SaveMode.Append
-             else org.apache.spark.sql.SaveMode.Overwrite)
-    removed
+    def withOrphans(matched: DataFrame, idList: DataFrame): DataFrame = {
+      val unmatched = store.hide(idList.join(
+        spark.table(idx.doclensTable).select("doc_id"), Seq("doc_id"), "left_anti"))
+      if (unmatched.take(1).isEmpty) matched
+      else matched.unionByName(spark.table(idx.postingsTable)
+        .join(broadcast(unmatched), Seq("doc_id"), "left_semi")
+        .select("doc_id").distinct()
+        .select(col("doc_id"), lit(null).cast("long").as("dl")))
+    }
+    store.vacuum(ids, spark.table(idx.doclensTable).select("doc_id", "dl"),
+      withOrphans)
   }
 
   /** Physically scrub tombstoned docs — the batched second half of
@@ -320,51 +258,8 @@ object Search {
     * Returns the docs physically scrubbed.
     */
   def compactBm25Index(spark: SparkSession, name: String): Long = {
-    healBm25Staging(spark, name)
-    val idx = loadBm25Index(spark, name)
-    bm25Tombstones(spark, idx) match {
-      case None => 0L
-      case Some(ts) =>
-        val idList = ts.select("doc_id").distinct()
-        // semi-join before distinct — only tombstone-matched rows
-        // reach the distinct's shuffle (same set, far fewer bytes)
-        val n = spark.table(idx.postingsTable).select("doc_id")
-          .unionByName(spark.table(idx.doclensTable).select("doc_id"))
-          .join(idList, Seq("doc_id"), "left_semi").distinct().count()
-        Seq((idx.postingsTable, Seq("term")),
-          (idx.doclensTable, Seq("doc_id"))).foreach { case (t, bcols) =>
-          val dirty = spark.table(t).select("doc_id")
-            .join(idList, Seq("doc_id"), "left_semi").take(1).nonEmpty
-          if (dirty) {
-            // the using-column join pulls doc_id to the front — restore
-            // the table's declared column order before the rewrite
-            val cols = spark.table(t).columns
-            val survivors = spark.table(t)
-              .join(idList, Seq("doc_id"), "left_anti")
-              .select(cols.map(col(_)): _*)
-            graft.core.io.Writer.writeBucketed(survivors, s"${t}_vac",
-              bcols, idx.numBuckets)
-            spark.sql(s"DROP TABLE $t")
-            spark.sql(s"ALTER TABLE ${t}_vac RENAME TO $t")
-          }
-        }
-        // stage the recounted meta FIRST, drop the tombstones, then swap:
-        // heal rolls the meta_vac back while tombstones exist (reads stay
-        // on old-meta − Σts.dl) and forward once they are gone
-        import spark.implicits._
-        val agg = spark.table(idx.doclensTable)
-          .agg(count(lit(1)), coalesce(sum("dl"), lit(0L)))
-          .as[(Long, Long)].head()
-        val metaVac = s"${idx.metaTable}_vac"
-        spark.sql(s"DROP TABLE IF EXISTS $metaVac")
-        graft.core.io.Writer.writeTable(
-          Seq((agg._1, agg._2, idx.numBuckets))
-            .toDF("n_docs", "sum_dl", "num_buckets"), metaVac)
-        spark.sql(s"DROP TABLE ${idx.tombstonesTable}")
-        spark.sql(s"DROP TABLE ${idx.metaTable}")
-        spark.sql(s"ALTER TABLE $metaVac RENAME TO ${idx.metaTable}")
-        n
-    }
+    loadBm25Index(spark, name)
+    bm25Store(spark, name).compact()
   }
 
   /** Load an index handle written by [[writeBm25Index]], cross-checking
@@ -372,20 +267,10 @@ object Search {
     * (drift would break the bucket-pruned read contract — fail loudly).
     */
   def loadBm25Index(spark: SparkSession, name: String): Bm25Index = {
-    healBm25Staging(spark, name)
-    val m = spark.table(s"${name}_meta").head()
-    val idx = Bm25Index(name, m.getAs[Int]("num_buckets"))
-    // read the bucket spec through the catalog API, not DESCRIBE text
-    // parsing (output format is not a stable contract across versions)
-    val catalogNb = spark.sessionState.catalog
-      .getTableMetadata(org.apache.spark.sql.catalyst.TableIdentifier(
-        idx.postingsTable))
-      .bucketSpec.map(_.numBuckets)
-      .getOrElse(sys.error(s"${idx.postingsTable} exists but is not " +
-        "bucketed — not a writeBm25Index table"))
-    require(catalogNb == idx.numBuckets,
-      s"${idx.postingsTable} is bucketed $catalogNb-way but " +
-        s"${idx.metaTable} says ${idx.numBuckets} — rebuild the index")
+    val store = bm25Store(spark, name).open()
+    val idx = Bm25Index(name,
+      spark.table(s"${name}_meta").head().getAs[Int]("num_buckets"))
+    store.requireBuckets(idx.numBuckets, idx.metaTable)
     idx
   }
 
@@ -459,38 +344,20 @@ object Search {
     */
   def appendBm25Index(delta: DataFrame, idCol: String, textCol: String,
                       idx: Bm25Index, assumeFresh: Boolean): Unit = {
-    val spark = delta.sparkSession
-    healBm25Staging(spark, idx.name)
-    bm25Tombstones(spark, idx).foreach { ts =>
-      val clash = delta.select(col(idCol).as("doc_id")).distinct()
-        .join(broadcast(ts.select("doc_id")), Seq("doc_id"), "left_semi")
-        .take(1)
-      require(clash.isEmpty,
-        s"appendBm25Index: doc_id ${clash.headOption.map(_.get(0))} is " +
-          s"tombstoned in ${idx.tombstonesTable} — run compactBm25Index " +
-          "before re-ingesting a forgotten id")
-    }
+    val store = bm25Store(delta.sparkSession, idx.name).open()
+    store.requireNotTombstoned(delta.select(idCol), "appendBm25Index",
+      "compactBm25Index")
     val post = delta
       .select(col(idCol).as("doc_id"), explode(tokens(col(textCol))).as("term"))
       .filter(col("term") =!= "")
       .groupBy("term", "doc_id").agg(count(lit(1)).as("tf"))
     val materialized = graft.core.Checkpoints.truncate(post)
-    def freshOnly(rows: DataFrame, table: String): DataFrame =
-      if (assumeFresh) rows
-      else rows.join(spark.table(table).select("doc_id").distinct(),
-        Seq("doc_id"), "left_anti")
-    graft.core.io.Writer.writeBucketed(
-      freshOnly(materialized, idx.postingsTable), idx.postingsTable,
-      Seq("term"), idx.numBuckets,
-      mode = org.apache.spark.sql.SaveMode.Append)
+    store.append(idx.postingsTable, materialized, assumeFresh)
     // doclens derives from the full batch, not the postings-fresh subset:
     // a crash after the postings append must still fill the doclens rows
-    val dl = materialized.groupBy("doc_id").agg(sum("tf").as("dl"))
-    graft.core.io.Writer.writeBucketed(
-      freshOnly(dl, idx.doclensTable), idx.doclensTable,
-      Seq("doc_id"), idx.numBuckets,
-      mode = org.apache.spark.sql.SaveMode.Append)
-    refreshBm25Meta(spark, idx)
+    store.append(idx.doclensTable,
+      materialized.groupBy("doc_id").agg(sum("tf").as("dl")), assumeFresh)
+    store.recount()
   }
 
   /** Hard-negative mining for retrieval training: pairs that are
@@ -539,17 +406,17 @@ object Search {
                       queryIdCol: String, queryTextCol: String,
                       k: Int = 5, k1: Double = 1.2, b: Double = 0.75,
                       maxQueryTerms: Int = 10000): DataFrame = {
-    healBm25Staging(spark, idx.name)
+    val store = bm25Store(spark, idx.name).open()
     val qTerms = queryTerms(queries, queryIdCol, queryTextCol)
     val terms = qTerms.select("term").distinct()
       .limit(maxQueryTerms + 1).collect().map(_.getString(0))
     require(terms.length <= maxQueryTerms,
       s"query batch exceeds $maxQueryTerms distinct terms — " +
         "split the batch or raise maxQueryTerms")
-    val ts = bm25Tombstones(spark, idx)
-    val pruned = hideTombstoned(spark.table(idx.postingsTable)
+    val ts = store.tombstoneRows
+    val pruned = store.hide(spark.table(idx.postingsTable)
       .filter(col("term").isin(terms.toIndexedSeq: _*)), ts)
-    val dl = hideTombstoned(spark.table(idx.doclensTable), ts)
+    val dl = store.hide(spark.table(idx.doclensTable), ts)
     // visible corpus stats: meta − Σ tombstoned dl — exact integer
     // subtraction (the tombstones carry the dl captured at vacuum
     // time), so the hidden ranking equals a rebuild without the

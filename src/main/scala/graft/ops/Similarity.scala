@@ -242,32 +242,18 @@ object Similarity {
                      probes: DataFrame, k: Int,
                      clusterCol: String = "label",
                      probeRows: Option[Long] = None): DataFrame =
-    ivfTopK(hideClusteredTombstoned(spark, dir, spark.read.parquet(dir)),
+    ivfTopK(clusteredStore(spark, dir).hide(spark.read.parquet(dir)),
       probes, clusterCol, k, probeRows = probeRows)
 
-  /** Tombstones for [[writeClusteredIndex]] live at a SIBLING path
-    * (`<dir>_tombstones`) — a foreign subdir INSIDE the
-    * hive-partitioned layout would break partition discovery.
+  /** The IVF-clustered family's [[IndexStore]] at path grain: key
+    * `vec_id`, tombstones at a SIBLING path (`<dir>_tombstones`) — a
+    * foreign subdir INSIDE the hive-partitioned layout would break
+    * partition discovery.
     */
-  private def clusteredTombstonesPath(dir: String): String =
-    s"${dir.stripSuffix("/")}_tombstones"
-
-  private def clusteredTombstones(spark: org.apache.spark.sql.SparkSession,
-                                  dir: String): Option[DataFrame] = {
-    val p = new org.apache.hadoop.fs.Path(clusteredTombstonesPath(dir))
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(p)) Some(spark.read.parquet(p.toString)) else None
-  }
-
-  private def hideClusteredTombstoned(
-      spark: org.apache.spark.sql.SparkSession, dir: String,
-      corpus: DataFrame): DataFrame =
-    clusteredTombstones(spark, dir) match {
-      case Some(ts) =>
-        corpus.join(broadcast(ts.select(col("vec_id").as("_ts_vec_id"))),
-          corpus("vec_id") === col("_ts_vec_id"), "left_anti")
-      case None => corpus
-    }
+  private[graft] def clusteredStore(spark: org.apache.spark.sql.SparkSession,
+                                    dir: String): IndexStore =
+    IndexStore(spark, "vec_id", s"${dir.stripSuffix("/")}_tombstones",
+      dataDir = Some(dir))
 
   /** Forget vectors FROM the persisted IVF layout — unlike the PQ
     * codes, this index stores the RAW embeddings (the most direct
@@ -281,19 +267,9 @@ object Similarity {
     * Returns the VISIBLE indexed vectors tombstoned.
     */
   def vacuumClusteredIndex(spark: org.apache.spark.sql.SparkSession,
-                           dir: String, ids: DataFrame): Long = {
-    val idList = ids.select(col(ids.columns.head).as("vec_id")).distinct()
-    val fresh = hideClusteredTombstoned(spark, dir,
-        spark.read.parquet(dir).select("vec_id"))
-      .join(idList, Seq("vec_id"), "left_semi")
-      .distinct()
-    val materialized = graft.core.Checkpoints.truncate(fresh)
-    val removed = materialized.count()
-    if (removed == 0) return 0L
-    materialized.write.mode("append")
-      .parquet(clusteredTombstonesPath(dir))
-    removed
-  }
+                           dir: String, ids: DataFrame): Long =
+    clusteredStore(spark, dir).vacuum(ids,
+      spark.read.parquet(dir).select("vec_id"))
 
   /** Physically scrub tombstoned vectors — targeted file-pruned rewrite
     * via [[graft.core.io.Maintenance.deleteMatching]] (only the cell
@@ -303,16 +279,7 @@ object Similarity {
     */
   def compactClusteredIndex(spark: org.apache.spark.sql.SparkSession,
                             dir: String): Long =
-    clusteredTombstones(spark, dir) match {
-      case None => 0L
-      case Some(ts) =>
-        val r = graft.core.io.Maintenance.deleteMatching(
-          spark, dir, "vec_id", ts)
-        val p = new org.apache.hadoop.fs.Path(clusteredTombstonesPath(dir))
-        p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-          .delete(p, true)
-        r.rowsDeleted
-    }
+    clusteredStore(spark, dir).compact()
 
   /** Deterministic random hyperplanes for sign-bit LSH: `tables` hash
     * tables of `bits` planes each, seeded — same seed, same planes, on

@@ -151,13 +151,9 @@ object Streams {
     require(job.isIncremental || job.partitionBy.nonEmpty,
       s"writeIncrements needs an incremental or partitioned job " +
         s"(${job.name} would error-if-exists on the second micro-batch)")
-    stream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .outputMode(OutputMode.Append)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], id: Long) =>
-        writeIncrement(batch.toDF(), job, out, now, id): Unit
-      }
-      .start()
+    batchSink(stream, checkpoint) { (batch, id) =>
+      writeIncrement(batch, job, out, now, id): Unit
+    }
   }
 
   /** One micro-batch's write — the foreachBatch body, separated so the
@@ -220,13 +216,9 @@ object Streams {
     // reference parquet per batch (a driver job per batch, pure
     // protocol overhead)
     val edges = graft.ops.Stats.loadPsiEdges(stream.sparkSession, refPath)
-    stream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .outputMode(OutputMode.Append)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], id: Long) =>
-        applyPsiDriftBatch(batch.toDF(), edges, valueCol, partialsPath, id)
-      }
-      .start()
+    batchSink(stream, checkpoint) { (batch, id) =>
+      applyPsiDriftBatch(batch, edges, valueCol, partialsPath, id)
+    }
   }
 
   /** One micro-batch's partial — separated so the replay contract is
@@ -243,14 +235,9 @@ object Streams {
     */
   def applyPsiDriftBatch(batch: DataFrame, edges: Array[Double],
                          valueCol: String, partialsPath: String,
-                         id: Long): Unit = {
-    val spark = batch.sparkSession
-    val dir = new org.apache.hadoop.fs.Path(s"$partialsPath/batch$id")
-    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(dir)) { fs.delete(dir, true); () }
-    graft.ops.Stats.psiCurrentPartial(batch, valueCol, edges)
-      .write.parquet(dir.toString)
-  }
+                         id: Long): Unit =
+    landBatch(batch.sparkSession, s"$partialsPath/batch$id")(
+      graft.ops.Stats.psiCurrentPartial(batch, valueCol, edges))
 
   /** Continuous KS drift monitoring — [[psiDriftSink]]'s discipline for
     * the distribution-free test: each micro-batch contracts to its
@@ -271,26 +258,17 @@ object Streams {
     */
   def ksDriftSink(stream: DataFrame, valueCol: String,
                   partialsPath: String, checkpoint: String): StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .outputMode(OutputMode.Append)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], id: Long) =>
-        applyKsDriftBatch(batch.toDF(), valueCol, partialsPath, id)
-      }
-      .start()
+    batchSink(stream, checkpoint) { (batch, id) =>
+      applyKsDriftBatch(batch, valueCol, partialsPath, id)
+    }
 
   /** One micro-batch's KS partial — separated so the replay contract is
     * directly testable: applying the same batch twice leaves one copy.
     */
   def applyKsDriftBatch(batch: DataFrame, valueCol: String,
-                        partialsPath: String, id: Long): Unit = {
-    val spark = batch.sparkSession
-    val dir = new org.apache.hadoop.fs.Path(s"$partialsPath/batch$id")
-    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(dir)) { fs.delete(dir, true); () }
-    graft.ops.Stats.ksCurrentPartial(batch, valueCol)
-      .write.parquet(dir.toString)
-  }
+                        partialsPath: String, id: Long): Unit =
+    landBatch(batch.sparkSession, s"$partialsPath/batch$id")(
+      graft.ops.Stats.ksCurrentPartial(batch, valueCol))
 
   /** PER-GROUP continuous PSI drift — [[psiDriftSink]] composed with the
     * persisted slice references ([[graft.ops.Stats.writePsiReferenceByGroup]]):
@@ -315,14 +293,10 @@ object Streams {
     // per-group form)
     val edges = graft.ops.Stats.loadPsiGroupEdges(stream.sparkSession,
       refPath)
-    stream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .outputMode(OutputMode.Append)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], id: Long) =>
-        applyPsiByGroupDriftBatch(batch.toDF(), edges, groupCol, valueCol,
-          partialsPath, id)
-      }
-      .start()
+    batchSink(stream, checkpoint) { (batch, id) =>
+      applyPsiByGroupDriftBatch(batch, edges, groupCol, valueCol,
+        partialsPath, id)
+    }
   }
 
   /** One micro-batch's per-group PSI partial — separated so the replay
@@ -341,15 +315,9 @@ object Streams {
     */
   def applyPsiByGroupDriftBatch(batch: DataFrame, edges: DataFrame,
                                 groupCol: String, valueCol: String,
-                                partialsPath: String, id: Long): Unit = {
-    val spark = batch.sparkSession
-    val dir = new org.apache.hadoop.fs.Path(s"$partialsPath/batch$id")
-    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(dir)) { fs.delete(dir, true); () }
-    graft.ops.Stats.psiByGroupCurrentPartial(batch, groupCol, valueCol,
-        edges)
-      .write.parquet(dir.toString)
-  }
+                                partialsPath: String, id: Long): Unit =
+    landBatch(batch.sparkSession, s"$partialsPath/batch$id")(
+      graft.ops.Stats.psiByGroupCurrentPartial(batch, groupCol, valueCol, edges))
 
   /** PER-GROUP continuous KS drift — [[ksDriftSink]] composed with the
     * persisted per-group value counts
@@ -363,26 +331,17 @@ object Streams {
   def ksByGroupDriftSink(stream: DataFrame, groupCol: String,
                          valueCol: String, partialsPath: String,
                          checkpoint: String): StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .outputMode(OutputMode.Append)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], id: Long) =>
-        applyKsByGroupDriftBatch(batch.toDF(), groupCol, valueCol,
-          partialsPath, id)
-      }
-      .start()
+    batchSink(stream, checkpoint) { (batch, id) =>
+      applyKsByGroupDriftBatch(batch, groupCol, valueCol,
+        partialsPath, id)
+    }
 
   /** One micro-batch's per-group KS partial — replay-testable twin. */
   def applyKsByGroupDriftBatch(batch: DataFrame, groupCol: String,
                                valueCol: String, partialsPath: String,
-                               id: Long): Unit = {
-    val spark = batch.sparkSession
-    val dir = new org.apache.hadoop.fs.Path(s"$partialsPath/batch$id")
-    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(dir)) { fs.delete(dir, true); () }
-    graft.ops.Stats.ksByGroupCurrentPartial(batch, groupCol, valueCol)
-      .write.parquet(dir.toString)
-  }
+                               id: Long): Unit =
+    landBatch(batch.sparkSession, s"$partialsPath/batch$id")(
+      graft.ops.Stats.ksByGroupCurrentPartial(batch, groupCol, valueCol))
 
   /** Continuous weighted sampling WITHOUT replacement over an unbounded
     * stream — [[graft.ops.Sampling.prioritySamplePerGroup]] maintained
@@ -409,14 +368,10 @@ object Streams {
                           weightCol: String, n: Int, partialsPath: String,
                           checkpoint: String,
                           salt: String = "es"): StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .outputMode(OutputMode.Append)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], id: Long) =>
-        applyReservoirBatch(batch.toDF(), idCol, groupCol, weightCol, n,
-          partialsPath, id, salt)
-      }
-      .start()
+    batchSink(stream, checkpoint) { (batch, id) =>
+      applyReservoirBatch(batch, idCol, groupCol, weightCol, n,
+        partialsPath, id, salt)
+    }
 
   /** One micro-batch's reservoir partial — separated so the replay
     * contract is directly testable: applying the same batch twice leaves
@@ -424,16 +379,11 @@ object Streams {
     */
   def applyReservoirBatch(batch: DataFrame, idCol: String, groupCol: String,
                           weightCol: String, n: Int, partialsPath: String,
-                          id: Long, salt: String = "es"): Unit = {
-    val spark = batch.sparkSession
-    val dir = new org.apache.hadoop.fs.Path(s"$partialsPath/batch$id")
-    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(dir)) { fs.delete(dir, true); () }
-    graft.ops.Sampling.prioritySamplePerGroup(batch, idCol, groupCol,
-        weightCol, n, salt)
-      .drop("rank") // rank is a property of the MERGED reservoir
-      .write.parquet(dir.toString)
-  }
+                          id: Long, salt: String = "es"): Unit =
+    landBatch(batch.sparkSession, s"$partialsPath/batch$id")(
+      graft.ops.Sampling.prioritySamplePerGroup(batch, idCol, groupCol,
+          weightCol, n, salt)
+        .drop("rank")) // rank is a property of the MERGED reservoir
 
   /** The current reservoir: per-group top-n over the accumulated batch
     * partials ([[graft.ops.Sampling.reservoirMerge]]), with the same
@@ -460,22 +410,25 @@ object Streams {
     * and is deleted before write, so a replay rewrites the same rows
     * instead of duplicating them. Requires ids unique across the stream
     * (the standard ingest contract).
+    *
+    * High-water mark, a SINGLE-WRITER contract: before any append the
+    * sink stamps the batch id under `checkpoint`, and a batch above the
+    * mark skips the append probes whose cost scales with the index.
+    * That skip is sound only while ids are unique across the stream and
+    * no other writer appends ids this stream also carries. Set
+    * `spark.graft.stream.ingestHwmEnabled=false` when another query or
+    * job appends to the same index, or when previously ingested ids are
+    * re-streamed through a fresh checkpoint.
     */
   def nearDupSink(stream: DataFrame, indexName: String, idCol: String,
                   textCol: String, threshold: Double,
                   maxBandFreq: Option[Int], acceptedPath: String,
                   checkpoint: String,
                   clustersPath: Option[String] = None): StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .outputMode(OutputMode.Append)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], id: Long) =>
-        applyNearDupBatch(batch.toDF(), indexName, idCol, textCol,
-          threshold, maxBandFreq, acceptedPath, id, clustersPath,
-          assumeFresh =
-            ingestBatchIsFresh(batch.sparkSession, checkpoint, id))
-      }
-      .start()
+    ingestSink(stream, checkpoint) { (batch, id, fresh) =>
+      applyNearDupBatch(batch, indexName, idCol, textCol,
+        threshold, maxBandFreq, acceptedPath, id, clustersPath, fresh)
+    }
 
   def applyNearDupBatch(batch: DataFrame, indexName: String, idCol: String,
                         textCol: String, threshold: Double,
@@ -511,7 +464,6 @@ object Streams {
                         assumeFresh: Boolean = false): Unit = {
     val spark = batch.sparkSession
     val idx = graft.ops.Dedup.loadNearDupIndex(spark, indexName)
-    refreshIndexTables(spark, idx)
     val (accepted, pairs) = clustersPath match {
       case None =>
         (graft.ops.Dedup.dropNearDuplicatesAgainst(idx, batch,
@@ -541,22 +493,25 @@ object Streams {
     * continuous cluster maintenance via `clustersPath`. This is q209's
     * steady-state ingest made CONTINUOUS — per-batch cost tracks the
     * batch, never the corpus (BenchStress token exponent ~0.01).
+    *
+    * High-water mark, a SINGLE-WRITER contract: before any append the
+    * sink stamps the batch id under `checkpoint`, and a batch above the
+    * mark skips the append probes whose cost scales with the index.
+    * That skip is sound only while ids are unique across the stream and
+    * no other writer appends ids this stream also carries. Set
+    * `spark.graft.stream.ingestHwmEnabled=false` when another query or
+    * job appends to the same index, or when previously ingested ids are
+    * re-streamed through a fresh checkpoint.
     */
   def tokenNearDupSink(stream: DataFrame, indexName: String, idCol: String,
                        textCol: String, threshold: Double,
                        maxBandFreq: Option[Int], acceptedPath: String,
                        checkpoint: String,
                        clustersPath: Option[String] = None): StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .outputMode(OutputMode.Append)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], id: Long) =>
-        applyTokenNearDupBatch(batch.toDF(), indexName, idCol, textCol,
-          threshold, maxBandFreq, acceptedPath, id, clustersPath,
-          assumeFresh =
-            ingestBatchIsFresh(batch.sparkSession, checkpoint, id))
-      }
-      .start()
+    ingestSink(stream, checkpoint) { (batch, id, fresh) =>
+      applyTokenNearDupBatch(batch, indexName, idCol, textCol,
+        threshold, maxBandFreq, acceptedPath, id, clustersPath, fresh)
+    }
 
   /** One micro-batch's token-grain ingest — same replay contract as
     * [[applyNearDupBatch]] (idempotent index append via anti-join,
@@ -570,8 +525,6 @@ object Streams {
                              clustersPath: Option[String],
                              assumeFresh: Boolean = false): Unit = {
     val spark = batch.sparkSession
-    val (idx, _) = graft.ops.Dedup.loadTokenNearDupIndex(spark, indexName)
-    refreshIndexTables(spark, idx)
     val (accepted, pairs) = clustersPath match {
       case None =>
         (graft.ops.Dedup.dropNearDuplicatesAgainstTokens(spark, indexName,
@@ -598,20 +551,23 @@ object Streams {
     * crashed batch is repaired by Spark re-running it. `ingestedPath`
     * lands each batch's doc ids as a delete-first `batch<id>` increment
     * — the lane's observable output (what got indexed, when).
+    *
+    * High-water mark, a SINGLE-WRITER contract: before any append the
+    * sink stamps the batch id under `checkpoint`, and a batch above the
+    * mark skips the append probes whose cost scales with the index.
+    * That skip is sound only while ids are unique across the stream and
+    * no other writer appends ids this stream also carries. Set
+    * `spark.graft.stream.ingestHwmEnabled=false` when another query or
+    * job appends to the same index, or when previously ingested ids are
+    * re-streamed through a fresh checkpoint.
     */
   def bm25IngestSink(stream: DataFrame, indexName: String, idCol: String,
                      textCol: String, ingestedPath: String,
                      checkpoint: String): StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .outputMode(OutputMode.Append)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], id: Long) =>
-        applyBm25IngestBatch(batch.toDF(), indexName, idCol, textCol,
-          ingestedPath, id,
-          assumeFresh =
-            ingestBatchIsFresh(batch.sparkSession, checkpoint, id))
-      }
-      .start()
+    ingestSink(stream, checkpoint) { (batch, id, fresh) =>
+      applyBm25IngestBatch(batch, indexName, idCol, textCol,
+        ingestedPath, id, fresh)
+    }
 
   /** One micro-batch's BM25 ingest — separated so the replay contract is
     * directly testable (re-applying a batch leaves the index and the
@@ -621,16 +577,10 @@ object Streams {
                            idCol: String, textCol: String,
                            ingestedPath: String, id: Long,
                            assumeFresh: Boolean = false): Unit = {
-    val spark = batch.sparkSession
-    val idx = graft.ops.Search.loadBm25Index(spark, indexName)
-    (Seq(idx.postingsTable, idx.doclensTable, idx.metaTable) ++
-      Seq(idx.tombstonesTable).filter(spark.catalog.tableExists))
-      .foreach(spark.catalog.refreshTable)
+    val idx = graft.ops.Search.loadBm25Index(batch.sparkSession, indexName)
     graft.ops.Search.appendBm25Index(batch, idCol, textCol, idx, assumeFresh)
-    val dir = new org.apache.hadoop.fs.Path(s"$ingestedPath/batch$id")
-    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(dir)) { fs.delete(dir, true); () }
-    batch.select(col(idCol)).distinct().write.parquet(dir.toString)
+    landBatch(batch.sparkSession, s"$ingestedPath/batch$id")(
+      batch.select(col(idCol)).distinct())
   }
 
   /** Streaming IVF-PQ index maintenance: each micro-batch of
@@ -640,30 +590,30 @@ object Streams {
     * codebooks would corrupt ADC), appending into the cell-partitioned
     * codes layout. Same at-least-once replay contract and delete-first
     * `ingestedPath` increments as [[bm25IngestSink]].
+    *
+    * High-water mark, a SINGLE-WRITER contract: before any append the
+    * sink stamps the batch id under `checkpoint`, and a batch above the
+    * mark skips the append probes whose cost scales with the index.
+    * That skip is sound only while ids are unique across the stream and
+    * no other writer appends ids this stream also carries. Set
+    * `spark.graft.stream.ingestHwmEnabled=false` when another query or
+    * job appends to the same index, or when previously ingested ids are
+    * re-streamed through a fresh checkpoint.
     */
   def pqIngestSink(stream: DataFrame, indexDir: String,
                    ingestedPath: String, checkpoint: String)
       : StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .outputMode(OutputMode.Append)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], id: Long) =>
-        applyPqIngestBatch(batch.toDF(), indexDir, ingestedPath, id,
-          assumeFresh =
-            ingestBatchIsFresh(batch.sparkSession, checkpoint, id))
-      }
-      .start()
+    ingestSink(stream, checkpoint) { (batch, id, fresh) =>
+      applyPqIngestBatch(batch, indexDir, ingestedPath, id, fresh)
+    }
 
   /** One micro-batch's PQ ingest — see [[applyBm25IngestBatch]]. */
   def applyPqIngestBatch(batch: DataFrame, indexDir: String,
                          ingestedPath: String, id: Long,
                          assumeFresh: Boolean = false): Unit = {
-    val spark = batch.sparkSession
-    graft.ops.Pq.appendPqIndex(spark, indexDir, batch, assumeFresh)
-    val dir = new org.apache.hadoop.fs.Path(s"$ingestedPath/batch$id")
-    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(dir)) { fs.delete(dir, true); () }
-    batch.select(col("vec_id")).distinct().write.parquet(dir.toString)
+    graft.ops.Pq.appendPqIndex(batch.sparkSession, indexDir, batch, assumeFresh)
+    landBatch(batch.sparkSession, s"$ingestedPath/batch$id")(
+      batch.select(col("vec_id")).distinct())
   }
 
   /** Happy-path freshness gate for the ingest lanes' per-batch append
@@ -713,16 +663,41 @@ object Streams {
     fresh
   }
 
-  /** Another session (a prior stream's micro-batch clone, a different
-    * driver) may have appended since THIS session last listed the index
-    * tables — a stale cached file listing would silently pair against a
-    * smaller corpus. Refresh is metadata-cheap next to the pairing join.
+  /** The foreachBatch scaffolding every sink here shares: append output
+    * mode, the checkpoint, one `apply(batch, id)` per micro-batch.
     */
-  private def refreshIndexTables(spark: SparkSession,
-                                 idx: graft.ops.NearDupIndex): Unit =
-    (Seq(idx.shinglesTable, idx.bucketsTable) ++
-      Seq(idx.tombstonesTable).filter(spark.catalog.tableExists))
-      .foreach(spark.catalog.refreshTable)
+  private def batchSink(stream: DataFrame, checkpoint: String)
+                       (apply: (DataFrame, Long) => Unit): StreamingQuery =
+    stream.writeStream
+      .option("checkpointLocation", checkpoint)
+      .outputMode(OutputMode.Append)
+      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], id: Long) =>
+        apply(batch.toDF(), id)
+      }
+      .start()
+
+  /** [[batchSink]] for the index-ingest lanes: `apply` also gets the
+    * [[ingestBatchIsFresh]] verdict, passed on as `assumeFresh`.
+    */
+  private def ingestSink(stream: DataFrame, checkpoint: String)
+                        (apply: (DataFrame, Long, Boolean) => Unit): StreamingQuery =
+    batchSink(stream, checkpoint)((batch, id) =>
+      apply(batch, id, ingestBatchIsFresh(batch.sparkSession, checkpoint, id)))
+
+  /** Land one micro-batch's rows at `dir`, a pure function of the batch
+    * id: the dir is deleted FIRST, so a batch replayed after a crash
+    * between the write and the checkpoint commit rewrites the same rows
+    * instead of duplicating them. `rows` is evaluated after the delete —
+    * a landing whose rows read the sibling dirs sees exactly the state
+    * the first run saw.
+    */
+  private def landBatch(spark: SparkSession, dir: String)
+                       (rows: => DataFrame): Unit = {
+    val p = new org.apache.hadoop.fs.Path(dir)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (fs.exists(p)) { fs.delete(p, true); () }
+    rows.write.parquet(dir)
+  }
 
   /** The shared landing half of the near-dup ingest lanes: per-batch
     * accepted increment (delete-first — replay rewrites, never
@@ -756,25 +731,19 @@ object Streams {
                                       clustersCompactEvery: Int = 16)
       : Unit = {
     val spark = batch.sparkSession
-    val dir = new org.apache.hadoop.fs.Path(s"$acceptedPath/batch$id")
-    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(dir)) { fs.delete(dir, true); () }
-    accepted.write.parquet(dir.toString)
+    landBatch(spark, s"$acceptedPath/batch$id")(accepted)
+    // landBatch deletes first: a replayed batch recomputes its delta
+    // against the same standing state the first run saw
     clustersPath.foreach { cp =>
-      val incDir = new org.apache.hadoop.fs.Path(s"$cp/inc_b$id")
-      val cfs = incDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      // delete-first: a replayed batch recomputes its delta against the
-      // same standing state the first run saw
-      if (cfs.exists(incDir)) { cfs.delete(incDir, true); () }
-      val batchLabels = batch
-        .select(col(idCol).cast("long").as("id")).distinct()
-        .withColumn("comp", col("id"))
-      // a batch with NO discovered edges writes ONLY its own self-labels
-      // — O(|batch|) rows with no read of the standing table at all: a
-      // standing id's smaller label wins at read time (min collapse),
-      // a fresh id IS its own label. The steady-state common case skips
-      // both the CC rounds and the snapshot entirely.
-      val delta =
+      landBatch(spark, s"$cp/inc_b$id") {
+        val batchLabels = batch
+          .select(col(idCol).cast("long").as("id")).distinct()
+          .withColumn("comp", col("id"))
+        // a batch with NO discovered edges writes ONLY its own self-labels
+        // — O(|batch|) rows with no read of the standing table at all: a
+        // standing id's smaller label wins at read time (min collapse),
+        // a fresh id IS its own label. The steady-state common case skips
+        // both the CC rounds and the snapshot entirely.
         if (pairs.get.isEmpty) batchLabels
         else {
           // BOTH truncates are load-bearing, not just lineage hygiene:
@@ -803,7 +772,7 @@ object Streams {
               col("comp") =!= col("comp_prev"))
             .select("id", "comp")
         }
-      delta.write.parquet(incDir.toString)
+      }
       // deterministic in the batch id — a replayed compact tick re-folds
       // already-folded rows, a no-op under the min collapse
       if (clustersCompactEvery > 0 && id > 0 &&
@@ -895,13 +864,9 @@ object Streams {
   def scd2Sink(stream: DataFrame, dimPath: String, keys: Seq[String],
                tracked: Seq[String], checkpoint: String,
                dateOf: Long => String): StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .outputMode(OutputMode.Append)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], id: Long) =>
-        applyScd2Batch(batch.toDF(), dimPath, keys, tracked, dateOf(id)): Unit
-      }
-      .start()
+    batchSink(stream, checkpoint) { (batch, id) =>
+      applyScd2Batch(batch, dimPath, keys, tracked, dateOf(id)): Unit
+    }
 
   /** One micro-batch's SCD2 apply — separated so the replay contract is
     * directly testable: applying the same batch twice leaves the same
