@@ -175,10 +175,10 @@ object BenchStressStreaming {
       ingestLane(docs, "bssnd1"),
       ingestLane(stressedDocs, s"bssnd$copies"))
     // same lanes with the per-batch cluster fold: the delta's extra cost
-    // is the updateClusters CC over |labels|+|pairs| (labels = streamed
-    // ids + touched corpus ids — delta-sized, never corpus-sized), so
-    // the exponent must stay far below 1 too; `state` reports the final
-    // clusters-table rows
+    // is one scan of the clusters table plus a union-find over the
+    // batch's pairs and their endpoints' labels (delta-sized, never
+    // corpus-sized), so the exponent must stay far below 1 too; `state`
+    // reports the final clusters-table rows
     report("ingest + cluster fold",
       ingestLane(docs, "bssnc1", clusters = true),
       ingestLane(stressedDocs, s"bssnc$copies", clusters = true))

@@ -221,9 +221,9 @@ object QueriesRound11 {
     * ([[graft.streaming.Streams.nearDupSink]] with `clustersPath`):
     * q101's stream (q70's delta in two micro-batches against the
     * indexed corpus) now also folds each batch's discovered pairs into
-    * a persisted `(id, comp)` table via
-    * [[graft.ops.Dedup.updateClusters]] — q211's incremental fold run
-    * from inside the sink, at delta cost per batch. The oracle is the
+    * a persisted `(id, comp)` table — q211's incremental fold run from
+    * inside the sink, over only the components each batch's pairs
+    * touch. The oracle is the
     * q51-pattern full recompute RESTRICTED TO THE DISCOVERED EDGE
     * CONTRACT: exact-Jaccard pairs over corpus∪delta, minus
     * corpus-internal pairs (no ingest observes them), minus pairs

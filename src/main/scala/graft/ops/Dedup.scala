@@ -914,11 +914,11 @@ object Dedup {
   /** [[dropNearDuplicatesAgainst]] that ALSO returns the batch's
     * discovered near-dup PAIR set — within-delta edges plus
     * delta-to-indexed-corpus edges, `(a_id, b_id)` distinct and
-    * checkpointed (safe to consume after the call). This is the edge
-    * feed for continuous cluster maintenance
-    * ([[updateClusters]] — the streaming sink folds these into a
-    * persisted (id, comp) table at delta cost): ingest computes the
-    * pairs anyway, so surfacing them is free.
+    * safe to consume after the call (a local relation when the edge set
+    * fits `spark.graft.cc.localEdgeLimit`, else checkpointed). This is
+    * the edge feed for continuous cluster maintenance (the streaming
+    * sinks fold these into a persisted (id, comp) table at batch cost):
+    * ingest computes the pairs anyway, so surfacing them is free.
     */
   def ingestNearDupWithPairs(index: NearDupIndex, delta: DataFrame,
                              idCol: String, textCol: String,
@@ -946,6 +946,17 @@ object Dedup {
     * paths — only the delta shingle derivation differs. `dShRaw` must be
     * the delta's sized-shingle table at the INDEX's operating point.
     *
+    * Per-batch cost is ONE pass over the index plus driver work bounded
+    * by `spark.graft.cc.localEdgeLimit`: the within-delta and
+    * delta-to-index edges are evaluated as one tagged union and
+    * collected (at most limit + 1 rows), and the within-delta drop set,
+    * the hit ids and the returned pair set all derive from that one
+    * collect. Every `Checkpoints.truncate` re-executes its plan, so
+    * truncating two frames that share the cross-pair plan scans the
+    * index twice. An edge set above the limit (or a limit of 0, or
+    * non-LongType ids) takes the distributed
+    * [[connectedComponents]]/truncate path instead.
+    *
     * `appendAccepted` grows the index from the CACHED delta tables: the
     * accepted docs' shingle and bucket rows are semi-joined out of the
     * already-persisted `dSh`/`dB` instead of re-deriving them from text
@@ -968,45 +979,69 @@ object Dedup {
                                    assumeFresh: Boolean = false)
       : (DataFrame, Option[DataFrame]) = {
     import org.apache.spark.storage.StorageLevel
-    val store = nearDupStore(delta.sparkSession, index.name).open()
+    val spark = delta.sparkSession
+    val store = nearDupStore(spark, index.name).open()
     // same shared-subtree staging as the corpus-variant overload: the
-    // delta shingle/bucket tables feed the within-delta collapse AND the
-    // index cross-pairing, across an eager-checkpoint job boundary —
-    // cache them once. Built at the INDEX's operating point — a different
-    // numHashes/numBands would silently run a different LSH S-curve.
+    // delta shingle/bucket tables feed the within-delta collapse, the
+    // index cross-pairing and the append — cache them once. Built at the
+    // INDEX's operating point — a different numHashes/numBands would
+    // silently run a different LSH S-curve.
     val dSh = dShRaw
       .persist(StorageLevel.MEMORY_AND_DISK)
     val dB = bandBuckets(dSh, index.numHashes, index.numBands)
       .persist(StorageLevel.MEMORY_AND_DISK)
     val within = selfPairs(dB, dSh, threshold, maxBandFreq)
-    val drop = connectedComponents(within)
-      .filter(col("id") =!= col("comp"))
-      .select(col("id").as(idCol))
-    val deltaClean = delta.join(drop, Seq(idCol), "left_anti")
+      .select(col("a_id"), col("b_id"))
     val pairs = crossPairs(store.visible(index.bucketsTable), dB,
       store.visible(index.shinglesTable), dSh, threshold, maxBandFreq)
     // distinct column name + expression join: the exclusion side projects
     // from the SAME delta plan that feeds the pairs, and a USING-join on a
     // shared name can silently resolve both sides to one attribute in a
     // self-join (dropping every pair instead of the self ones)
-    val pairsKept =
+    val cross = (
       if (!excludeSelfIds) pairs
       else pairs.join(delta.select(col(idCol).as("_self_a_id")),
-        col("a_id") === col("_self_a_id"), "left_anti")
-    // the discovered edge set (within-delta + cross-corpus), materialized
-    // while the delta tables are still cached
-    val pairsOut =
-      if (!wantPairs) None
-      else Some(graft.core.Checkpoints.truncate(
-        within.select(col("a_id"), col("b_id"))
-          .unionByName(pairsKept.select(col("a_id"), col("b_id")))
-          .distinct()))
-    val hit = pairsKept.select(col("b_id").as(idCol)).distinct()
-    // materialize the tiny hit-id set so the cached delta tables release
-    // before returning (the accepted plan then reads only the delta scan
-    // and two checkpointed id sets)
-    val hitIds = graft.core.Checkpoints.truncate(hit)
-    val accepted = deltaClean.join(hitIds, Seq(idCol), "left_anti")
+        col("a_id") === col("_self_a_id"), "left_anti"))
+      .select(col("a_id"), col("b_id"))
+    val longTyped = (within.schema.fields ++ cross.schema.fields)
+      .forall(_.dataType == org.apache.spark.sql.types.LongType)
+    // the one pass over the index: within-delta edges tagged 0,
+    // delta-to-index edges tagged 1
+    val collected =
+      if (!longTyped) None
+      else collectWithinLimit(
+        within.select(lit(0).as("tag"), col("a_id"), col("b_id"))
+          .unionByName(cross.select(lit(1).as("tag"), col("a_id"), col("b_id"))))
+    val (accepted, pairsOut) = collected match {
+      case Some(rows) =>
+        import spark.implicits._
+        val edges = rows.map(r => (r.getInt(0), r.getLong(1), r.getLong(2)))
+        val (inBatch, toIndex) = edges.partition(_._1 == 0)
+        val drop = componentMins(inBatch.map(e => (e._2, e._3)))
+          .collect { case (id, comp) if id != comp => id }
+        val rejected = (drop ++ toIndex.map(_._3)).toSeq.distinct.toDF(idCol)
+        (delta.join(rejected, Seq(idCol), "left_anti"),
+          if (!wantPairs) None
+          else Some(edges.map(e => (e._2, e._3)).distinct.toSeq
+            .toDF("a_id", "b_id")))
+      case None =>
+        val drop = connectedComponents(within)
+          .filter(col("id") =!= col("comp"))
+          .select(col("id").as(idCol))
+        // the discovered edge set (within-delta + cross-corpus),
+        // materialized while the delta tables are still cached
+        val pairsOut =
+          if (!wantPairs) None
+          else Some(graft.core.Checkpoints.truncate(
+            within.unionByName(cross).distinct()))
+        // materialize the tiny hit-id set so the cached delta tables
+        // release before returning (the accepted plan then reads only the
+        // delta scan and two checkpointed id sets)
+        val hitIds = graft.core.Checkpoints.truncate(
+          cross.select(col("b_id").as(idCol)).distinct())
+        (delta.join(drop, Seq(idCol), "left_anti")
+          .join(hitIds, Seq(idCol), "left_anti"), pairsOut)
+    }
     val acceptedOut =
       if (!appendAccepted) accepted
       else {
@@ -1224,7 +1259,10 @@ object Dedup {
     * fixed cost (2-3 jobs + a reliable checkpoint write per round) is pure
     * overhead there. The collect is bounded by the limit the edge set was
     * just counted against, never corpus-shaped; a corpus-sized graph runs
-    * the distributed contraction unchanged.
+    * the distributed contraction unchanged. The near-dup ingest path and
+    * the streaming clusters fold share the same driver union-find
+    * ([[componentMins]]) under the same limit, so a streamed batch costs
+    * one pass over the index plus driver work bounded by the limit.
     */
   def connectedComponents(pairs: DataFrame, maxIter: Int = 20): DataFrame = {
     val sc = pairs.sparkSession.sparkContext
@@ -1255,35 +1293,14 @@ object Dedup {
     // unchanged. The collect is bounded by the limit it was just counted
     // against — never corpus-shaped. Set spark.graft.cc.localEdgeLimit=0
     // to force the distributed path.
-    val localLimit = pairs.sparkSession.conf
-      .get("spark.graft.cc.localEdgeLimit", "500000").toLong
+    val localLimit = localEdgeLimit(pairs.sparkSession)
     val longTyped = edges.schema.fields.forall(
       _.dataType == org.apache.spark.sql.types.LongType)
     if (edgeCount <= localLimit && longTyped) {
       val collected = edges.collect()
       deleteCheckpoint(prevCp) // the local result projects off nothing
-      val parent = new java.util.HashMap[Long, Long](collected.length * 4)
-      def find(x: Long): Long = {
-        var r = x
-        while (parent.get(r) != r) r = parent.get(r)
-        var c = x
-        while (c != r) { val n = parent.get(c); parent.put(c, r); c = n }
-        r
-      }
-      collected.foreach { row =>
-        val a = row.getLong(0); val b = row.getLong(1)
-        if (!parent.containsKey(a)) parent.put(a, a)
-        if (!parent.containsKey(b)) parent.put(b, b)
-        val ra = find(a); val rb = find(b)
-        // attach the larger root under the smaller: roots stay component
-        // minima, so find() labels every node with min(component) — the
-        // exact star-contraction fixpoint
-        if (ra < rb) parent.put(rb, ra)
-        else if (rb < ra) parent.put(ra, rb)
-      }
-      import scala.jdk.CollectionConverters._
-      val labels = parent.keySet().asScala.toArray.sorted
-        .map(id => (id, find(id))).toSeq
+      val labels = componentMins(
+        collected.map(row => (row.getLong(0), row.getLong(1)))).toSeq.sorted
       val session = pairs.sparkSession
       import session.implicits._
       return labels.toDF("id", "comp")
@@ -1341,6 +1358,53 @@ object Dedup {
         .select(col("dst").as("id"), col("dst").as("comp")))
   }
 
+  /** `spark.graft.cc.localEdgeLimit` (default 500k; 0 disables): the
+    * largest edge set a component fold collects to the driver instead of
+    * running distributed rounds.
+    */
+  private def localEdgeLimit(spark: org.apache.spark.sql.SparkSession): Long =
+    spark.conf.get("spark.graft.cc.localEdgeLimit", "500000").toLong
+
+  /** The rows of `edges` when there are at most [[localEdgeLimit]] of
+    * them — one job that collects no more than limit + 1 rows — else
+    * None (also when the limit is 0): the caller's distributed path.
+    */
+  private[graft] def collectWithinLimit(edges: DataFrame)
+      : Option[Array[org.apache.spark.sql.Row]] = {
+    val limit = localEdgeLimit(edges.sparkSession)
+    if (limit <= 0) None
+    else Some(edges.limit(math.min(limit, Int.MaxValue - 1L).toInt + 1)
+      .collect()).filter(_.length <= limit)
+  }
+
+  /** Driver-side union-find over a bounded edge list: every endpoint of
+    * `edges` mapped to its component minimum. Attaching the larger root
+    * under the smaller keeps each root at its component's minimum, so
+    * the labels equal the star-contraction fixpoint of
+    * [[connectedComponents]] exactly. Self-loops just register their
+    * node. Callers bound `edges` by [[localEdgeLimit]].
+    */
+  private[graft] def componentMins(edges: Iterable[(Long, Long)])
+      : Map[Long, Long] = {
+    val parent = new java.util.HashMap[Long, Long]()
+    def find(x: Long): Long = {
+      var r = x
+      while (parent.get(r) != r) r = parent.get(r)
+      var c = x
+      while (c != r) { val n = parent.get(c); parent.put(c, r); c = n }
+      r
+    }
+    edges.foreach { case (a, b) =>
+      if (!parent.containsKey(a)) parent.put(a, a)
+      if (!parent.containsKey(b)) parent.put(b, b)
+      val ra = find(a); val rb = find(b)
+      if (ra < rb) parent.put(rb, ra)
+      else if (rb < ra) parent.put(ra, rb)
+    }
+    import scala.jdk.CollectionConverters._
+    parent.keySet().asScala.iterator.map(id => id -> find(id)).toMap
+  }
+
   /** Incrementally maintain cluster labels as NEW pair edges arrive —
     * the labels-as-star-edges contraction. An existing component is
     * already connected through its (id → comp) star, so running
@@ -1355,10 +1419,10 @@ object Dedup {
     * per already-clustered doc plus the delta's edges — versus the full
     * edge history a recompute needs; convergence is fast because old
     * components enter at star depth 1 (one large-star round folds a
-    * new bridge between two stars). This is the steady-state cluster
-    * maintenance for the persisted near-dup index family: ingest
-    * computes the delta's pairs anyway, and this call folds them into
-    * the standing labels at delta cost.
+    * new bridge between two stars). The streaming near-dup sinks fold
+    * only the components a batch's pairs touch instead of the whole
+    * label table (`Streams.landAcceptedAndClusters`), on the same
+    * min-label invariant.
     *
     * `labels`: (id, comp) from a prior [[connectedComponents]] or
     * [[updateClusters]] call. `newPairs`: (a_id, b_id). Returns

@@ -411,6 +411,13 @@ object Streams {
     * instead of duplicating them. Requires ids unique across the stream
     * (the standard ingest contract).
     *
+    * Per-batch cost is one pass over the index (each of `_shingles` and
+    * `_buckets` is scanned once) plus driver work bounded by
+    * `spark.graft.cc.localEdgeLimit`: the batch's edges are collected
+    * once, and its components and cluster labels are folded on the
+    * driver. A batch with more edges than the limit takes the
+    * distributed path.
+    *
     * High-water mark, a SINGLE-WRITER contract: before any append the
     * sink stamps the batch id under `checkpoint`, and a batch above the
     * mark skips the append probes whose cost scales with the index.
@@ -441,12 +448,17 @@ object Streams {
     * is directly testable: applying the same batch twice leaves the same
     * accepted increment, the same index, and the same clusters table.
     *
+    * Cost: one pass over the index tables plus driver work bounded by
+    * `spark.graft.cc.localEdgeLimit` — the batch's within-batch and
+    * batch-to-index edges are collected once, and the drop set, the hit
+    * ids, the pair set and the cluster fold all derive from them.
+    *
     * `clustersPath`: maintain a persisted `(id, comp)` cluster table —
     * every streamed id labeled with its component under the DISCOVERED
     * edge set (within-batch pairs plus batch-to-indexed-corpus pairs),
-    * folded per batch with [[graft.ops.Dedup.updateClusters]] at delta
-    * cost and atomically swapped (the scd2Sink rename dance). The fold
-    * is bit-identical to a full [[graft.ops.Dedup.connectedComponents]]
+    * folded per batch over only the components those pairs touch and
+    * landed as one `inc_b<id>` delta (see [[landAcceptedAndClusters]]).
+    * The fold equals a full [[graft.ops.Dedup.connectedComponents]]
     * recompute over every discovered edge (min-label preservation —
     * RandomizedInvariantsSpec), and REPLAY-IDEMPOTENT: a replayed batch
     * recomputes the same pairs (excludeSelfIds keeps its own first-run
@@ -704,24 +716,35 @@ object Streams {
     * duplicates) plus the optional cluster-label DELTA landing.
     *
     * The clusters table is INCREMENTAL: per-batch `inc_b<id>` dirs hold
-    * only the labels this batch ADDED or CHANGED; a cadence compaction
-    * ([[compactClusters]], every [[clustersCompactEvery]] batches) folds
-    * them into the `base/` snapshot. Per-batch write I/O therefore
-    * tracks the BATCH (plus whatever the batch's merges relabel), never
-    * the accumulated streamed-id count — the property that lets a
-    * long-lived ingest run for months without each minutely micro-batch
-    * rewriting a billions-row snapshot.
+    * the labels this batch ADDED or CHANGED (plus the batch's own
+    * self-labels); a cadence compaction ([[compactClusters]], every
+    * [[clustersCompactEvery]] batches) folds them into the `base/`
+    * snapshot. Per-batch write I/O therefore tracks the BATCH (plus
+    * whatever the batch's merges relabel), never the accumulated
+    * streamed-id count — the property that lets a long-lived ingest run
+    * for months without each minutely micro-batch rewriting a
+    * billions-row snapshot.
+    *
+    * The fold touches only the components the batch's pairs reach:
+    * (1) read the standing labels of the pair endpoints, (2) union-find
+    * the pairs plus one endpoint→label edge each, (3) relabel the members
+    * of every standing component that merged into a smaller one, (4)
+    * write one delta. With at most `spark.graft.cc.localEdgeLimit` pairs
+    * steps (1)-(2) are one scan of the clusters table and driver work
+    * ([[foldOnDriver]]); above it they run as distributed joins and
+    * [[graft.ops.Dedup.connectedComponents]] ([[foldDistributed]]).
     *
     * Correctness rests on MIN-LABEL MONOTONICITY: component labels are
-    * member ids with min-preservation under merge
-    * ([[graft.ops.Dedup.updateClusters]]), so an id's label only ever
-    * DECREASES — the current label of an id is `min(comp)` over every
-    * row ever written for it, which is exactly [[loadClusters]]' read
-    * collapse. That also makes every landing replay-idempotent: the
-    * zero-pair fast path rewrites the batch's self-labels (absorbed by
-    * the min), and a replayed merge batch recomputes the same delta
-    * against the same standing (its own inc dir is deleted FIRST, so
-    * standing is bit-identical to the first run's).
+    * member ids with min-preservation under merge, so an id's label only
+    * ever DECREASES — the current label of an id is `min(comp)` over
+    * every row ever written for it, which is exactly [[loadClusters]]'
+    * read collapse — and a standing label is its component's minimum, so
+    * the label node stands in for all its members in the union-find.
+    * That also makes every landing replay-idempotent: the zero-pair fast
+    * path rewrites the batch's self-labels (absorbed by the min), and a
+    * replayed merge batch recomputes the same delta against the same
+    * standing (its own inc dir is deleted FIRST, so standing is
+    * bit-identical to the first run's).
     */
   private def landAcceptedAndClusters(batch: DataFrame, idCol: String,
                                       accepted: DataFrame,
@@ -739,39 +762,20 @@ object Streams {
         val batchLabels = batch
           .select(col(idCol).cast("long").as("id")).distinct()
           .withColumn("comp", col("id"))
+        val edges = pairs.get.select(col("a_id").cast("long"),
+          col("b_id").cast("long"))
         // a batch with NO discovered edges writes ONLY its own self-labels
         // — O(|batch|) rows with no read of the standing table at all: a
         // standing id's smaller label wins at read time (min collapse),
-        // a fresh id IS its own label. The steady-state common case skips
-        // both the CC rounds and the snapshot entirely.
-        if (pairs.get.isEmpty) batchLabels
-        else {
-          // BOTH truncates are load-bearing, not just lineage hygiene:
-          // the standing∪batch union carries an alias-equality
-          // constraint (comp = id on the batch side) that crashes
-          // Catalyst's Union constraint rewrite inside the CC fold
-          // (`key not found: src#...`), and the delta join's inferred
-          // constraints pushed into the fold's unions trip the same
-          // bug — truncation makes each a constraint-free leaf. The old
-          // layout WROTE the whole updated frame per batch, so the
-          // materializations cost no more than before.
-          val labels = graft.core.Checkpoints.truncate(
-            loadClusters(spark, cp).unionByName(batchLabels))
-          val updated = graft.core.Checkpoints.truncate(
-            graft.ops.Dedup.updateClusters(labels, pairs.get))
-          // only rows this fold ADDED or RELABELED — labels decrease
-          // monotonically, so "changed" is exactly "comp < standing's".
-          // The previous labels come from an INDEPENDENT re-read (fresh
-          // plan, own attribute ids): `updated` already carries
-          // `standing`'s lineage through the CC fold, and joining a
-          // frame against its own ancestor trips analysis
-          val prev = loadClusters(spark, cp)
-            .withColumnRenamed("comp", "comp_prev")
-          updated.join(prev, Seq("id"), "left")
-            .where(col("comp_prev").isNull ||
-              col("comp") =!= col("comp_prev"))
-            .select("id", "comp")
+        // a fresh id IS its own label
+        val folded = graft.ops.Dedup.collectWithinLimit(edges) match {
+          case Some(rows) if rows.isEmpty => None
+          case Some(rows) => Some(foldOnDriver(spark, cp,
+            rows.map(r => (r.getLong(0), r.getLong(1)))))
+          case None =>
+            if (edges.isEmpty) None else Some(foldDistributed(spark, cp, edges))
         }
+        folded.fold(batchLabels)(batchLabels.unionByName(_))
       }
       // deterministic in the batch id — a replayed compact tick re-folds
       // already-folded rows, a no-op under the min collapse
@@ -781,6 +785,61 @@ object Streams {
     }
   }
 
+  /** The touched-components fold for a bounded pair set: one scan of the
+    * clusters table for the endpoints' standing labels, union-find on the
+    * driver, and a relabel join only when a standing component merged
+    * into a smaller one. Returns the delta rows beyond the batch's
+    * self-labels.
+    */
+  private def foldOnDriver(spark: SparkSession, cp: String,
+                           pairs: Array[(Long, Long)]): DataFrame = {
+    import spark.implicits._
+    val ends = pairs.flatMap(p => Array(p._1, p._2)).distinct
+    // raw rows, min-collapsed here: loadClusters restricted to `ends`
+    val standing = clusterRows(spark, cp)
+      .join(broadcast(ends.toSeq.toDF("id")), Seq("id"), "left_semi")
+      .as[(Long, Long)].collect()
+      .groupMapReduce(_._1)(_._2)(math.min)
+    val root = graft.ops.Dedup.componentMins(pairs.toSeq ++
+      ends.map(e => (e, standing.getOrElse(e, e))))
+    val fresh = ends.filterNot(standing.contains).map(e => (e, root(e)))
+      .toSeq.toDF("id", "comp")
+    val moved = standing.values.toSeq.distinct
+      .collect { case c if root(c) < c => (c, root(c)) }
+    if (moved.isEmpty) fresh
+    else fresh.unionByName(relabel(spark, cp, moved.toDF("comp_was", "root")))
+  }
+
+  /** [[foldOnDriver]] as distributed joins, for a pair set above the
+    * local edge limit.
+    */
+  private def foldDistributed(spark: SparkSession, cp: String,
+                              edges: DataFrame): DataFrame = {
+    val ends = edges.select(col("a_id").as("id"))
+      .unionByName(edges.select(col("b_id").as("id"))).distinct()
+    // materialized once: it feeds both the component edges and `moved`
+    val labeled = graft.core.Checkpoints.truncate(
+      ends.join(loadClusters(spark, cp), Seq("id"), "left")
+        .select(col("id"), coalesce(col("comp"), col("id")).as("comp")))
+    // (id, root) over every endpoint and every touched standing label
+    val roots = graft.ops.Dedup.connectedComponents(
+      labeled.select(col("id").as("a_id"), col("comp").as("b_id"))
+        .unionByName(edges))
+    val moved = labeled.select(col("comp").as("id")).distinct()
+      .join(roots, "id").where(col("comp") < col("id"))
+      .select(col("id").as("comp_was"), col("comp").as("root"))
+    roots.unionByName(relabel(spark, cp, moved))
+  }
+
+  /** Every member of a moved standing component, under its new root:
+    * `moved` is (comp_was, root).
+    */
+  private def relabel(spark: SparkSession, cp: String,
+                      moved: DataFrame): DataFrame =
+    loadClusters(spark, cp)
+      .join(moved, col("comp") === col("comp_was"))
+      .select(col("id"), col("root").as("comp"))
+
   /** Visible read of a streaming clusters table: `base/` snapshot plus
     * every `inc_b*` delta, collapsed to the CURRENT label per id —
     * `min(comp)`, exact because labels only ever decrease (min-label
@@ -789,7 +848,15 @@ object Streams {
     * (Spark only recurses into key=value partition dirs) and would
     * return stale labels.
     */
-  def loadClusters(spark: SparkSession, clustersPath: String): DataFrame = {
+  def loadClusters(spark: SparkSession, clustersPath: String): DataFrame =
+    clusterRows(spark, clustersPath).groupBy("id").agg(min("comp").as("comp"))
+
+  /** Every `(id, comp)` row of a clusters table — `base/` plus the
+    * `inc_b*` deltas, one row per write — before [[loadClusters]]' min
+    * collapse.
+    */
+  private def clusterRows(spark: SparkSession,
+                          clustersPath: String): DataFrame = {
     val root = new org.apache.hadoop.fs.Path(clustersPath)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val base = new org.apache.hadoop.fs.Path(root, "base")
@@ -809,7 +876,6 @@ object Streams {
     if (parts.isEmpty)
       spark.range(0).select(col("id"), col("id").as("comp"))
     else spark.read.parquet(parts: _*)
-      .groupBy("id").agg(min("comp").as("comp"))
   }
 
   /** Fold every `inc_b*` delta into the `base/` snapshot and drop the
