@@ -85,7 +85,7 @@ object BenchStress {
     println(s"delta: ${delta.count()} docs vs corpus ${copies}x")
     time("ingest: recompute path") {
       Dedup.dropNearDuplicatesAgainst(stressed, delta, "doc_id", "text",
-        threshold = 0.8).count()
+        threshold = 0.8, n = 3, maxBandFreq = None).count()
     }
     Seq("_shingles", "_buckets", "_meta").foreach(s =>
       spark.sql(s"DROP TABLE IF EXISTS stressidx$s"))
@@ -117,13 +117,13 @@ object BenchStress {
       Seq("_shingles", "_buckets", "_meta", "_merges").foreach(s =>
         spark.sql(s"DROP TABLE IF EXISTS $nm$s"))
       time(s"token index write ($label)") {
-        Dedup.writeTokenNearDupIndex(corpus, "doc_id", "text", tokenMerges,
-          nm, n = 5)
+        Dedup.writeNearDupIndex(corpus, "doc_id", "text", nm, n = 5,
+          merges = Some(tokenMerges))
         spark.table(s"${nm}_buckets").count()
       }
       time(s"token ingest: index path ($label)") {
-        Dedup.dropNearDuplicatesAgainstTokens(spark, nm, delta, "doc_id",
-          "text", threshold = 0.8, maxBandFreq = None,
+        Dedup.dropNearDuplicatesAgainst(Dedup.loadNearDupIndex(spark, nm),
+          delta, "doc_id", "text", threshold = 0.8, maxBandFreq = None,
           appendAccepted = false).count()
       }
     }

@@ -97,8 +97,8 @@ object QueriesRound10 {
   private val q209MergePath = QueriesScale.sidePath("q209_token_merges")
 
   /** TOKEN-GRAIN ingest through the PERSISTED piece-shingle index
-    * ([[graft.ops.Dedup.writeTokenNearDupIndex]] /
-    * [[graft.ops.Dedup.dropNearDuplicatesAgainstTokens]]) — q201's
+    * ([[graft.ops.Dedup.writeNearDupIndex]] with `merges` /
+    * [[graft.ops.Dedup.dropNearDuplicatesAgainst]]) — q201's
     * steady-state escape: the corpus encodes ONCE at index-build time
     * (merges learned on the corpus, stored as part of the index), and
     * the q70-shaped delta ingest encodes only the delta. The oracle
@@ -116,11 +116,11 @@ object QueriesRound10 {
     val (corpus, delta) = QueriesText.q70Corpus(spark, dir)
     graft.ops.Bpe.learn(corpus, "text", numMerges = 20)
       .write.mode("overwrite").parquet(q209MergePath)
-    graft.ops.Dedup.writeTokenNearDupIndex(corpus, "doc_id", "text",
-      spark.read.parquet(q209MergePath), "q209idx", n = 5, numBuckets = 8)
-    graft.ops.Dedup.dropNearDuplicatesAgainstTokens(spark, "q209idx",
-        delta, "doc_id", "text", threshold = 0.8, maxBandFreq = None,
-        appendAccepted = true)
+    val idx = graft.ops.Dedup.writeNearDupIndex(corpus, "doc_id", "text",
+      "q209idx", n = 5, numBuckets = 8,
+      merges = Some(spark.read.parquet(q209MergePath)))
+    graft.ops.Dedup.dropNearDuplicatesAgainst(idx, delta, "doc_id", "text",
+        threshold = 0.8, maxBandFreq = None, appendAccepted = true)
       .orderBy("doc_id")
   }, Some(tokenIngestOracle(q209MergePath)))
 

@@ -157,8 +157,8 @@ object QueriesRound12 {
   private val q222MergePath = QueriesScale.sidePath("q222_token_merges")
 
   /** STREAMING TOKEN-GRAIN near-dup ingest
-    * ([[graft.streaming.Streams.tokenNearDupSink]]): q209's
-    * steady-state BPE-piece ingest made continuous — the q70 delta
+    * ([[graft.streaming.Streams.nearDupSink]] over a BPE-piece index):
+    * q209's steady-state BPE-piece ingest made continuous — the q70 delta
     * replays through a file stream in two micro-batches (odd docs, then
     * the +300000 variants, the q101 batching) against the persisted
     * token index; each batch encodes only itself under the index's
@@ -176,8 +176,8 @@ object QueriesRound12 {
     val (corpus, delta) = QueriesText.q70Corpus(spark, dir)
     graft.ops.Bpe.learn(corpus, "text", numMerges = 20)
       .write.mode("overwrite").parquet(q222MergePath)
-    graft.ops.Dedup.writeTokenNearDupIndex(corpus, "doc_id", "text",
-      spark.read.parquet(q222MergePath), "q222idx", n = 5, numBuckets = 8)
+    graft.ops.Dedup.writeNearDupIndex(corpus, "doc_id", "text", "q222idx",
+      n = 5, numBuckets = 8, merges = Some(spark.read.parquet(q222MergePath)))
     val out = graft.Queries.tmpDir("graft_q222")
     delta.filter(col("doc_id") < 300000).coalesce(1)
       .write.mode("append").parquet(s"$out/in")
@@ -188,7 +188,7 @@ object QueriesRound12 {
         readOptions = Map("maxFilesPerTrigger" -> "1")),
       "doc_id BIGINT, text STRING")
     graft.streaming.Streams.withStatePartitions(spark, 8) {
-      val q = graft.streaming.Streams.tokenNearDupSink(stream, "q222idx",
+      val q = graft.streaming.Streams.nearDupSink(stream, "q222idx",
         "doc_id", "text", threshold = 0.8, maxBandFreq = None,
         acceptedPath = s"$out/acc", checkpoint = s"$out/ckpt")
       try q.processAllAvailable() finally q.stop()

@@ -201,7 +201,7 @@ object QueriesText {
   val q70 = QueryDef("q70_delta_neardup", (spark, dir) => {
     val (corpus, delta) = q70Corpus(spark, dir)
     Dedup.dropNearDuplicatesAgainst(corpus, delta, "doc_id", "text",
-        threshold = 0.8)
+        threshold = 0.8, n = 3, maxBandFreq = None)
       .orderBy("doc_id")
   }, Some(
     s"""WITH RECURSIVE

@@ -98,14 +98,11 @@ object StreamRun {
       case Some("ks_by_group") =>
         graft.streaming.Streams.ksByGroupDriftSink(out, p("group_col"),
           p("value_col"), outPath, checkpoint)
-      case Some("neardup") =>
+      // the index decides the grain: `token_neardup` is kept as an
+      // alias so existing manifests still run
+      case Some("neardup") | Some("token_neardup") =>
         graft.streaming.Streams.nearDupSink(out, p("index"), p("id_col"),
           p("text_col"), p("threshold").toDouble,
-          job.params.get("max_band_freq").map(_.toInt), outPath,
-          checkpoint, job.params.get("clusters_path"))
-      case Some("token_neardup") =>
-        graft.streaming.Streams.tokenNearDupSink(out, p("index"),
-          p("id_col"), p("text_col"), p("threshold").toDouble,
           job.params.get("max_band_freq").map(_.toInt), outPath,
           checkpoint, job.params.get("clusters_path"))
       case Some("dedup") =>

@@ -18,14 +18,22 @@ import graft.functions.TextFunctions
   *  - extremely frequent shingles (stop-shingles) can be frequency-pruned
   *    before the join to bound skew (`maxShingleFreq`).
   */
-/** Handle to a persisted MinHash/LSH near-duplicate index — three catalog
+/** Handle to a persisted MinHash/LSH near-duplicate index — catalog
   * tables prefixed by `name`: `_shingles` (doc_id, shingle, n_sh; bucketed
   * on doc_id), `_buckets` (doc_id, band, bandhash; bucketed on the pairing
-  * join key), `_meta` (the parameters). Write with
-  * [[Dedup.writeNearDupIndex]], reopen with [[Dedup.loadNearDupIndex]].
+  * join key), `_meta` (the parameters) and, for a BPE-piece index, the
+  * `_merges` table. Write with [[Dedup.writeNearDupIndex]], reopen with
+  * [[Dedup.loadNearDupIndex]].
+  *
+  * `merges` is the shingling GRAIN, read from storage: None shingles
+  * word n-grams, Some(table) BPE-piece n-grams under the index's stored
+  * merge table. Every path that shingles a document against the index
+  * (append, drop, ingest, cross-pairing) takes the grain from the handle,
+  * so a delta can never pair against the index at the wrong grain.
   */
 final case class NearDupIndex(name: String, n: Int, numHashes: Int,
-                              numBands: Int, numBuckets: Int) {
+                              numBands: Int, numBuckets: Int,
+                              merges: Option[Seq[Seq[String]]] = None) {
   def shinglesTable: String = s"${name}_shingles"
   def bucketsTable: String = s"${name}_buckets"
   def metaTable: String = s"${name}_meta"
@@ -366,9 +374,8 @@ object Dedup {
     * the pairing and must encode once, while a small merge table
     * re-encodes cheaper than the cache's write+read (A/B at sf0.1,
     * 20 merges: 13.6 s uncached vs 15.2 s cached). The gate is
-    * `spark.graft.bpe.cacheEncodeMinMerges` (default 256; 0 = always
-    * cache) — a property of the tokenizer, not the corpus, so the same
-    * setting behaves identically at any scale factor. No explicit
+    * [[CacheEncodeMinMerges]] — a property of the tokenizer, not the
+    * corpus, so it behaves identically at any scale factor. No explicit
     * unpersist when caching: the callers return LAZY frames, so there
     * is no in-function action boundary to release behind —
     * MEMORY_AND_DISK leaves eviction to the block manager.
@@ -382,18 +389,29 @@ object Dedup {
         transform(sequence(lit(0), size(col("_p")) - n),
           i => concat_ws(" ", slice(col("_p"), i + 1, lit(n)))))
         .otherwise(array().cast("array<string>")))
-    val cacheMin = docs.sparkSession.conf
-      .get("spark.graft.bpe.cacheEncodeMinMerges", "256").toInt
     val raw = Bpe.encode(docs, idCol, textCol, merges)
       .select(col("doc_id"), split(col("pieces_csv"), ",").as("_p"))
     val encoded =
-      if (merges.length >= cacheMin)
+      if (merges.length >= CacheEncodeMinMerges)
         raw.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       else raw
     encoded
       .select(col("doc_id"), arr.as("_sh"))
       .select(col("doc_id"), explode(col("_sh")).as("shingle"),
         size(col("_sh")).cast("long").as("n_sh"))
+  }
+
+  /** Merge count from which [[sizedTokenShingles]] caches its encode. */
+  private val CacheEncodeMinMerges = 256
+
+  /** The sized shingle table of `docs` at `index`'s grain and width —
+    * word n-grams, or BPE-piece n-grams under the index's stored merges.
+    */
+  private def shingles(index: NearDupIndex, docs: DataFrame, idCol: String,
+                       textCol: String): DataFrame = index.merges match {
+    case None => sizedShingles(docs, idCol, textCol, index.n)
+    case Some(m) => sizedTokenShingles(docs, idCol, textCol,
+      m.map(_.toArray).toArray, index.n)
   }
 
   /** Exact token-n-gram Jaccard pairs — [[jaccardPairs]] at BPE-piece
@@ -523,42 +541,19 @@ object Dedup {
     * ANY existing corpus document ([[minhashLshPairsAcross]]). Returns the
     * delta rows that should be appended to the corpus. The corpus itself
     * is never re-paired — cost scales with |delta| · bucket overlap, not
-    * |corpus|².
+    * |corpus|². The collapse, cross-pairing and drop are the persisted-
+    * index variant's ([[dropAgainstCore]]), fed corpus-derived bucket and
+    * shingle tables instead of the stored ones.
     */
   def dropNearDuplicatesAgainst(corpus: DataFrame, delta: DataFrame,
                                 idCol: String, textCol: String,
-                                threshold: Double = 0.8, n: Int = 3,
-                                maxBandFreq: Option[Int] = None): DataFrame = {
-    import org.apache.spark.storage.StorageLevel
-    // The delta's shingle and bucket tables feed BOTH stages (within-delta
-    // collapse, then cross-corpus pairing), but connectedComponents
-    // checkpoints eagerly, so the stages execute as separate jobs and
-    // plan-level exchange reuse can never span them — cache the shared
-    // subtrees explicitly instead of recomputing shingling + 64 minhashes
-    // per stage. Delta-sized, not corpus-sized: the designed-for ingest
-    // shape keeps the batch small relative to the corpus.
-    val dSh = sizedShingles(delta, idCol, textCol, n)
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val dB = bandBuckets(dSh, 64, 16).persist(StorageLevel.MEMORY_AND_DISK)
-    val drop = connectedComponents(selfPairs(dB, dSh, threshold, maxBandFreq))
-      .filter(col("id") =!= col("comp"))
-      .select(col("id").as(idCol))
-    // cross-pair the FULL delta, not the survivors: hits on already-
-    // dropped ids vanish in the anti-join anyway, and the full-delta
-    // tables are exactly the ones already cached
+                                threshold: Double, n: Int,
+                                maxBandFreq: Option[Int]): DataFrame = {
     val cSh = sizedShingles(corpus, idCol, textCol, n)
-    val hit = crossPairs(bandBuckets(cSh, 64, 16), dB, cSh, dSh, threshold,
-        maxBandFreq)
-      .select(col("b_id").as(idCol)).distinct()
-    // hit is a tiny id set but its plan hangs onto the cached delta
-    // tables; materialize it so they can be released before returning
-    // (callers may hold the lazy result arbitrarily long). `drop` already
-    // projects off connectedComponents' final checkpoint.
-    val hitIds = graft.core.Checkpoints.truncate(hit)
-    dSh.unpersist()
-    dB.unpersist()
-    delta.join(drop, Seq(idCol), "left_anti")
-      .join(hitIds, Seq(idCol), "left_anti")
+    dropAgainstCore(delta, idCol, threshold, maxBandFreq,
+      excludeSelfIds = false, sizedShingles(delta, idCol, textCol, n),
+      numHashes = 64, numBands = 16, bandBuckets(cSh, 64, 16), cSh,
+      wantPairs = false, append = None)._1
   }
 
   /** Materialize the EXACT-dedup fingerprint index for `corpus`: the
@@ -689,15 +684,33 @@ object Dedup {
     * three tables. Buckets are derived FROM the stored shingle table, so
     * the two tables can never drift and the signature aggregation itself
     * runs exchange-free on the bucketed-by-doc_id layout.
+    *
+    * `merges` (a [[Bpe.learn]] table) makes it a BPE-PIECE index — q201's
+    * steady-state escape: dedup at the grain the model trains on, with
+    * the corpus encoded once at build time and each later delta encoded
+    * alone. The merge table is written FIRST, as `<name>_merges`, and the
+    * corpus is encoded under what was stored (write/read drift would
+    * split the piece space between build and ingest); it is part of the
+    * index, so [[loadNearDupIndex]] restores the grain from it. It is a
+    * corpus-level frequency statistic, not per-document content — a
+    * forget does not touch it. Without `merges` any stale `<name>_merges`
+    * of an earlier build is dropped.
     */
   def writeNearDupIndex(corpus: DataFrame, idCol: String, textCol: String,
                         name: String, n: Int = 3, numHashes: Int = 64,
-                        numBands: Int = 16, numBuckets: Int = 32): NearDupIndex = {
+                        numBands: Int = 16, numBuckets: Int = 32,
+                        merges: Option[DataFrame] = None): NearDupIndex = {
     require(numHashes % numBands == 0, "numBands must divide numHashes")
     val spark = corpus.sparkSession
-    val idx = NearDupIndex(name, n, numHashes, numBands, numBuckets)
-    graft.core.io.Writer.writeBucketed(
-      sizedShingles(corpus, idCol, textCol, n),
+    val mergesTable = s"${name}_merges"
+    merges match {
+      case Some(m) => graft.core.io.Writer.writeTable(
+        m.select("rank", "lhs", "rhs"), mergesTable)
+      case None => spark.sql(s"DROP TABLE IF EXISTS $mergesTable")
+    }
+    val idx = NearDupIndex(name, n, numHashes, numBands, numBuckets,
+      storedMerges(spark, name))
+    graft.core.io.Writer.writeBucketed(shingles(idx, corpus, idCol, textCol),
       idx.shinglesTable, Seq("doc_id"), numBuckets)
     graft.core.io.Writer.writeBucketed(
       bandBuckets(spark.table(idx.shinglesTable), numHashes, numBands),
@@ -718,15 +731,29 @@ object Dedup {
     * tables ever drifted, an append at the meta count would silently
     * corrupt the co-bucketing contract behind the exchange-free pairing
     * join — fail loudly instead.
+    *
+    * The grain comes from storage too: the handle carries the stored
+    * merge table when `<name>_merges` exists (a catalog lookup — a
+    * word-grain load runs no extra Spark job), so every entry point
+    * shingles a delta at the grain the index was built at.
     */
   def loadNearDupIndex(spark: org.apache.spark.sql.SparkSession,
                        name: String): NearDupIndex = {
     val store = nearDupStore(spark, name).open()
     val m = spark.table(s"${name}_meta").head()
     val idx = NearDupIndex(name, m.getAs[Int]("n"), m.getAs[Int]("num_hashes"),
-      m.getAs[Int]("num_bands"), m.getAs[Int]("num_buckets"))
+      m.getAs[Int]("num_bands"), m.getAs[Int]("num_buckets"),
+      storedMerges(spark, name))
     store.requireBuckets(idx.numBuckets, idx.metaTable)
     idx
+  }
+
+  /** The merge table stored with index `name`; None for a word-grain index. */
+  private def storedMerges(spark: org.apache.spark.sql.SparkSession,
+                           name: String): Option[Seq[Seq[String]]] = {
+    val t = s"${name}_merges"
+    Option.when(spark.catalog.tableExists(t))(
+      Bpe.mergesOf(spark.table(t)).map(_.toSeq).toSeq)
   }
 
   /** The near-dup family's [[IndexStore]] (word and token grain share
@@ -795,13 +822,16 @@ object Dedup {
 
   /** Append `accepted` docs' shingle and bucket rows to the index — the
     * ingest step after [[dropNearDuplicatesAgainst]] decides which delta
-    * rows join the corpus. Per-doc shingle counts are independent across
-    * docs, so batch-local derivation appends rows identical to a full
-    * rewrite. `accepted` must already be materialized (the index-path
-    * callers checkpoint it via `Checkpoints.truncate`): the rows derive
-    * from an anti-join that
-    * READS the index tables, and growing those tables under a live plan
-    * would re-evaluate it against the appended state.
+    * rows join the corpus. The docs shingle at the handle's grain (a
+    * BPE-piece index encodes them under the handle's merges, which every
+    * append first checks against the stored table — see
+    * [[appendShinglesCore]]). Per-doc shingle counts are independent
+    * across docs, so batch-local derivation appends rows identical to a
+    * full rewrite. `accepted` must already be materialized (the
+    * index-path callers checkpoint it via `Checkpoints.truncate`): the
+    * rows derive from an anti-join that READS the index tables, and
+    * growing those tables under a live plan would re-evaluate it against
+    * the appended state.
     *
     * IDEMPOTENT per table: each append first anti-joins the batch's doc
     * ids against that table's existing ids, so a crash between the two
@@ -814,15 +844,24 @@ object Dedup {
                            idCol: String, textCol: String): Unit =
     appendShinglesCore(nearDupStore(accepted.sparkSession, index.name).open(),
       index, accepted, idCol,
-      sizedShingles(accepted.select(col(idCol), col(textCol)), idCol,
-        textCol, index.n))
+      shingles(index, accepted.select(col(idCol), col(textCol)), idCol,
+        textCol))
 
-  /** The append body shared by the word-grain and token-grain indexes —
-    * identical table schemas, only the shingle derivation differs.
-    * `precomputedBuckets`: the ingest path passes the already-cached
+  /** The append body shared by [[appendToNearDupIndex]] and the ingest
+    * path. `precomputedBuckets`: the ingest path passes the already-cached
     * delta bucket rows (filtered to accepted ids) so the 64-hash MinHash
     * aggregation is not recomputed; when absent the buckets derive from
     * `sh` as always.
+    *
+    * The handle's merges are VERIFIED against the stored `<name>_merges`
+    * (for a word-grain handle: that none is stored) before any write.
+    * Appending shingles encoded under a re-learned merge table would
+    * silently split the piece space — old and new documents would
+    * shingle into disjoint vocabularies and near-dups across the split
+    * would never pair — so a stale or edited handle fails loudly; the
+    * supported path to new merges is a full [[writeNearDupIndex]]
+    * rebuild. The check is a catalog lookup at word grain and one
+    * merge-table read at piece grain (BPE-rank-sized, never corpus-sized).
     */
   private def appendShinglesCore(store: IndexStore, index: NearDupIndex,
                                  accepted: DataFrame, idCol: String,
@@ -830,6 +869,15 @@ object Dedup {
                                  precomputedBuckets: Option[DataFrame] = None,
                                  assumeFresh: Boolean = false)
       : Unit = {
+    def described(m: Option[Seq[Seq[String]]]) =
+      m.fold("no merge table")(a => s"${a.length} merges")
+    val stored = storedMerges(accepted.sparkSession, index.name)
+    require(stored == index.merges,
+      s"merge-table mismatch against ${index.name}_merges (stored: " +
+        s"${described(stored)}, handle: ${described(index.merges)}): " +
+        "appending under different merges would silently split the piece " +
+        "space and miss near-dups — rebuild the index with " +
+        "writeNearDupIndex to change merges")
     store.requireNotTombstoned(accepted.select(idCol), "appendToNearDupIndex",
       "compactNearDupIndex")
     // `assumeFresh`: the caller PROVES the batch's ids were never
@@ -849,25 +897,27 @@ object Dedup {
     * pairs bit-for-bit, but the corpus side comes from the stored bucket
     * and shingle tables — no corpus re-shingle, no corpus re-hash, and
     * the pairing join's corpus side reads co-bucketed files with zero
-    * exchange (spec-asserted).
+    * exchange (spec-asserted). The delta shingles at the index's grain.
     */
   def minhashLshPairsAcross(index: NearDupIndex, delta: DataFrame,
                             idCol: String, textCol: String,
                             threshold: Double,
                             maxBandFreq: Option[Int]): DataFrame = {
     val store = nearDupStore(delta.sparkSession, index.name).open()
-    val dSh = sizedShingles(delta, idCol, textCol, index.n)
+    val dSh = shingles(index, delta, idCol, textCol)
     crossPairs(store.visible(index.bucketsTable),
       bandBuckets(dSh, index.numHashes, index.numBands),
       store.visible(index.shinglesTable), dSh, threshold, maxBandFreq)
   }
 
-  /** [[dropNearDuplicatesAgainst]] against a persisted index, optionally
-    * appending the accepted rows' index entries so the NEXT delta sees
-    * them — the complete steady-state ingest step: collapse within-delta
-    * clusters, drop corpus near-dups, grow the index. Returns the
-    * accepted rows (eagerly materialized when appending — see
-    * [[appendToNearDupIndex]]).
+  /** [[dropNearDuplicatesAgainst]] against a persisted index, at the
+    * index's grain, optionally appending the accepted rows' index entries
+    * so the NEXT delta sees them — the complete steady-state ingest step:
+    * collapse within-delta clusters, drop corpus near-dups, grow the
+    * index. Returns the accepted rows (eagerly materialized when
+    * appending — see [[appendToNearDupIndex]]). Through a BPE-piece index
+    * this is the tokenizer-grain ingest, oracle-gated as q209 against a
+    * full DuckDB replay of the BPE encode and both pairing stages.
     *
     * `excludeSelfIds = true` ignores corpus index entries whose doc id is
     * IN the delta: the replay-idempotency switch for exactly-once sinks
@@ -877,123 +927,122 @@ object Dedup {
     * every row — with self-exclusion the recomputed accepted set is
     * identical to the first run (ids must be unique across the stream,
     * the standard ingest contract). Off by default: a batch path that
-    * legitimately re-ingests an id expects the drop. (No default — the
-    * corpus-variant overload above owns the default-argument slot.)
-    */
-  def dropNearDuplicatesAgainst(index: NearDupIndex, delta: DataFrame,
-                                idCol: String, textCol: String,
-                                threshold: Double, maxBandFreq: Option[Int],
-                                appendAccepted: Boolean): DataFrame =
-    dropNearDuplicatesAgainst(index, delta, idCol, textCol, threshold,
-      maxBandFreq, appendAccepted, excludeSelfIds = false)
-
-  def dropNearDuplicatesAgainst(index: NearDupIndex, delta: DataFrame,
-                                idCol: String, textCol: String,
-                                threshold: Double, maxBandFreq: Option[Int],
-                                appendAccepted: Boolean,
-                                excludeSelfIds: Boolean): DataFrame =
-    dropNearDuplicatesAgainst(index, delta, idCol, textCol, threshold,
-      maxBandFreq, appendAccepted, excludeSelfIds, assumeFresh = false)
-
-  /** `assumeFresh = true`: the caller proves (via the streaming lanes'
+    * legitimately re-ingests an id expects the drop.
+    *
+    * `assumeFresh = true`: the caller proves (via the streaming lanes'
     * pre-append high-water mark) that the batch's ids were never
     * appended, so the index-sized append probes are skipped — see
     * [[graft.streaming.Streams.nearDupSink]]. Replays must pass false.
     */
   def dropNearDuplicatesAgainst(index: NearDupIndex, delta: DataFrame,
                                 idCol: String, textCol: String,
-                                threshold: Double, maxBandFreq: Option[Int],
-                                appendAccepted: Boolean,
-                                excludeSelfIds: Boolean,
-                                assumeFresh: Boolean): DataFrame =
-    dropAgainstIndexCore(index, delta, idCol, threshold, maxBandFreq,
-      excludeSelfIds,
-      sizedShingles(delta, idCol, textCol, index.n),
-      appendAccepted, assumeFresh = assumeFresh)._1
+                                threshold: Double = 0.8,
+                                maxBandFreq: Option[Int] = None,
+                                appendAccepted: Boolean = false,
+                                excludeSelfIds: Boolean = false,
+                                assumeFresh: Boolean = false): DataFrame =
+    dropAgainstIndex(index, delta, idCol, textCol, threshold, maxBandFreq,
+      excludeSelfIds, appendAccepted, wantPairs = false, assumeFresh)._1
 
-  /** [[dropNearDuplicatesAgainst]] that ALSO returns the batch's
-    * discovered near-dup PAIR set — within-delta edges plus
-    * delta-to-indexed-corpus edges, `(a_id, b_id)` distinct and
-    * safe to consume after the call (a local relation when the edge set
-    * fits `spark.graft.cc.localEdgeLimit`, else checkpointed). This is
-    * the edge feed for continuous cluster maintenance (the streaming
-    * sinks fold these into a persisted (id, comp) table at batch cost):
-    * ingest computes the pairs anyway, so surfacing them is free.
+  /** [[dropNearDuplicatesAgainst]] with `appendAccepted`, that ALSO
+    * returns, when `withPairs`, the batch's discovered near-dup PAIR set
+    * — within-delta edges plus delta-to-indexed-corpus edges,
+    * `(a_id, b_id)` distinct and safe to consume after the call (a local
+    * relation when the edge set fits `spark.graft.cc.localEdgeLimit`,
+    * else checkpointed). This is the edge feed for continuous cluster
+    * maintenance (the streaming sink folds these into a persisted
+    * (id, comp) table at batch cost): ingest computes the pairs anyway,
+    * so surfacing them is free.
     */
-  def ingestNearDupWithPairs(index: NearDupIndex, delta: DataFrame,
-                             idCol: String, textCol: String,
-                             threshold: Double, maxBandFreq: Option[Int],
-                             excludeSelfIds: Boolean)
-      : (DataFrame, DataFrame) =
-    ingestNearDupWithPairs(index, delta, idCol, textCol, threshold,
-      maxBandFreq, excludeSelfIds, assumeFresh = false)
-
-  /** `assumeFresh` — see the [[dropNearDuplicatesAgainst]] overload. */
   def ingestNearDupWithPairs(index: NearDupIndex, delta: DataFrame,
                              idCol: String, textCol: String,
                              threshold: Double, maxBandFreq: Option[Int],
                              excludeSelfIds: Boolean,
-                             assumeFresh: Boolean)
-      : (DataFrame, DataFrame) = {
-    val (accepted, pairs) = dropAgainstIndexCore(index, delta, idCol,
-      threshold, maxBandFreq, excludeSelfIds,
-      sizedShingles(delta, idCol, textCol, index.n),
-      appendAccepted = true, wantPairs = true, assumeFresh = assumeFresh)
-    (accepted, pairs.get)
+                             assumeFresh: Boolean = false,
+                             withPairs: Boolean = true)
+      : (DataFrame, Option[DataFrame]) =
+    dropAgainstIndex(index, delta, idCol, textCol, threshold, maxBandFreq,
+      excludeSelfIds, appendAccepted = true, withPairs, assumeFresh)
+
+  /** The persisted-index variants' body: [[dropAgainstCore]] with the
+    * delta shingled at the index's grain, the corpus side read from the
+    * index's visible rows, and the accepted rows appended from the
+    * core's cached delta tables.
+    */
+  private def dropAgainstIndex(index: NearDupIndex, delta: DataFrame,
+                               idCol: String, textCol: String,
+                               threshold: Double, maxBandFreq: Option[Int],
+                               excludeSelfIds: Boolean,
+                               appendAccepted: Boolean, wantPairs: Boolean,
+                               assumeFresh: Boolean)
+      : (DataFrame, Option[DataFrame]) = {
+    val store = nearDupStore(delta.sparkSession, index.name).open()
+    dropAgainstCore(delta, idCol, threshold, maxBandFreq, excludeSelfIds,
+      shingles(index, delta, idCol, textCol), index.numHashes,
+      index.numBands, store.visible(index.bucketsTable),
+      store.visible(index.shinglesTable), wantPairs,
+      append = Option.when(appendAccepted) {
+        (accepted: DataFrame, sh: DataFrame, buckets: DataFrame) =>
+          appendShinglesCore(store, index, accepted, idCol, sh,
+            Some(buckets), assumeFresh)
+      })
   }
 
-  /** The index-ingest body shared by the word-grain and token-grain
-    * paths — only the delta shingle derivation differs. `dShRaw` must be
-    * the delta's sized-shingle table at the INDEX's operating point.
+  /** The delta-ingest body shared by the corpus-recompute and
+    * persisted-index variants: collapse near-dups WITHIN the delta (CC
+    * clusters, keep-min-id), drop every delta row that near-duplicates
+    * a corpus document, and optionally return the pair set and grow the
+    * index. `dShRaw` is the delta's sized-shingle table; `cBuckets` and
+    * `cSh` are the corpus side's bucket and shingle tables. All three
+    * must share one operating point (grain, width, `numHashes`/
+    * `numBands`) — a different band layout would silently run a
+    * different LSH S-curve. The FULL delta is cross-paired, not the
+    * survivors: hits on already-dropped ids vanish in the anti-join
+    * anyway, and the full-delta tables are exactly the cached ones.
     *
-    * Per-batch cost is ONE pass over the index plus driver work bounded
-    * by `spark.graft.cc.localEdgeLimit`: the within-delta and
-    * delta-to-index edges are evaluated as one tagged union and
+    * Per-call cost is ONE pass over the corpus side plus driver work
+    * bounded by `spark.graft.cc.localEdgeLimit`: the within-delta and
+    * delta-to-corpus edges are evaluated as one tagged union and
     * collected (at most limit + 1 rows), and the within-delta drop set,
     * the hit ids and the returned pair set all derive from that one
     * collect. Every `Checkpoints.truncate` re-executes its plan, so
     * truncating two frames that share the cross-pair plan scans the
-    * index twice. An edge set above the limit (or a limit of 0, or
-    * non-LongType ids) takes the distributed
+    * corpus side twice. An edge set above the limit (or a limit of 0,
+    * or non-LongType ids) takes the distributed
     * [[connectedComponents]]/truncate path instead.
     *
-    * `appendAccepted` grows the index from the CACHED delta tables: the
-    * accepted docs' shingle and bucket rows are semi-joined out of the
-    * already-persisted `dSh`/`dB` instead of re-deriving them from text
-    * (the public [[appendToNearDupIndex]]/[[appendToTokenNearDupIndex]]
-    * path re-shingles and re-hashes — at token grain that is a full BPE
-    * re-encode of the accepted docs, pure duplicate work here since
+    * `append` grows the index from the CACHED delta tables: it receives
+    * the materialized accepted rows and their shingle and bucket rows,
+    * semi-joined out of the already-persisted `dSh`/`dB` instead of
+    * re-derived from text (at piece grain that would be a full BPE
+    * re-encode of the accepted docs — pure duplicate work, since
     * filtering a doc-grain derivation to accepted ids commutes with
-    * deriving it from the accepted subset). The token merge-table
-    * consistency the public append verifies holds BY CONSTRUCTION on
-    * this path: `dShRaw` was encoded under the merges loaded from the
-    * index's own stored table.
+    * deriving it from the accepted subset).
     */
-  private def dropAgainstIndexCore(index: NearDupIndex, delta: DataFrame,
-                                   idCol: String, threshold: Double,
-                                   maxBandFreq: Option[Int],
-                                   excludeSelfIds: Boolean,
-                                   dShRaw: DataFrame,
-                                   appendAccepted: Boolean,
-                                   wantPairs: Boolean = false,
-                                   assumeFresh: Boolean = false)
+  private def dropAgainstCore(delta: DataFrame, idCol: String,
+                              threshold: Double, maxBandFreq: Option[Int],
+                              excludeSelfIds: Boolean, dShRaw: DataFrame,
+                              numHashes: Int, numBands: Int,
+                              cBuckets: DataFrame, cSh: DataFrame,
+                              wantPairs: Boolean,
+                              append: Option[(DataFrame, DataFrame,
+                                DataFrame) => Unit])
       : (DataFrame, Option[DataFrame]) = {
     import org.apache.spark.storage.StorageLevel
     val spark = delta.sparkSession
-    val store = nearDupStore(spark, index.name).open()
-    // same shared-subtree staging as the corpus-variant overload: the
-    // delta shingle/bucket tables feed the within-delta collapse, the
-    // index cross-pairing and the append — cache them once. Built at the
-    // INDEX's operating point — a different numHashes/numBands would
-    // silently run a different LSH S-curve.
+    // The delta shingle/bucket tables feed the within-delta collapse, the
+    // cross-pairing and the append, but those run as separate jobs and
+    // plan-level exchange reuse can never span them — cache the shared
+    // subtrees once instead of recomputing shingling + the minhashes per
+    // stage. Delta-sized, not corpus-sized: the designed-for ingest shape
+    // keeps the batch small relative to the corpus.
     val dSh = dShRaw
       .persist(StorageLevel.MEMORY_AND_DISK)
-    val dB = bandBuckets(dSh, index.numHashes, index.numBands)
+    val dB = bandBuckets(dSh, numHashes, numBands)
       .persist(StorageLevel.MEMORY_AND_DISK)
     val within = selfPairs(dB, dSh, threshold, maxBandFreq)
       .select(col("a_id"), col("b_id"))
-    val pairs = crossPairs(store.visible(index.bucketsTable), dB,
-      store.visible(index.shinglesTable), dSh, threshold, maxBandFreq)
+    val pairs = crossPairs(cBuckets, dB, cSh, dSh, threshold, maxBandFreq)
     // distinct column name + expression join: the exclusion side projects
     // from the SAME delta plan that feeds the pairs, and a USING-join on a
     // shared name can silently resolve both sides to one attribute in a
@@ -1042,164 +1091,24 @@ object Dedup {
         (delta.join(drop, Seq(idCol), "left_anti")
           .join(hitIds, Seq(idCol), "left_anti"), pairsOut)
     }
-    val acceptedOut =
-      if (!appendAccepted) accepted
-      else {
+    val acceptedOut = append match {
+      case None => accepted
+      case Some(appendRows) =>
         // reliable when a checkpoint dir is set — see
         // dropExactDuplicatesAgainst
         val materialized = graft.core.Checkpoints.truncate(accepted)
         val ids = materialized.select(col(idCol).as("doc_id"))
-        appendShinglesCore(store, index, materialized, idCol,
+        appendRows(materialized,
           dSh.join(ids, Seq("doc_id"), "left_semi")
             .select("doc_id", "shingle", "n_sh"),
-          precomputedBuckets = Some(
-            dB.join(ids, Seq("doc_id"), "left_semi")
-              .select("doc_id", "band", "bandhash")),
-          assumeFresh = assumeFresh)
+          dB.join(ids, Seq("doc_id"), "left_semi")
+            .select("doc_id", "band", "bandhash"))
         materialized
-      }
+    }
     // unpersist AFTER the append's writes consumed the cached tables
     dSh.unpersist()
     dB.unpersist()
     (acceptedOut, pairsOut)
-  }
-
-  /** TOKEN-GRAIN persisted near-dup index — [[writeNearDupIndex]] at
-    * BPE-piece grain, q201's steady-state escape: that query re-encodes
-    * AND re-pairs the whole corpus on every run (the r9 bench #2 at
-    * 10.8 s); with the index, a steady-state ingest encodes only the
-    * delta. The learned merge table is PART of the index
-    * (`<name>_merges` — a delta encoded under different merges would
-    * pair in a different piece space, so [[loadTokenNearDupIndex]]
-    * refuses an index without it), and the shingle/bucket/meta/
-    * tombstone tables are schema-identical to the word-grain layout, so
-    * the GDPR lanes ([[vacuumNearDupIndex]] / [[compactNearDupIndex]])
-    * apply VERBATIM. The merge table itself is a corpus-level frequency
-    * statistic (the BM25-idf class), not per-document content — a
-    * forget does not touch it.
-    */
-  def writeTokenNearDupIndex(corpus: DataFrame, idCol: String,
-                             textCol: String, mergeTable: DataFrame,
-                             name: String, n: Int = 5, numHashes: Int = 64,
-                             numBands: Int = 16,
-                             numBuckets: Int = 32): NearDupIndex = {
-    require(numHashes % numBands == 0, "numBands must divide numHashes")
-    val spark = corpus.sparkSession
-    graft.core.io.Writer.writeTable(
-      mergeTable.select("rank", "lhs", "rhs"), s"${name}_merges")
-    // encode with what was STORED — write/read drift would silently
-    // split the piece space between build and ingest
-    val merges = Bpe.mergesOf(spark.table(s"${name}_merges"))
-    val idx = NearDupIndex(name, n, numHashes, numBands, numBuckets)
-    graft.core.io.Writer.writeBucketed(
-      sizedTokenShingles(corpus, idCol, textCol, merges, n),
-      idx.shinglesTable, Seq("doc_id"), numBuckets)
-    graft.core.io.Writer.writeBucketed(
-      bandBuckets(spark.table(idx.shinglesTable), numHashes, numBands),
-      idx.bucketsTable, Seq("band", "bandhash"), numBuckets)
-    import spark.implicits._
-    graft.core.io.Writer.writeTable(
-      Seq((n, numHashes, numBands, numBuckets))
-        .toDF("n", "num_hashes", "num_bands", "num_buckets"),
-      idx.metaTable)
-    idx
-  }
-
-  /** Load a token-grain index handle + its stored merge table. Fails
-    * loudly on a word-grain index (no `_merges`) — pairing a
-    * BPE-encoded delta against word shingles would silently find
-    * nothing.
-    */
-  def loadTokenNearDupIndex(spark: org.apache.spark.sql.SparkSession,
-                            name: String)
-      : (NearDupIndex, Array[Array[String]]) = {
-    val idx = loadNearDupIndex(spark, name)
-    require(spark.catalog.tableExists(s"${name}_merges"),
-      s"$name has no ${name}_merges table — not a token-grain index " +
-        "(writeTokenNearDupIndex builds one)")
-    (idx, Bpe.mergesOf(spark.table(s"${name}_merges")))
-  }
-
-  /** [[appendToNearDupIndex]] at token grain: the accepted docs encode
-    * under the INDEX's stored merges (never a freshly-learned table —
-    * the piece space is pinned at build time).
-    *
-    * The passed merges are VERIFIED against the index's stored
-    * `<name>_merges` table before any write: appending shingles encoded
-    * under a re-learned (different) merge table would silently split
-    * the piece space — old and new documents would shingle into
-    * disjoint vocabularies and near-dups across the split would simply
-    * never pair. A drifted table fails loudly here; the supported path
-    * for new merges is a full [[writeTokenNearDupIndex]] rebuild, which
-    * re-encodes the whole corpus under the new table. The check is
-    * driver-cheap: merge tables are BPE-rank-sized (thousands of rows),
-    * nothing like corpus-sized.
-    */
-  def appendToTokenNearDupIndex(index: NearDupIndex, accepted: DataFrame,
-                                idCol: String, textCol: String,
-                                merges: Array[Array[String]]): Unit = {
-    val spark = accepted.sparkSession
-    val store = nearDupStore(spark, index.name).open()
-    val mergesTable = s"${index.name}_merges"
-    require(spark.catalog.tableExists(mergesTable),
-      s"$mergesTable missing — not a token-grain index; " +
-        "writeTokenNearDupIndex builds one")
-    val stored = Bpe.mergesOf(spark.table(mergesTable))
-    require(stored.length == merges.length &&
-        stored.zip(merges).forall { case (a, b) => a.sameElements(b) },
-      s"merge-table mismatch against $mergesTable (stored " +
-        s"${stored.length} merges, passed ${merges.length}): appending " +
-        "under different merges would silently split the piece space " +
-        "and miss near-dups — rebuild the index with " +
-        "writeTokenNearDupIndex to change merges")
-    appendShinglesCore(store, index, accepted, idCol,
-      sizedTokenShingles(accepted.select(col(idCol), col(textCol)), idCol,
-        textCol, merges, index.n))
-  }
-
-  /** [[dropNearDuplicatesAgainst]] at TOKEN grain through a persisted
-    * token index: collapse within-delta piece-n-gram clusters, drop
-    * delta rows near-duplicating the indexed corpus, optionally append
-    * the survivors' index entries — the complete steady-state
-    * tokenizer-grain ingest (oracle-gated as q209 against a full
-    * DuckDB replay of the BPE encode + both pairing stages).
-    */
-  def dropNearDuplicatesAgainstTokens(spark: org.apache.spark.sql.SparkSession,
-                                      name: String, delta: DataFrame,
-                                      idCol: String, textCol: String,
-                                      threshold: Double,
-                                      maxBandFreq: Option[Int],
-                                      appendAccepted: Boolean,
-                                      excludeSelfIds: Boolean = false,
-                                      assumeFresh: Boolean = false)
-      : DataFrame = {
-    val (idx, merges) = loadTokenNearDupIndex(spark, name)
-    dropAgainstIndexCore(idx, delta, idCol, threshold, maxBandFreq,
-      excludeSelfIds,
-      sizedTokenShingles(delta, idCol, textCol, merges, idx.n),
-      appendAccepted, assumeFresh = assumeFresh)._1
-  }
-
-  /** [[ingestNearDupWithPairs]] at TOKEN grain — the edge feed for the
-    * token lane's continuous cluster maintenance
-    * ([[graft.streaming.Streams.tokenNearDupSink]]); the pairing body is
-    * the SAME [[dropAgainstIndexCore]] the word-grain lane runs, so the
-    * two grains cannot drift on drop/append/pair semantics.
-    */
-  def ingestTokenNearDupWithPairs(spark: org.apache.spark.sql.SparkSession,
-                                  name: String, delta: DataFrame,
-                                  idCol: String, textCol: String,
-                                  threshold: Double,
-                                  maxBandFreq: Option[Int],
-                                  excludeSelfIds: Boolean,
-                                  assumeFresh: Boolean = false)
-      : (DataFrame, DataFrame) = {
-    val (idx, merges) = loadTokenNearDupIndex(spark, name)
-    val (accepted, pairs) = dropAgainstIndexCore(idx, delta, idCol,
-      threshold, maxBandFreq, excludeSelfIds,
-      sizedTokenShingles(delta, idCol, textCol, merges, idx.n),
-      appendAccepted = true, wantPairs = true, assumeFresh = assumeFresh)
-    (accepted, pairs.get)
   }
 
   /** Exact Jaccard for an explicit candidate-pair set (a_id, b_id). `sh` is

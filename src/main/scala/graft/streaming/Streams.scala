@@ -401,6 +401,13 @@ object Streams {
     * and lands the accepted rows as one parquet increment per batch id —
     * the q86 steady-state ingest, applied continuously.
     *
+    * The grain is the index's own ([[graft.ops.Dedup.loadNearDupIndex]]):
+    * through a BPE-piece index each micro-batch encodes ONLY itself under
+    * the index's STORED merge table — q209's tokenizer-grain ingest made
+    * continuous (q222), per-batch cost tracking the batch, never the
+    * corpus. Both manifest lanes, `neardup` and `token_neardup`, run
+    * this sink.
+    *
     * Replay safe end to end: (1) the index append is idempotent per table
     * (anti-join vs existing ids, `appendToNearDupIndex`); (2) pairing
     * runs with `excludeSelfIds = true`, so a batch replayed after a crash
@@ -437,13 +444,6 @@ object Streams {
         threshold, maxBandFreq, acceptedPath, id, clustersPath, fresh)
     }
 
-  def applyNearDupBatch(batch: DataFrame, indexName: String, idCol: String,
-                        textCol: String, threshold: Double,
-                        maxBandFreq: Option[Int], acceptedPath: String,
-                        id: Long): Unit =
-    applyNearDupBatch(batch, indexName, idCol, textCol, threshold,
-      maxBandFreq, acceptedPath, id, clustersPath = None)
-
   /** One micro-batch's near-dup ingest — separated so the replay contract
     * is directly testable: applying the same batch twice leaves the same
     * accepted increment, the same index, and the same clusters table.
@@ -472,83 +472,12 @@ object Streams {
   def applyNearDupBatch(batch: DataFrame, indexName: String, idCol: String,
                         textCol: String, threshold: Double,
                         maxBandFreq: Option[Int], acceptedPath: String,
-                        id: Long, clustersPath: Option[String],
+                        id: Long, clustersPath: Option[String] = None,
                         assumeFresh: Boolean = false): Unit = {
-    val spark = batch.sparkSession
-    val idx = graft.ops.Dedup.loadNearDupIndex(spark, indexName)
-    val (accepted, pairs) = clustersPath match {
-      case None =>
-        (graft.ops.Dedup.dropNearDuplicatesAgainst(idx, batch,
-          idCol, textCol, threshold, maxBandFreq,
-          appendAccepted = true, excludeSelfIds = true,
-          assumeFresh = assumeFresh), None)
-      case Some(_) =>
-        val (acc, p) = graft.ops.Dedup.ingestNearDupWithPairs(idx, batch,
-          idCol, textCol, threshold, maxBandFreq, excludeSelfIds = true,
-          assumeFresh = assumeFresh)
-        (acc, Some(p))
-    }
-    landAcceptedAndClusters(batch, idCol, accepted, pairs, acceptedPath,
-      id, clustersPath)
-  }
-
-  /** TOKEN-GRAIN streaming near-dup ingest — [[nearDupSink]] through a
-    * persisted BPE-piece index ([[graft.ops.Dedup.writeTokenNearDupIndex]]):
-    * each micro-batch encodes ONLY itself under the index's STORED merge
-    * table (the piece space is pinned at build time — an append under
-    * re-learned merges fails loudly inside
-    * [[graft.ops.Dedup.appendToTokenNearDupIndex]]), collapses its own
-    * piece-n-gram near-dup clusters, drops rows near-duplicating the
-    * indexed corpus, and appends the survivors' entries so the next
-    * batch sees them. Same landing contract as the word-grain lane:
-    * per-batch accepted increments (delete-first replay), optional
-    * continuous cluster maintenance via `clustersPath`. This is q209's
-    * steady-state ingest made CONTINUOUS — per-batch cost tracks the
-    * batch, never the corpus (BenchStress token exponent ~0.01).
-    *
-    * High-water mark, a SINGLE-WRITER contract: before any append the
-    * sink stamps the batch id under `checkpoint`, and a batch above the
-    * mark skips the append probes whose cost scales with the index.
-    * That skip is sound only while ids are unique across the stream and
-    * no other writer appends ids this stream also carries. Set
-    * `spark.graft.stream.ingestHwmEnabled=false` when another query or
-    * job appends to the same index, or when previously ingested ids are
-    * re-streamed through a fresh checkpoint.
-    */
-  def tokenNearDupSink(stream: DataFrame, indexName: String, idCol: String,
-                       textCol: String, threshold: Double,
-                       maxBandFreq: Option[Int], acceptedPath: String,
-                       checkpoint: String,
-                       clustersPath: Option[String] = None): StreamingQuery =
-    ingestSink(stream, checkpoint) { (batch, id, fresh) =>
-      applyTokenNearDupBatch(batch, indexName, idCol, textCol,
-        threshold, maxBandFreq, acceptedPath, id, clustersPath, fresh)
-    }
-
-  /** One micro-batch's token-grain ingest — same replay contract as
-    * [[applyNearDupBatch]] (idempotent index append via anti-join,
-    * excludeSelfIds, delete-first increment dirs, no-op cluster
-    * re-fold).
-    */
-  def applyTokenNearDupBatch(batch: DataFrame, indexName: String,
-                             idCol: String, textCol: String,
-                             threshold: Double, maxBandFreq: Option[Int],
-                             acceptedPath: String, id: Long,
-                             clustersPath: Option[String],
-                             assumeFresh: Boolean = false): Unit = {
-    val spark = batch.sparkSession
-    val (accepted, pairs) = clustersPath match {
-      case None =>
-        (graft.ops.Dedup.dropNearDuplicatesAgainstTokens(spark, indexName,
-          batch, idCol, textCol, threshold, maxBandFreq,
-          appendAccepted = true, excludeSelfIds = true,
-          assumeFresh = assumeFresh), None)
-      case Some(_) =>
-        val (acc, p) = graft.ops.Dedup.ingestTokenNearDupWithPairs(spark,
-          indexName, batch, idCol, textCol, threshold, maxBandFreq,
-          excludeSelfIds = true, assumeFresh = assumeFresh)
-        (acc, Some(p))
-    }
+    val (accepted, pairs) = graft.ops.Dedup.ingestNearDupWithPairs(
+      graft.ops.Dedup.loadNearDupIndex(batch.sparkSession, indexName), batch,
+      idCol, textCol, threshold, maxBandFreq, excludeSelfIds = true,
+      assumeFresh = assumeFresh, withPairs = clustersPath.isDefined)
     landAcceptedAndClusters(batch, idCol, accepted, pairs, acceptedPath,
       id, clustersPath)
   }
@@ -711,9 +640,9 @@ object Streams {
     rows.write.parquet(dir)
   }
 
-  /** The shared landing half of the near-dup ingest lanes: per-batch
-    * accepted increment (delete-first — replay rewrites, never
-    * duplicates) plus the optional cluster-label DELTA landing.
+  /** The landing half of [[applyNearDupBatch]]: per-batch accepted
+    * increment (delete-first — replay rewrites, never duplicates) plus
+    * the optional cluster-label DELTA landing.
     *
     * The clusters table is INCREMENTAL: per-batch `inc_b<id>` dirs hold
     * the labels this batch ADDED or CHANGED (plus the batch's own

@@ -92,7 +92,9 @@ class IndexStoreSpec extends SparkSpec {
   *
   * Appends are not checked between the crash and the re-run: a crash
   * between two table appends leaves one table ahead of the other by
-  * design, and the re-run is the contract that repairs it.
+  * design, and the re-run is the contract that repairs it. A crashed
+  * append that is never re-run must still leave every doc forgettable
+  * ([[crashedAppendThenForget]]).
   */
 class IndexCrashPointSpec extends SparkSpec {
   import spark.implicits._
@@ -128,14 +130,29 @@ class IndexCrashPointSpec extends SparkSpec {
   private trait Family {
     def store: IndexStore
     def build(): Unit
-    def vacuum(): Unit
+    /** Vacuum the docs `ids`. */
+    def forget(ids: Seq[Long]): Unit
+    def vacuum(): Unit = forget(forgotten)
     def compact(): Unit
     /** None when the family has no append lane (IVF). */
     def append: Option[() => Unit]
+    /** An id the append adds. */
+    def addedId: Long = added.head.toLong
     def reopen(): Unit
-    def visible(): Seq[Seq[String]]
+    /** The data tables as stored, tombstoned rows included. */
+    def raw(): Seq[DataFrame]
+    def visible(): Seq[Seq[String]] = raw().map(df => rows(store.hide(df)))
+    /** The values of `store.key` that docs `ids` are stored under. */
+    def keysOf(ids: Seq[Long]): Set[String] = ids.map(_.toString).toSet
     def checkStats(): Unit = ()
   }
+
+  /** The `store.key` values in the data tables: every stored row's, or
+    * only the visible rows'.
+    */
+  private def keys(f: Family, visibleOnly: Boolean): Set[String] =
+    f.raw().flatMap(df => (if (visibleOnly) f.store.hide(df) else df)
+      .select(f.store.key).collect().map(r => String.valueOf(r.get(0)))).toSet
 
   private def text(i: Int) = s"doc$i alpha beta w${i * 7} gamma x$i delta y${i % 5}"
   private def textDocs(ids: Range): DataFrame =
@@ -143,7 +160,8 @@ class IndexCrashPointSpec extends SparkSpec {
   private val base = 0 until 12
   private val forgotten = Seq(2L, 7L)
   private val added = 12 until 16
-  private def forgetIds: DataFrame = forgotten.toDF("doc_id")
+  private def docsOf(ids: Seq[Long]): DataFrame =
+    ids.map(i => (i, text(i.toInt))).toDF("doc_id", "text")
 
   private def nearDup(name: String, tokens: Boolean): Family = new Family {
     private lazy val mergeTable = Bpe.learn(textDocs(base), "text", numMerges = 12)
@@ -151,22 +169,17 @@ class IndexCrashPointSpec extends SparkSpec {
     def build(): Unit = {
       IndexStore.dropTables(spark, Seq("_shingles", "_buckets", "_meta",
         "_tombstones", "_merges").map(name + _))
-      if (tokens) Dedup.writeTokenNearDupIndex(textDocs(base), "doc_id", "text",
-        mergeTable, name, n = 3, numBuckets = 2)
-      else Dedup.writeNearDupIndex(textDocs(base), "doc_id", "text", name,
-        numBuckets = 2)
+      Dedup.writeNearDupIndex(textDocs(base), "doc_id", "text", name,
+        numBuckets = 2, merges = Option.when(tokens)(mergeTable))
     }
-    def vacuum(): Unit = Dedup.vacuumNearDupIndex(spark, name, forgetIds): Unit
+    def forget(ids: Seq[Long]): Unit =
+      Dedup.vacuumNearDupIndex(spark, name, ids.toDF("doc_id")): Unit
     def compact(): Unit = Dedup.compactNearDupIndex(spark, name): Unit
     def append = Some(() =>
-      if (tokens) {
-        val (idx, merges) = Dedup.loadTokenNearDupIndex(spark, name)
-        Dedup.appendToTokenNearDupIndex(idx, textDocs(added), "doc_id", "text",
-          merges)
-      } else Dedup.appendToNearDupIndex(Dedup.loadNearDupIndex(spark, name),
+      Dedup.appendToNearDupIndex(Dedup.loadNearDupIndex(spark, name),
         textDocs(added), "doc_id", "text"))
     def reopen(): Unit = Dedup.loadNearDupIndex(spark, name): Unit
-    def visible() = Seq("_shingles", "_buckets").map(t => rows(store.visible(name + t)))
+    def raw() = Seq("_shingles", "_buckets").map(t => spark.table(name + t))
   }
 
   private def fingerprint(name: String): Family = new Family {
@@ -175,8 +188,8 @@ class IndexCrashPointSpec extends SparkSpec {
       IndexStore.dropTables(spark, Seq("_fps", "_fps_tombstones").map(name + _))
       Dedup.writeFingerprintIndex(textDocs(base), "text", name, numBuckets = 2)
     }
-    def vacuum(): Unit = Dedup.vacuumFingerprintIndex(spark, name,
-      textDocs(base).filter(col("doc_id").isin(forgotten: _*)), "text"): Unit
+    def forget(ids: Seq[Long]): Unit = Dedup.vacuumFingerprintIndex(spark, name,
+      docsOf(ids), "text"): Unit
     def compact(): Unit = Dedup.compactFingerprintIndex(spark, name): Unit
     // new content plus a re-submission of forgotten content, which clears
     // its tombstone through a staged swap
@@ -185,9 +198,13 @@ class IndexCrashPointSpec extends SparkSpec {
         textDocs(added).unionByName(Seq((99L, text(2))).toDF("doc_id", "text")),
         "doc_id", "text", appendAccepted = true): Unit)
     def reopen(): Unit = Dedup.loadFingerprintIndex(spark, name): Unit
+    def raw() = Seq(spark.table(s"${name}_fps"))
     // a re-run may append a still-hidden fingerprint twice; the index is
     // a SET of fingerprints, so compare distinct values
-    def visible() = Seq(rows(store.visible(s"${name}_fps")).distinct)
+    override def visible() = Seq(rows(store.visible(s"${name}_fps")).distinct)
+    override def keysOf(ids: Seq[Long]) = docsOf(ids)
+      .select(graft.functions.TextFunctions.fingerprint(col("text")))
+      .as[String].collect().toSet
   }
 
   private def bm25(name: String): Family = new Family {
@@ -197,12 +214,13 @@ class IndexCrashPointSpec extends SparkSpec {
         "_tombstones").map(name + _))
       Search.writeBm25Index(textDocs(base), "doc_id", "text", name, numBuckets = 2)
     }
-    def vacuum(): Unit = Search.vacuumBm25Index(spark, name, forgetIds): Unit
+    def forget(ids: Seq[Long]): Unit =
+      Search.vacuumBm25Index(spark, name, ids.toDF("doc_id")): Unit
     def compact(): Unit = Search.compactBm25Index(spark, name): Unit
     def append = Some(() => Search.appendBm25Index(textDocs(added), "doc_id",
       "text", Search.loadBm25Index(spark, name)))
     def reopen(): Unit = Search.loadBm25Index(spark, name): Unit
-    def visible() = Seq("_postings", "_doclens").map(t => rows(store.visible(name + t)))
+    def raw() = Seq("_postings", "_doclens").map(t => spark.table(name + t))
     override def checkStats(): Unit = {
       def totals(df: DataFrame): (Long, Long) =
         df.agg(count(col("dl")), coalesce(sum("dl"), lit(0L))).as[(Long, Long)].head()
@@ -236,7 +254,7 @@ class IndexCrashPointSpec extends SparkSpec {
       FileUtils.copyDirectory(pristine.toFile, new java.io.File(dir))
     }
     def reopen(): Unit = ()
-    def visible() = Seq(rows(store.hide(spark.read.parquet(dataDir))))
+    def raw() = Seq(spark.read.parquet(dataDir))
   }
 
   private def pq(): Family = new PathFamily("graft_crash_pq", d =>
@@ -244,9 +262,11 @@ class IndexCrashPointSpec extends SparkSpec {
         trainSampleMod = 1)) {
     def store = Pq.pqStore(spark, dir)
     def dataDir = s"$dir/codes"
-    def vacuum(): Unit = Pq.vacuumPqIndex(spark, dir, forgotten.toDF("vec_id")): Unit
+    def forget(ids: Seq[Long]): Unit =
+      Pq.vacuumPqIndex(spark, dir, ids.toDF("vec_id")): Unit
     def compact(): Unit = Pq.compactPqIndex(spark, dir): Unit
     def append = Some(() => Pq.appendPqIndex(spark, dir, vectors(40 until 44)))
+    override def addedId = 40L
   }
 
   private def ivf(): Family = new PathFamily("graft_crash_ivf", d =>
@@ -254,8 +274,8 @@ class IndexCrashPointSpec extends SparkSpec {
         .withColumn("label", (col("vec_id") % 3).cast("int")), d)) {
     def store = Similarity.clusteredStore(spark, dir)
     def dataDir = dir
-    def vacuum(): Unit = Similarity.vacuumClusteredIndex(spark, dir,
-      forgotten.toDF("vec_id")): Unit
+    def forget(ids: Seq[Long]): Unit = Similarity.vacuumClusteredIndex(spark,
+      dir, ids.toDF("vec_id")): Unit
     def compact(): Unit = Similarity.compactClusteredIndex(spark, dir): Unit
     def append: Option[() => Unit] = None
   }
@@ -291,14 +311,47 @@ class IndexCrashPointSpec extends SparkSpec {
     steps
   }
 
+  /** Crash the append before each of its steps and NEVER re-run it, then
+    * forget one base doc and one added doc and compact: whatever partial
+    * rows the crash left (BM25's postings-only orphans, one near-dup
+    * table ahead of the other) must be forgotten and scrubbed like any
+    * others. Checks after the vacuum that the forgotten docs are
+    * invisible, and after the compact that no tombstone and no stored
+    * row of them is left and that BM25's meta is an exact recount.
+    */
+  private def crashedAppendThenForget(f: Family, append: () => Unit,
+                                      steps: Int): Unit = {
+    val gone = Seq(3L, f.addedId)
+    val goneKeys = f.keysOf(gone)
+    for (k <- 0 until steps) {
+      f.build()
+      f.vacuum()
+      crashAt(k)(append())
+      f.reopen()
+      f.forget(gone)
+      f.reopen()
+      assert((keys(f, visibleOnly = true) & goneKeys).isEmpty,
+        s"append crashed at step $k, then vacuum: a forgotten doc is visible")
+      f.compact()
+      f.reopen()
+      assert(f.store.tombstoneRows.isEmpty,
+        s"append crashed at step $k, then compact: tombstones left")
+      assert((keys(f, visibleOnly = false) & goneKeys).isEmpty,
+        s"append crashed at step $k, then compact: a forgotten doc is stored")
+      f.checkStats()
+    }
+  }
+
   private def allOps(f: Family): Map[String, Int] = {
-    Map(
+    val steps = Map(
       "vacuum" -> everyStep(f, "vacuum", f.build(), f.vacuum()),
       "compact" -> everyStep(f, "compact", { f.build(); f.vacuum() }, f.compact())
     ) ++ f.append.map(a =>
       // appends run with forgets pending: the clash probe and BM25's
       // meta roll-back rule are then on the path
       "append" -> everyStep(f, "append", { f.build(); f.vacuum() }, a()))
+    f.append.foreach(crashedAppendThenForget(f, _, steps("append")))
+    steps
   }
 
   test("word near-dup index survives a crash at every step") {

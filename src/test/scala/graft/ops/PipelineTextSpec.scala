@@ -341,7 +341,8 @@ class DeltaDedupSpec extends SparkSpec {
       (31L, fresh + " too")    // near-dup of 30, non-min → drops
     ).toDF("doc_id", "text")
     val out = Dedup.dropNearDuplicatesAgainst(corpus, delta, "doc_id", "text",
-      threshold = 0.8).select("doc_id").as[Long].collect().toSet
+      threshold = 0.8, n = 3, maxBandFreq = None).select("doc_id").as[Long]
+      .collect().toSet
     assert(out == Set(30L))
   }
 }

@@ -25,8 +25,8 @@ class TokenNearDupIndexSpec extends SparkSpec {
     dropIndex("tndx1")
     val corpus = Seq((10L, base), (11L, fresh)).toDF("doc_id", "text")
     val merges = Bpe.learn(corpus, "text", numMerges = 10)
-    Dedup.writeTokenNearDupIndex(corpus, "doc_id", "text", merges,
-      "tndx1", n = 5, numBuckets = 4)
+    val idx = Dedup.writeNearDupIndex(corpus, "doc_id", "text", "tndx1",
+      n = 5, numBuckets = 4, merges = Some(merges))
     try {
       // 20/21 near-dup each other within the delta (keep-min → 20) and
       // nothing in the corpus; 22 near-dups the CORPUS (base) →
@@ -40,26 +40,24 @@ class TokenNearDupIndexSpec extends SparkSpec {
         (23L, "entirely unrelated text about catalyst optimizer rules " +
           "and broadcast thresholds and nothing else whatsoever at all"))
         .toDF("doc_id", "text")
-      val accepted = Dedup.dropNearDuplicatesAgainstTokens(spark, "tndx1",
-        delta, "doc_id", "text", threshold = 0.5, maxBandFreq = None,
-        appendAccepted = true)
+      val accepted = Dedup.dropNearDuplicatesAgainst(idx, delta, "doc_id",
+        "text", threshold = 0.5, maxBandFreq = None, appendAccepted = true)
       assert(accepted.select("doc_id").as[Long].collect().toSet
         === Set(20L, 23L))
       // replaying the SAME delta against the grown index drops all of it
-      val replay = Dedup.dropNearDuplicatesAgainstTokens(spark, "tndx1",
-        delta, "doc_id", "text", threshold = 0.5, maxBandFreq = None,
-        appendAccepted = false)
+      val replay = Dedup.dropNearDuplicatesAgainst(idx, delta, "doc_id",
+        "text", threshold = 0.5, maxBandFreq = None, appendAccepted = false)
       assert(replay.isEmpty,
         "a replayed delta must be fully dropped by the grown token index")
       // excludeSelfIds: the replay-idempotence switch reproduces the
       // first run's accepted set even though the index holds 20/23
-      val replaySelf = Dedup.dropNearDuplicatesAgainstTokens(spark,
-        "tndx1", delta, "doc_id", "text", threshold = 0.5,
+      val replaySelf = Dedup.dropNearDuplicatesAgainst(idx, delta,
+        "doc_id", "text", threshold = 0.5,
         maxBandFreq = None, appendAccepted = false, excludeSelfIds = true)
       assert(replaySelf.select("doc_id").as[Long].collect().toSet
         === Set(20L, 23L))
       // the stored merges ARE the index's piece space
-      val (_, stored) = Dedup.loadTokenNearDupIndex(spark, "tndx1")
+      val stored = Dedup.loadNearDupIndex(spark, "tndx1").merges.get
       assert(stored.length === 10)
     } finally dropIndex("tndx1")
   }
@@ -69,12 +67,12 @@ class TokenNearDupIndexSpec extends SparkSpec {
     dropIndex("tndx2")
     val corpus = Seq((10L, base), (11L, fresh)).toDF("doc_id", "text")
     val merges = Bpe.learn(corpus, "text", numMerges = 10)
-    Dedup.writeTokenNearDupIndex(corpus, "doc_id", "text", merges,
-      "tndx2", n = 5, numBuckets = 4)
+    val idx = Dedup.writeNearDupIndex(corpus, "doc_id", "text", "tndx2",
+      n = 5, numBuckets = 4, merges = Some(merges))
     try {
       val nearBase = Seq((30L, base + " almost")).toDF("doc_id", "text")
-      def ingest() = Dedup.dropNearDuplicatesAgainstTokens(spark, "tndx2",
-        nearBase, "doc_id", "text", threshold = 0.5, maxBandFreq = None,
+      def ingest() = Dedup.dropNearDuplicatesAgainst(idx, nearBase,
+        "doc_id", "text", threshold = 0.5, maxBandFreq = None,
         appendAccepted = false)
       assert(ingest().isEmpty, "the fixture must near-dup the corpus")
       // forget doc 10: its near-dup must be ACCEPTED again
@@ -96,8 +94,8 @@ class TokenNearDupIndexSpec extends SparkSpec {
     dropIndex("tndx3")
     val corpus = Seq((10L, base), (11L, fresh)).toDF("doc_id", "text")
     val v1 = Bpe.learn(corpus, "text", numMerges = 10)
-    val idx = Dedup.writeTokenNearDupIndex(corpus, "doc_id", "text", v1,
-      "tndx3", n = 5, numBuckets = 4)
+    val idx = Dedup.writeNearDupIndex(corpus, "doc_id", "text", "tndx3",
+      n = 5, numBuckets = 4, merges = Some(v1))
     try {
       val delta = Seq((20L, "novel words that appear in no other " +
         "document of this tiny spec corpus at all")).toDF("doc_id", "text")
@@ -107,34 +105,49 @@ class TokenNearDupIndexSpec extends SparkSpec {
       val v2 = Bpe.mergesOf(Bpe.learn(
         corpus.unionByName(delta), "text", numMerges = 18))
       val err = intercept[IllegalArgumentException] {
-        Dedup.appendToTokenNearDupIndex(idx, delta, "doc_id", "text", v2)
+        Dedup.appendToNearDupIndex(
+          idx.copy(merges = Some(v2.map(_.toSeq).toSeq)), delta, "doc_id",
+          "text")
       }
       assert(err.getMessage.contains("merge-table mismatch") &&
-        err.getMessage.contains("writeTokenNearDupIndex"))
+        err.getMessage.contains("writeNearDupIndex"))
       // the stored table verbatim still appends (the supported path —
-      // exactly what dropNearDuplicatesAgainstTokens passes)
+      // exactly what loadNearDupIndex puts on the handle)
       val stored = Bpe.mergesOf(spark.table("tndx3_merges"))
-      Dedup.appendToTokenNearDupIndex(idx, delta, "doc_id", "text", stored)
+      Dedup.appendToNearDupIndex(
+        idx.copy(merges = Some(stored.map(_.toSeq).toSeq)), delta, "doc_id",
+        "text")
       spark.catalog.refreshTable("tndx3_shingles")
       assert(spark.table("tndx3_shingles")
         .filter(col("doc_id") === 20L).count() > 0)
       // and the rebuild path accepts the new merges wholesale
-      Dedup.writeTokenNearDupIndex(corpus.unionByName(delta), "doc_id",
-        "text", Bpe.learn(corpus.unionByName(delta), "text", numMerges = 18),
-        "tndx3", n = 5, numBuckets = 4)
+      Dedup.writeNearDupIndex(corpus.unionByName(delta), "doc_id", "text",
+        "tndx3", n = 5, numBuckets = 4, merges = Some(
+          Bpe.learn(corpus.unionByName(delta), "text", numMerges = 18)))
       assert(Bpe.mergesOf(spark.table("tndx3_merges")).length === 18)
     } finally dropIndex("tndx3")
   }
 
-  test("loading a word-grain index as token-grain fails loudly") {
-    dropIndex("tndx3")
-    val corpus = Seq((1L, base)).toDF("doc_id", "text")
-    Dedup.writeNearDupIndex(corpus, "doc_id", "text", "tndx3",
-      numBuckets = 4)
+  test("a token index driven through the streaming batch ingest drops " +
+      "a planted near-dup of the corpus (the grain comes from the index)") {
+    dropIndex("tndx4")
+    val corpus = Seq((10L, base), (11L, fresh)).toDF("doc_id", "text")
+    Dedup.writeNearDupIndex(corpus, "doc_id", "text", "tndx4", n = 5,
+      numBuckets = 4,
+      merges = Some(Bpe.learn(corpus, "text", numMerges = 10)))
+    val dir = java.nio.file.Files.createTempDirectory("graft_tndx4").toString
     try {
-      val e = intercept[IllegalArgumentException](
-        Dedup.loadTokenNearDupIndex(spark, "tndx3"))
-      assert(e.getMessage.contains("_merges"))
-    } finally dropIndex("tndx3")
+      // 30 near-dups the corpus doc 10; 31 is novel
+      val batch = Seq((30L, base + " almost"),
+        (31L, "entirely unrelated text about catalyst optimizer rules " +
+          "and broadcast thresholds and nothing else whatsoever at all"))
+        .toDF("doc_id", "text")
+      graft.streaming.Streams.applyNearDupBatch(batch, "tndx4", "doc_id",
+        "text", threshold = 0.5, maxBandFreq = None,
+        acceptedPath = s"$dir/acc", id = 0L)
+      assert(spark.read.parquet(s"$dir/acc/batch0").select("doc_id")
+        .as[Long].collect().toSet === Set(31L),
+        "the planted near-dup must be shingled at the index's piece grain")
+    } finally dropIndex("tndx4")
   }
 }

@@ -84,12 +84,12 @@ class NearDupOnePassSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     dropIndex(name)
     val dir = java.nio.file.Files.createTempDirectory("graft_onepass_tok").toString
     val corpus = Seq((10L, base)).toDF("doc_id", "text")
-    graft.ops.Dedup.writeTokenNearDupIndex(corpus, "doc_id", "text",
-      graft.ops.Bpe.learn(corpus, "text", numMerges = 8), name, n = 5,
-      numBuckets = 4)
+    graft.ops.Dedup.writeNearDupIndex(corpus, "doc_id", "text", name, n = 5,
+      numBuckets = 4,
+      merges = Some(graft.ops.Bpe.learn(corpus, "text", numMerges = 8)))
     val tables = Seq(s"${name}_shingles", s"${name}_buckets")
     val scans = scansDuring(tables) {
-      Streams.applyTokenNearDupBatch(batch.toDF("doc_id", "text"), name,
+      Streams.applyNearDupBatch(batch.toDF("doc_id", "text"), name,
         "doc_id", "text", threshold = 0.8, maxBandFreq = None,
         acceptedPath = s"$dir/acc", id = 0L,
         clustersPath = Some(s"$dir/clusters"), assumeFresh = true)

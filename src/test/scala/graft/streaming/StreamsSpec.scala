@@ -698,11 +698,11 @@ class NearDupSinkSpec extends SparkSpec {
     Seq("_shingles", "_buckets", "_meta", "_merges").foreach(s =>
       spark.sql(s"DROP TABLE IF EXISTS tok_ndx$s"))
     val corpus = Seq((10L, base)).toDF("doc_id", "text")
-    graft.ops.Dedup.writeTokenNearDupIndex(corpus, "doc_id", "text",
-      graft.ops.Bpe.learn(corpus, "text", numMerges = 8), "tok_ndx",
-      n = 5, numBuckets = 4)
+    graft.ops.Dedup.writeNearDupIndex(corpus, "doc_id", "text", "tok_ndx",
+      n = 5, numBuckets = 4,
+      merges = Some(graft.ops.Bpe.learn(corpus, "text", numMerges = 8)))
     val mem = MemoryStream[(Long, String)]
-    val q = Streams.tokenNearDupSink(mem.toDF().toDF("doc_id", "text"),
+    val q = Streams.nearDupSink(mem.toDF().toDF("doc_id", "text"),
       "tok_ndx", "doc_id", "text", threshold = 0.8, maxBandFreq = None,
       acceptedPath = s"$dir/acc", checkpoint = s"$dir/ckpt",
       clustersPath = Some(s"$dir/clusters"))
@@ -731,7 +731,7 @@ class NearDupSinkSpec extends SparkSpec {
     // duplication, cluster fold a no-op
     spark.catalog.refreshTable("tok_ndx_shingles")
     val shinglesBefore = spark.table("tok_ndx_shingles").count()
-    Streams.applyTokenNearDupBatch(b2.toDF("doc_id", "text"), "tok_ndx",
+    Streams.applyNearDupBatch(b2.toDF("doc_id", "text"), "tok_ndx",
       "doc_id", "text", threshold = 0.8, maxBandFreq = None,
       acceptedPath = s"$dir/acc", id = 1L,
       clustersPath = Some(s"$dir/clusters"))
