@@ -14,8 +14,9 @@ object QueriesRound10 {
   private def t(spark: org.apache.spark.sql.SparkSession, dir: String,
                 name: String) = graft.core.Tables.load(spark, dir, name)
 
-  /** STREAMING KS drift ([[graft.streaming.Streams.ksDriftSink]] —
-    * q204's lane for the distribution-free test): the current snapshot
+  /** STREAMING KS drift ([[graft.streaming.Streams.partialsSink]] with
+    * [[graft.ops.Stats.ksCurrentPartial]] — q204's lane for the
+    * distribution-free test): the current snapshot
     * replays through a file stream in three micro-batches, each
     * landing its mergeable distinct-value counts; the accumulated
     * partials score through [[graft.ops.Stats.ksFromPartials]] against
@@ -35,16 +36,16 @@ object QueriesRound10 {
       .coalesce(1).write.mode("append").parquet(s"$out/feed"))
     val stream = spark.readStream.schema("v DOUBLE")
       .option("maxFilesPerTrigger", "1").parquet(s"$out/feed")
-    val q = graft.streaming.Streams.ksDriftSink(stream, "v",
-      s"$out/partials", s"$out/ckpt")
+    val q = graft.streaming.Streams.partialsSink(stream, s"$out/partials",
+      s"$out/ckpt")(graft.ops.Stats.ksCurrentPartial(_, "v"))
     try q.processAllAvailable() finally q.stop()
     graft.ops.Stats.ksFromPartials(spark, s"$out/ref",
       spark.read.parquet(s"$out/partials/batch*"), buckets = 64)
   }, QueriesRound8.q189.oracle)
 
   /** Per-group PSI through a PERSISTED reference
-    * ([[graft.ops.Stats.writePsiReferenceByGroup]] /
-    * [[graft.ops.Stats.psiByGroupFromReference]]): q197's slice matrix
+    * ([[graft.ops.Stats.writePsiReference]] /
+    * [[graft.ops.Stats.psiFromPartials]] with `groupCol`): q197's slice matrix
     * with the reference slices profiled ONCE — the monitor tick reads
     * only the current side, and the current side itself arrives as TWO
     * independent feeds whose integer partials merge order-free. Output
@@ -56,24 +57,23 @@ object QueriesRound10 {
     val li = t(spark, dir, "lineitem")
     val ref = li.filter(col("l_orderkey") % 2 === 0)
       .select(col("l_returnflag"), col("l_extendedprice").as("v"))
-    graft.ops.Stats.writePsiReferenceByGroup(ref, "l_returnflag", "v",
-      s"$out/ref", bins = 10)
+    graft.ops.Stats.writePsiReference(ref, "v", s"$out/ref", bins = 10,
+      groupCol = Some("l_returnflag"))
     def feed(r: Int) = li.filter(col("l_orderkey") % 4 === r)
       .select(col("l_returnflag"),
         when(col("l_returnflag") === "R", col("l_extendedprice") * 1.1)
           .otherwise(col("l_extendedprice")).as("v"))
-    val pa = graft.ops.Stats.psiByGroupCurrentPartial(spark, s"$out/ref",
-      feed(1), "l_returnflag", "v")
-    val pb = graft.ops.Stats.psiByGroupCurrentPartial(spark, s"$out/ref",
-      feed(3), "l_returnflag", "v")
-    graft.ops.Stats.psiByGroupFromPartials(spark, s"$out/ref",
-        pa.unionByName(pb))
+    val edges = graft.ops.Stats.loadPsiEdges(spark, s"$out/ref")
+    def partial(r: Int) = graft.ops.Stats.psiCurrentPartial(feed(r), "v",
+      edges, Some("l_returnflag"))
+    val (pa, pb) = (partial(1), partial(3))
+    graft.ops.Stats.psiFromPartials(spark, s"$out/ref", pa.unionByName(pb))
       .orderBy("group", "bucket")
   }, QueriesRound8.q197.oracle)
 
   /** Per-group exact KS through a PERSISTED reference
-    * ([[graft.ops.Stats.writeKsReferenceByGroup]] /
-    * [[graft.ops.Stats.ksByGroupFromReference]]): q205's slice matrix
+    * ([[graft.ops.Stats.writeKsReference]] /
+    * [[graft.ops.Stats.ksFromPartials]] with `groupCol`): q205's slice matrix
     * with each slice's distinct-value counts stored once; the tick
     * contracts only the current side and must be bit-identical to
     * q205's full recompute — its oracle verbatim.
@@ -83,13 +83,13 @@ object QueriesRound10 {
     val li = t(spark, dir, "lineitem")
     val ref = li.filter(col("l_orderkey") % 2 === 0)
       .select(col("l_returnflag").as("g"), col("l_extendedprice").as("v"))
-    graft.ops.Stats.writeKsReferenceByGroup(ref, "g", "v", s"$out/ref")
+    graft.ops.Stats.writeKsReference(ref, "v", s"$out/ref", Some("g"))
     def feed(r: Int) = li.filter(col("l_orderkey") % 4 === r)
       .select(col("l_returnflag").as("g"),
         (col("l_extendedprice") * 1.02).as("v"))
-    val pa = graft.ops.Stats.ksByGroupCurrentPartial(feed(1), "g", "v")
-    val pb = graft.ops.Stats.ksByGroupCurrentPartial(feed(3), "g", "v")
-    graft.ops.Stats.ksByGroupFromPartials(spark, s"$out/ref",
+    val pa = graft.ops.Stats.ksCurrentPartial(feed(1), "v", Some("g"))
+    val pb = graft.ops.Stats.ksCurrentPartial(feed(3), "v", Some("g"))
+    graft.ops.Stats.ksFromPartials(spark, s"$out/ref",
         pa.unionByName(pb), buckets = 16)
       .orderBy("group")
   }, QueriesRound9.q205.oracle)
@@ -212,7 +212,8 @@ object QueriesRound10 {
        |ORDER BY doc_id""".stripMargin
 
   /** STREAMING weighted reservoir
-    * ([[graft.streaming.Streams.reservoirSampleSink]]): q139's
+    * ([[graft.streaming.Streams.partialsSink]] with
+    * [[graft.ops.Sampling.reservoirPartial]]): q139's
     * per-source length-weighted top-10, maintained over a file stream
     * in three micro-batches. Each batch lands its own per-group top-n
     * partial under the deterministic E-S key; the merged reservoir must
@@ -230,8 +231,9 @@ object QueriesRound10 {
     val stream = spark.readStream
       .schema("doc_id BIGINT, source STRING, n_chars BIGINT")
       .option("maxFilesPerTrigger", "1").parquet(s"$out/feed")
-    val q = graft.streaming.Streams.reservoirSampleSink(stream, "doc_id",
-      "source", "n_chars", n = 10, s"$out/partials", s"$out/ckpt")
+    val q = graft.streaming.Streams.partialsSink(stream, s"$out/partials",
+      s"$out/ckpt")(graft.ops.Sampling.reservoirPartial(_, "doc_id",
+        "source", "n_chars", n = 10))
     try q.processAllAvailable() finally q.stop()
     graft.streaming.Streams.loadReservoir(spark, s"$out/partials",
         "doc_id", "source", n = 10)

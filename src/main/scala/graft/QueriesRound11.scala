@@ -117,9 +117,10 @@ object QueriesRound11 {
       |GROUP BY 1 ORDER BY l_orderkey""".stripMargin))
 
   /** STREAMING per-group PSI drift
-    * ([[graft.streaming.Streams.psiByGroupDriftSink]]): q197's slice
+    * ([[graft.streaming.Streams.partialsSink]] with
+    * [[graft.ops.Stats.psiCurrentPartial]]): q197's slice
     * matrix maintained continuously — the reference slices profile ONCE
-    * ([[graft.ops.Stats.writePsiReferenceByGroup]]), the current side
+    * ([[graft.ops.Stats.writePsiReference]] with `groupCol`), the current side
     * replays through a file stream in three micro-batches, each landing
     * its `(group, bucket, n_cur)` integer partial; the accumulated
     * partials score bit-identically to q197's full batch recompute —
@@ -130,8 +131,8 @@ object QueriesRound11 {
     val li = t(spark, dir, "lineitem")
     val ref = li.filter(col("l_orderkey") % 2 === 0)
       .select(col("l_returnflag"), col("l_extendedprice").as("v"))
-    graft.ops.Stats.writePsiReferenceByGroup(ref, "l_returnflag", "v",
-      s"$out/ref", bins = 10)
+    graft.ops.Stats.writePsiReference(ref, "v", s"$out/ref", bins = 10,
+      groupCol = Some("l_returnflag"))
     val cur = li.filter(col("l_orderkey") % 2 === 1)
       .select(col("l_returnflag"),
         when(col("l_returnflag") === "R", col("l_extendedprice") * 1.1)
@@ -141,16 +142,19 @@ object QueriesRound11 {
       .coalesce(1).write.mode("append").parquet(s"$out/feed"))
     val stream = spark.readStream.schema("l_returnflag STRING, v DOUBLE")
       .option("maxFilesPerTrigger", "1").parquet(s"$out/feed")
-    val q = graft.streaming.Streams.psiByGroupDriftSink(stream,
-      s"$out/ref", "l_returnflag", "v", s"$out/partials", s"$out/ckpt")
+    val edges = graft.ops.Stats.loadPsiEdges(spark, s"$out/ref")
+    val q = graft.streaming.Streams.partialsSink(stream, s"$out/partials",
+      s"$out/ckpt")(graft.ops.Stats.psiCurrentPartial(_, "v", edges,
+        Some("l_returnflag")))
     try q.processAllAvailable() finally q.stop()
-    graft.ops.Stats.psiByGroupFromPartials(spark, s"$out/ref",
+    graft.ops.Stats.psiFromPartials(spark, s"$out/ref",
         spark.read.parquet(s"$out/partials/batch*"))
       .orderBy("group", "bucket")
   }, QueriesRound8.q197.oracle)
 
   /** STREAMING per-group exact KS drift
-    * ([[graft.streaming.Streams.ksByGroupDriftSink]]): q205's slice
+    * ([[graft.streaming.Streams.partialsSink]] with
+    * [[graft.ops.Stats.ksCurrentPartial]]): q205's slice
     * matrix maintained continuously over the per-group stored value
     * counts; three micro-batches of mergeable `(g, v, n_cur)` partials
     * must score bit-identically to q205's full batch recompute — its
@@ -161,7 +165,7 @@ object QueriesRound11 {
     val li = t(spark, dir, "lineitem")
     val ref = li.filter(col("l_orderkey") % 2 === 0)
       .select(col("l_returnflag").as("g"), col("l_extendedprice").as("v"))
-    graft.ops.Stats.writeKsReferenceByGroup(ref, "g", "v", s"$out/ref")
+    graft.ops.Stats.writeKsReference(ref, "v", s"$out/ref", Some("g"))
     val cur = li.filter(col("l_orderkey") % 2 === 1)
       .select(col("l_returnflag").as("g"),
         (col("l_extendedprice") * 1.02).as("v"),
@@ -170,10 +174,10 @@ object QueriesRound11 {
       .coalesce(1).write.mode("append").parquet(s"$out/feed"))
     val stream = spark.readStream.schema("g STRING, v DOUBLE")
       .option("maxFilesPerTrigger", "1").parquet(s"$out/feed")
-    val q = graft.streaming.Streams.ksByGroupDriftSink(stream,
-      "g", "v", s"$out/partials", s"$out/ckpt")
+    val q = graft.streaming.Streams.partialsSink(stream, s"$out/partials",
+      s"$out/ckpt")(graft.ops.Stats.ksCurrentPartial(_, "v", Some("g")))
     try q.processAllAvailable() finally q.stop()
-    graft.ops.Stats.ksByGroupFromPartials(spark, s"$out/ref",
+    graft.ops.Stats.ksFromPartials(spark, s"$out/ref",
         spark.read.parquet(s"$out/partials/batch*"), buckets = 16)
       .orderBy("group")
   }, QueriesRound9.q205.oracle)

@@ -259,7 +259,7 @@ object QueriesRound12 {
     * manifest — the file-source input, an inline-SQL projection, the
     * stored reference, and the partials sink. Three micro-batches land
     * their integer bucket partials through the YAML-dispatched
-    * [[graft.streaming.Streams.psiDriftSink]]; the accumulated score
+    * [[graft.streaming.Streams.partialsSink]]; the accumulated score
     * must equal the full batch recompute — q186's oracle verbatim
     * (q204's gate, now reachable without writing a line of Scala).
     */

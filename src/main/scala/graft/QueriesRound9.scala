@@ -122,8 +122,9 @@ object QueriesRound9 {
     graft.ops.Stats.writePsiReference(ref, "v", q200Dir, bins = 10)
     def feed(r: Int) = li.filter(col("l_orderkey") % 4 === r)
       .select((col("l_extendedprice") * 1.08).as("v"))
-    val pa = graft.ops.Stats.psiCurrentPartial(spark, q200Dir, feed(1), "v")
-    val pb = graft.ops.Stats.psiCurrentPartial(spark, q200Dir, feed(3), "v")
+    val edges = graft.ops.Stats.loadPsiEdges(spark, q200Dir)
+    val pa = graft.ops.Stats.psiCurrentPartial(feed(1), "v", edges)
+    val pb = graft.ops.Stats.psiCurrentPartial(feed(3), "v", edges)
     graft.ops.Stats.psiFromPartials(spark, q200Dir, pa.unionByName(pb))
       .orderBy("bucket")
   }, QueriesRound8.q186.oracle)
@@ -275,7 +276,8 @@ object QueriesRound9 {
        |FROM ranked WHERE rank <= 5 ORDER BY probe_id, rank""".stripMargin))
 
   /** STREAMING drift monitoring ([[graft.streaming.Streams
-    * .psiDriftSink]]): the current snapshot replays through a file
+    * .partialsSink]] with [[graft.ops.Stats.psiCurrentPartial]]): the
+    * current snapshot replays through a file
     * stream in three micro-batches, each landing its integer bucket
     * partial against the stored reference profile; the accumulated
     * partials then score through [[graft.ops.Stats.psiFromPartials]]
@@ -295,8 +297,9 @@ object QueriesRound9 {
       .coalesce(1).write.mode("append").parquet(s"$out/feed"))
     val stream = spark.readStream.schema("v DOUBLE")
       .option("maxFilesPerTrigger", "1").parquet(s"$out/feed")
-    val q = graft.streaming.Streams.psiDriftSink(stream, s"$out/ref", "v",
-      s"$out/partials", s"$out/ckpt")
+    val edges = graft.ops.Stats.loadPsiEdges(spark, s"$out/ref")
+    val q = graft.streaming.Streams.partialsSink(stream, s"$out/partials",
+      s"$out/ckpt")(graft.ops.Stats.psiCurrentPartial(_, "v", edges))
     try q.processAllAvailable() finally q.stop()
     graft.ops.Stats.psiFromPartials(spark, s"$out/ref",
         spark.read.parquet(s"$out/partials/batch*"))

@@ -77,6 +77,11 @@ object StreamRun {
     def p(k: String): String = job.params.getOrElse(k,
       sys.error(s"streaming job ${job.name}: lane " +
         s"'${job.params("stream_lane")}' needs param '$k'"))
+    // a drift lane's slice column: required by the `*_by_group` lanes,
+    // optional on the others
+    def groupOf(lane: String): Option[String] =
+      if (lane.endsWith("_by_group")) Some(p("group_col"))
+      else job.params.get("group_col")
     // `stream_lane` dispatches the transformed stream into one of the
     // engine's stateful sink lanes instead of plain increments — the
     // whole streaming surface (drift monitors, near-dup ingest, the
@@ -86,18 +91,17 @@ object StreamRun {
     job.params.get("stream_lane") match {
       case None =>
         graft.streaming.Streams.writeIncrements(out, job, o, checkpoint, now)
-      case Some("psi_drift") =>
-        graft.streaming.Streams.psiDriftSink(out, p("ref"),
-          p("value_col"), outPath, checkpoint)
-      case Some("ks_drift") =>
-        graft.streaming.Streams.ksDriftSink(out, p("value_col"),
-          outPath, checkpoint)
-      case Some("psi_by_group") =>
-        graft.streaming.Streams.psiByGroupDriftSink(out, p("ref"),
-          p("group_col"), p("value_col"), outPath, checkpoint)
-      case Some("ks_by_group") =>
-        graft.streaming.Streams.ksByGroupDriftSink(out, p("group_col"),
-          p("value_col"), outPath, checkpoint)
+      // the stored reference decides scalar vs per-group; PSI edges
+      // load once per drain, never per micro-batch
+      case Some(lane @ ("psi_drift" | "psi_by_group")) =>
+        val edges = graft.ops.Stats.loadPsiEdges(spark, p("ref"))
+        val (v, g) = (p("value_col"), groupOf(lane))
+        graft.streaming.Streams.partialsSink(out, outPath, checkpoint)(
+          graft.ops.Stats.psiCurrentPartial(_, v, edges, g))
+      case Some(lane @ ("ks_drift" | "ks_by_group")) =>
+        val (v, g) = (p("value_col"), groupOf(lane))
+        graft.streaming.Streams.partialsSink(out, outPath, checkpoint)(
+          graft.ops.Stats.ksCurrentPartial(_, v, g))
       // the index decides the grain: `token_neardup` is kept as an
       // alias so existing manifests still run
       case Some("neardup") | Some("token_neardup") =>
@@ -115,9 +119,11 @@ object StreamRun {
         graft.streaming.Streams.writeIncrements(deduped, job, o,
           checkpoint, now)
       case Some("reservoir") =>
-        graft.streaming.Streams.reservoirSampleSink(out, p("id_col"),
-          p("group_col"), p("weight_col"), p("n").toInt, outPath,
-          checkpoint, job.params.getOrElse("salt", "es"))
+        val (id, g, w, n) =
+          (p("id_col"), p("group_col"), p("weight_col"), p("n").toInt)
+        val salt = job.params.getOrElse("salt", "es")
+        graft.streaming.Streams.partialsSink(out, outPath, checkpoint)(
+          graft.ops.Sampling.reservoirPartial(_, id, g, w, n, salt))
       case Some("bm25_ingest") =>
         graft.streaming.Streams.bm25IngestSink(out, p("index"),
           p("id_col"), p("text_col"), outPath, checkpoint)

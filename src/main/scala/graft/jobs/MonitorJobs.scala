@@ -50,8 +50,12 @@ class PsiJob extends EtlJob {
   * every later run scores only the `current` input against it, never
   * rescanning the reference corpus (the round-9 mergeable-drift lane
   * in manifest form). Params: `value_col` + `ref_path` (required),
-  * `bins` (default 10, profile-write time only), `exact` (default
-  * true). The `reference` input is optional once the profile exists.
+  * `group_col` (optional — the per-slice matrix, one profile per
+  * slice), `bins` (default 10, profile-write time only), `exact`
+  * (default true). The `reference` input is optional once the profile
+  * exists. The stored profile decides the form: a later run whose
+  * `group_col` disagrees with the one the profile was written with
+  * fails loudly.
   */
 class PsiFromReferenceJob extends EtlJob {
   def transform(inputs: Map[String, DataFrame], spark: SparkSession,
@@ -62,40 +66,28 @@ class PsiFromReferenceJob extends EtlJob {
       sys.error("PsiFromReferenceJob needs a 'ref_path' param"))
     val cur = inputs.getOrElse("current",
       sys.error("PsiFromReferenceJob needs a 'current' input"))
+    val g = params.get("group_col")
     val buckets = new org.apache.hadoop.fs.Path(s"$path/buckets")
     val fs = buckets.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val firstRun = !fs.exists(buckets)
-    def ref = inputs.getOrElse("reference", sys.error(
-      "PsiFromReferenceJob: no profile at ref_path yet — the first " +
-        "run needs a 'reference' input to write it"))
-    // `group_col` → the per-slice matrix ([[Stats.psiByGroupFromReference]]):
-    // one persisted edges+buckets profile per slice, every later tick
-    // reads only the current side
-    params.get("group_col") match {
-      case Some(g) =>
-        if (firstRun)
-          Stats.writePsiReferenceByGroup(ref, g, v, path,
-            bins = params.getOrElse("bins", "10").toInt,
-            exact = params.getOrElse("exact", "true").toBoolean)
-        Stats.psiByGroupFromReference(spark, path, cur, g, v)
-          .orderBy("group", "bucket")
-      case None =>
-        if (firstRun)
-          Stats.writePsiReference(ref, v, path,
-            bins = params.getOrElse("bins", "10").toInt,
-            exact = params.getOrElse("exact", "true").toBoolean)
-        Stats.psiFromReference(spark, path, cur, v).orderBy("bucket")
-    }
+    if (!fs.exists(buckets))
+      Stats.writePsiReference(inputs.getOrElse("reference", sys.error(
+          "PsiFromReferenceJob: no profile at ref_path yet — the first " +
+            "run needs a 'reference' input to write it")), v, path,
+        bins = params.getOrElse("bins", "10").toInt,
+        exact = params.getOrElse("exact", "true").toBoolean, groupCol = g)
+    Stats.psiFromReference(spark, path, cur, v, g)
+      .orderBy((g.map(_ => "group").toSeq :+ "bucket").map(col): _*)
   }
 }
 
-/** Exact KS against a PERSISTED reference ([[Stats.ksFromReference]] /
-  * [[Stats.ksByGroupFromReference]]) — [[KsDriftJob]]'s steady-state
-  * twin: the reference's distinct-value counts are written once
-  * (first run needs a `reference` input), every later tick contracts
-  * only the `current` input. Params: `value_col`, `ref_path`
-  * (required), `buckets` (default 64), `group_col` (optional — the
-  * per-slice matrix).
+/** Exact KS against a PERSISTED reference ([[Stats.ksFromReference]]) —
+  * [[KsDriftJob]]'s steady-state twin: the reference's distinct-value
+  * counts are written once (first run needs a `reference` input), every
+  * later tick contracts only the `current` input. Params: `value_col`,
+  * `ref_path` (required), `buckets` (default 64), `group_col` (optional
+  * — the per-slice matrix). The stored counts decide the form: a later
+  * run whose `group_col` disagrees with the one they were written with
+  * fails loudly.
   */
 class KsFromReferenceJob extends EtlJob {
   def transform(inputs: Map[String, DataFrame], spark: SparkSession,
@@ -106,22 +98,16 @@ class KsFromReferenceJob extends EtlJob {
       sys.error("KsFromReferenceJob needs a 'ref_path' param"))
     val cur = inputs.getOrElse("current",
       sys.error("KsFromReferenceJob needs a 'current' input"))
-    val buckets = params.getOrElse("buckets", "64").toInt
+    val g = params.get("group_col")
     val values = new org.apache.hadoop.fs.Path(s"$path/values")
     val fs = values.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val firstRun = !fs.exists(values)
-    def ref = inputs.getOrElse("reference", sys.error(
-      "KsFromReferenceJob: no profile at ref_path yet — the first " +
-        "run needs a 'reference' input to write it"))
-    params.get("group_col") match {
-      case Some(g) =>
-        if (firstRun) Stats.writeKsReferenceByGroup(ref, g, v, path)
-        Stats.ksByGroupFromReference(spark, path, cur, g, v,
-          buckets = buckets).orderBy("group")
-      case None =>
-        if (firstRun) Stats.writeKsReference(ref, v, path)
-        Stats.ksFromReference(spark, path, cur, v, buckets = buckets)
-    }
+    if (!fs.exists(values))
+      Stats.writeKsReference(inputs.getOrElse("reference", sys.error(
+        "KsFromReferenceJob: no profile at ref_path yet — the first " +
+          "run needs a 'reference' input to write it")), v, path, g)
+    val out = Stats.ksFromReference(spark, path, cur, v,
+      buckets = params.getOrElse("buckets", "64").toInt, groupCol = g)
+    if (g.isDefined) out.orderBy("group") else out
   }
 }
 

@@ -33,6 +33,9 @@ import graft.functions.NativeFunctions.nearestCells
   */
 object Pq {
 
+  /** Most sub-space k-means fits [[trainPqCodebooks]] runs at once. */
+  private val TrainParallelism = 8
+
   /** Train the m per-subspace codebooks: seeded k-means on each
     * `dim/m`-wide slice. Returns `(sub, code, centroid)` with
     * `array<float>` centroids — m·k rows, a model table. Train on a
@@ -55,13 +58,12 @@ object Pq {
     // toward the slowest single fit. Output is bit-identical: per-sub
     // seed and input are unchanged, and the scheduler interleaving
     // cannot affect a fit's arithmetic.
-    // Bounded dedicated pool (spark.graft.pq.trainParallelism): m is
-    // small by construction (dim / subDim), but a wide caller must not
-    // pile m concurrent Spark jobs onto the process-global pool.
+    // Bounded dedicated pool ([[TrainParallelism]]): m is small by
+    // construction (dim / subDim), but a wide caller must not pile m
+    // concurrent Spark jobs onto the process-global pool.
     import scala.concurrent.{Await, ExecutionContext, Future}
     import scala.concurrent.duration.Duration
-    val poolSize = math.max(1, math.min(m,
-      spark.conf.get("spark.graft.pq.trainParallelism", "8").toInt))
+    val poolSize = math.max(1, math.min(m, TrainParallelism))
     val pool = java.util.concurrent.Executors.newFixedThreadPool(poolSize)
     implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
     val perSub = try Await.result(Future.sequence((0 until m).map { s =>

@@ -26,6 +26,11 @@ import graft.functions.TextFunctions
   */
 object QualityClassifier {
 
+  /** Partitions the labeled set contracts to before the LBFGS fit (see
+    * [[fitQualityModel]]).
+    */
+  private val TrainPartitions = 8
+
   /** Hashed unigram buckets of a document's tokens, with duplicates (bag
     * counts come from occurrence multiplicity) — portable md5 hash mod
     * `buckets`, same construction as [[Dsir.ngramBuckets]].
@@ -61,16 +66,12 @@ object QualityClassifier {
     // to a handful of partitions so each iteration is a handful of
     // tasks. (coalesce, not repartition: narrow, and the per-partition
     // float-sum order stays deterministic for a given input.)
-    // Conf-parameterized (spark.graft.classifier.trainPartitions, 0
-    // disables) because coalesce also CAPS the upstream featurization
-    // scan's parallelism — the default suits the contract-small labeled
-    // set; a caller training on a corpus-sized labeled set raises it.
-    val trainParts = labeled.sparkSession.conf
-      .get("spark.graft.classifier.trainPartitions", "8").toInt
-    val projected = labeled.select(col(labelCol).cast("double").as("label"),
+    // [[TrainPartitions]] bounds it: coalesce also CAPS the upstream
+    // featurization scan's parallelism, and the bound suits the
+    // contract-small labeled set.
+    val train = labeled.select(col(labelCol).cast("double").as("label"),
       toVec(tokenBuckets(col(textCol), buckets, salt)).as("features"))
-    val train =
-      if (trainParts > 0) projected.coalesce(trainParts) else projected
+      .coalesce(TrainPartitions)
     // single-class input makes MLlib return an INFINITE intercept, which
     // then poisons the quantized weight table — fail loudly instead (the
     // labeled set is small by contract, so the check is cheap)

@@ -100,7 +100,7 @@ object Sampling {
     * the selection boundary must replay identically across engines and
     * across the batch/streaming twins). One definition shared by both
     * batch samplers and the streaming reservoir lane
-    * ([[graft.streaming.Streams.reservoirSampleSink]]).
+    * ([[reservoirPartial]]).
     */
   def esKeyMicro(idCol: String, weightCol: String,
                  salt: String): org.apache.spark.sql.Column = {
@@ -110,6 +110,24 @@ object Sampling {
     round(round(log(u) / col(weightCol).cast("double"), 6) * 1e6, 0)
       .cast("long")
   }
+
+  /** One feed's (or micro-batch's) reservoir partial: ITS OWN per-group
+    * top-n under the deterministic E-S key ([[esKeyMicro]] — a pure
+    * function of id and weight, no RNG state), without `rank` (rank is
+    * a property of the MERGED reservoir). Landed per batch through
+    * [[graft.streaming.Streams.partialsSink]] and folded by
+    * [[reservoirMerge]], the streamed reservoir is bit-identical to the
+    * batch sampler over everything streamed so far, held to the SAME
+    * DuckDB oracle (q210 vs q139). A partial never exceeds groups × n
+    * rows regardless of batch size; a replayed batch lands the same
+    * rows, and reservoirMerge's largest-key-per-id collapse makes any
+    * duplicate copy harmless.
+    */
+  def reservoirPartial(batch: DataFrame, idCol: String, groupCol: String,
+                       weightCol: String, n: Int,
+                       salt: String = "es"): DataFrame =
+    prioritySamplePerGroup(batch, idCol, groupCol, weightCol, n, salt)
+      .drop("rank")
 
   /** Fold E-S reservoir partials back into ONE reservoir: collapse to a
     * single row per id (largest key wins — replayed copies of a row are

@@ -153,31 +153,40 @@ object Stats {
     * is a whole-stage-codegen comparison chain instead of an
     * interpreted array-lambda per row (measured ~4× on the q186
     * bucketing legs), and (b) the edges subtree can never be
-    * re-evaluated by a downstream branch. Rounding happens IN the plan
-    * (`round(e, 4)`, HALF_UP) before collection, so the values are
-    * bit-identical to what the broadcast formulation carried. Returns
-    * null when the column has no non-null values.
-    *
-    * `exact = true` runs [[graft.functions.ExactQuantiles]] (primitive
-    * buffer, one sort — same interpolation arithmetic as Spark's
-    * `percentile`, held by the DuckDB `quantile_cont` oracle gates);
-    * `exact = false` the mergeable GK sketch, the 100 TB escape.
+    * re-evaluated by a downstream branch. Returns null when the column
+    * has no non-null values.
     */
   private[graft] def quantileEdges(df: DataFrame, valueCol: String,
                                    bins: Int, exact: Boolean,
                                    accuracy: Int): Array[Double] = {
+    val r = roundedEdges(df, valueCol, Nil, bins, exact, accuracy).head()
+    if (r.isNullAt(0)) null else r.getSeq[Double](0).toArray
+  }
+
+  /** Equi-depth edges `_e` per key: the `i/bins` quantiles, rounded IN
+    * the plan (`round(e, 4)`, HALF_UP) so the collected, stored and
+    * broadcast forms are bit-identical. No keys → one row (null `_e`
+    * when the column has no non-null values); keys → one
+    * `(keys…, _e)` row per observed key. `exact = true` runs
+    * [[graft.functions.ExactQuantiles]] (primitive buffer, one sort —
+    * same interpolation arithmetic as Spark's `percentile`, held by the
+    * DuckDB `quantile_cont` oracle gates); `exact = false` the mergeable
+    * GK sketch, the 100 TB escape.
+    */
+  private def roundedEdges(df: DataFrame, valueCol: String, keys: Seq[Column],
+                           bins: Int, exact: Boolean,
+                           accuracy: Int): DataFrame = {
     val ps = (1 until bins).map(i => i.toDouble / bins)
-    val agg =
+    val pct =
       if (exact)
         graft.functions.ExactQuantiles.exactQuantiles(col(valueCol), ps)
       else
         expr(s"approx_percentile($valueCol, array(${ps.mkString(", ")}), " +
           s"$accuracy)").cast("array<double>")
-    val r = df.filter(col(valueCol).isNotNull)
-      .agg(agg.as("_e"))
-      .select(transform(col("_e"), e => round(e, 4)).as("_e"))
-      .head()
-    if (r.isNullAt(0)) null else r.getSeq[Double](0).toArray
+    val raw = df.filter(col(valueCol).isNotNull).groupBy(keys: _*)
+      .agg(pct.as("_eq"))
+    raw.select(raw.columns.init.toSeq.map(col) :+
+      transform(col("_eq"), e => round(e, 4)).as("_e"): _*)
   }
 
   /** One-pass exact reference profile — rounded edges plus per-bucket
@@ -206,6 +215,61 @@ object Stats {
     edges.foldLeft(lit(0L))((acc, e) =>
       acc + when(v > lit(e), lit(1L)).otherwise(lit(0L))).cast("long")
 
+  /** A PSI reference's equi-depth edges in the form that buckets a
+    * snapshot — scalar: `bins − 1` doubles that re-enter the plan as
+    * literals ([[bucketOf]]); per group: a `(group, _e)` frame joined
+    * on the group (groups are data-dependent, so they cannot be
+    * literals). [[loadPsiEdges]] reads either form from storage.
+    */
+  sealed trait PsiEdges
+  object PsiEdges {
+    final case class Scalar(edges: Array[Double]) extends PsiEdges
+    final case class ByGroup(edges: DataFrame) extends PsiEdges
+  }
+
+  /** `(bucket, <as>)` — or `(group, bucket, <as>)` — counts of `df`
+    * under `edges`; a value exactly ON an edge belongs to the LOWER
+    * bucket. Per-group rows whose group has no edges drop at the join.
+    */
+  private def bucketCounts(df: DataFrame, valueCol: String, edges: PsiEdges,
+                           groupCol: Option[String], as: String): DataFrame = {
+    val valued = df.filter(col(valueCol).isNotNull)
+    edges match {
+      case PsiEdges.Scalar(e) =>
+        valued.groupBy(bucketOf(col(valueCol), e).as("bucket"))
+          .agg(count(lit(1)).as(as))
+      case PsiEdges.ByGroup(e) =>
+        valued.select(col(groupCol.get).as("group"), col(valueCol))
+          .join(e, "group")
+          .withColumn("bucket",
+            size(filter(col("_e"), x => col(valueCol) > x)).cast("long"))
+          .groupBy("group", "bucket").agg(count(lit(1)).as(as))
+    }
+  }
+
+  /** Every `(group?, bucket)` cell the reference's edges define, each
+    * side's [[bucketCounts]] left-joined in (a missing count is 0) —
+    * the bounded grid [[psiScore]] reads. A per-group grid is a
+    * row-local explode over the edges rows, not a cross join.
+    */
+  private def bucketGrid(edges: PsiEdges, bins: Int, valueCol: String,
+                         groupCol: Option[String],
+                         sides: (DataFrame, String)*): DataFrame = {
+    val (cells, cell) = edges match {
+      case PsiEdges.Scalar(_) =>
+        (sides.head._1.sparkSession.range(bins).select(col("id").as("bucket")),
+          Seq("bucket"))
+      case PsiEdges.ByGroup(e) =>
+        (e.select(col("group"),
+          explode(sequence(lit(0L), lit(bins - 1L))).as("bucket")),
+          Seq("group", "bucket"))
+    }
+    sides.foldLeft(cells) { case (g, (df, as)) =>
+      g.join(bucketCounts(df, valueCol, edges, groupCol, as), cell, "left")
+    }.select(cell.map(col) ++ sides.map { case (_, as) =>
+      coalesce(col(as), lit(0L)).as(as) }: _*)
+  }
+
   /** Empty result in [[psi]]'s exact output schema (all BIGINT) — the
     * zero-mass early return.
     */
@@ -215,12 +279,12 @@ object Stats {
       col("id").as("psi_micro"))
 
   /** [[psi]]'s per-bucket scoring over ALREADY-BOUNDED bucket counts,
-    * finalized on the driver: the arithmetic byte-replays the plan
-    * formulation — `greatest(n/tot, 1e-6)` as `math.max`, Spark
+    * finalized on the driver: the arithmetic byte-replays
+    * [[psiScore]]'s plan — `greatest(n/tot, 1e-6)` as `math.max`, Spark
     * `round(x, s)` as `BigDecimal.valueOf(x).setScale(s, HALF_UP)` (the
     * Round expression's double path), `log` as `Math.log` — so the
     * emitted micro-units are bit-identical to the distributed plan and
-    * the DuckDB oracle. Zero-total guard as in [[psi]]: either side
+    * the DuckDB oracle. Zero-total guard as in [[psiScore]]: either side
     * empty → empty result.
     */
   private def psiGridLocal(spark: org.apache.spark.sql.SparkSession,
@@ -239,6 +303,38 @@ object Stats {
       (b.toLong, nRef(b), nCur(b), micro(pf), micro(qf),
         micro((pf - qf) * math.log(pf / qf)))
     }.toDF("bucket", "n_ref", "n_cur", "p_micro", "q_micro", "psi_micro")
+  }
+
+  /** The one PSI scoring plan: over a bounded grid ending in
+    * `(n_ref, n_cur)` — bins rows, groups × bins rows or category rows
+    * — each `keys` partition's totals, the fractions floored at 1e-6,
+    * and the micro-rounded `p`, `q` and `(p − q)·ln(p/q)` terms, after
+    * the grid's own columns.
+    *
+    * Totals ride a window over the grid — ONE lineage. The r9
+    * formulation (`tot = grid.agg(...)` crossJoined back) evaluated the
+    * grid's whole corpus-scan subtree a second time: 11 parquet scans
+    * where 2 suffice, the measured q186 regression (StatsAnalyticsSpec
+    * pins the scan count). The window shuffles only grid rows — nothing
+    * scales with the data. Zero-total guard: an empty side zeroes a
+    * partition's total and the filter drops its rows, so the result is
+    * EMPTY instead of NaN/Infinity-derived garbage micro-units. Every
+    * stored or recomputed group has `n_ref > 0`, so per group only an
+    * empty current slice removes it.
+    */
+  private def psiScore(grid: DataFrame, keys: Seq[String]): DataFrame = {
+    val w = Window.partitionBy(keys.map(col): _*)
+    val pf = greatest(col("n_ref").cast("double") / col("_tr"), lit(1e-6))
+    val qf = greatest(col("n_cur").cast("double") / col("_tc"), lit(1e-6))
+    grid
+      .withColumn("_tr", sum("n_ref").over(w))
+      .withColumn("_tc", sum("n_cur").over(w))
+      .filter(col("_tr") > 0 && col("_tc") > 0)
+      .select(grid.columns.toSeq.map(col) ++ Seq(
+        round(round(pf, 6) * lit(1e6), 0).cast("long").as("p_micro"),
+        round(round(qf, 6) * lit(1e6), 0).cast("long").as("q_micro"),
+        round(round((pf - qf) * log(pf / qf), 6) * lit(1e6), 0)
+          .cast("long").as("psi_micro")): _*)
   }
 
   /** Population Stability Index between a REFERENCE snapshot and a
@@ -284,434 +380,16 @@ object Stats {
       val prof = referenceProfile(reference, valueCol, bins)
       if (prof == null) return emptyPsiGrid(spark)
       val (edges, refCounts) = prof
-      val curRows = current.filter(col(valueCol).isNotNull)
-        .groupBy(bucketOf(col(valueCol), edges).as("bucket"))
-        .agg(count(lit(1)).as("n_cur"))
-        .collect()
       val curCounts = new Array[Long](bins)
-      curRows.foreach(r => curCounts(r.getLong(0).toInt) = r.getLong(1))
+      bucketCounts(current, valueCol, PsiEdges.Scalar(edges), None, "n_cur")
+        .collect()
+        .foreach(r => curCounts(r.getLong(0).toInt) = r.getLong(1))
       return psiGridLocal(spark, refCounts, curCounts)
     }
-    def bucketed(edges: Array[Double], df: DataFrame, as: String) = df
-      .filter(col(valueCol).isNotNull)
-      .groupBy(bucketOf(col(valueCol), edges).as("bucket"))
-      .agg(count(lit(1)).as(as))
-    val grid = {
-        val edges = quantileEdges(reference, valueCol, bins, exact, accuracy)
-        if (edges == null) return emptyPsiGrid(spark)
-        spark.range(bins).select(col("id").as("bucket"))
-          .join(bucketed(edges, reference, "n_ref"), Seq("bucket"), "left")
-          .join(bucketed(edges, current, "n_cur"), Seq("bucket"), "left")
-          .select(col("bucket"),
-            coalesce(col("n_ref"), lit(0L)).as("n_ref"),
-            coalesce(col("n_cur"), lit(0L)).as("n_cur"))
-      }
-    // totals ride a window over the bins-row grid — ONE lineage. The
-    // r9 formulation (`tot = grid.agg(...)` crossJoined back) evaluated
-    // grid's whole corpus-scan subtree a second time: 11 parquet scans
-    // where 2 suffice, the measured q186 regression
-    // (StatsAnalyticsSpec pins the scan count). The window shuffles
-    // exactly `bins` rows to one task — nothing scales with the data.
-    // Zero-total guard unchanged: an empty side zeroes a total, the
-    // filter empties every row, so the result is EMPTY instead of
-    // NaN/Infinity-derived garbage micro-units.
-    val wAll = Window.partitionBy()
-    val withTot = grid
-      .withColumn("_tr", sum("n_ref").over(wAll))
-      .withColumn("_tc", sum("n_cur").over(wAll))
-      .filter(col("_tr") > 0 && col("_tc") > 0)
-    val pf = greatest(col("n_ref").cast("double") / col("_tr"), lit(1e-6))
-    val qf = greatest(col("n_cur").cast("double") / col("_tc"), lit(1e-6))
-    withTot
-      .select(col("bucket"), col("n_ref"), col("n_cur"),
-        round(round(pf, 6) * lit(1e6), 0).cast("long").as("p_micro"),
-        round(round(qf, 6) * lit(1e6), 0).cast("long").as("q_micro"),
-        round(round((pf - qf) * log(pf / qf), 6) * lit(1e6), 0)
-          .cast("long").as("psi_micro"))
-  }
-
-  /** Persist a PSI monitor's REFERENCE profile once — the [[graft.ops
-    * .Compare]] profilePartial/profileMerge discipline applied to drift
-    * monitoring: [[psi]] recomputes the reference quantile edges and
-    * bucket counts on EVERY run, which at 100 TB means every monitoring
-    * tick rescans a corpus that by definition does not change. This
-    * writes the rounded edges (one row) and the zero-filled per-bucket
-    * reference counts (`bins` rows) to `path`; [[psiFromReference]]
-    * then scores any current snapshot against them reading only the
-    * current side — and [[psiCurrentPartial]] / [[psiFromPartials]]
-    * split the current side itself into mergeable integer bucket
-    * counts (order-free sums), so incremental feeds contract as they
-    * arrive. Output of the partial-fed path is bit-identical to a full
-    * [[psi]] recompute (oracle-gated as q200).
-    */
-  def writePsiReference(reference: DataFrame, valueCol: String, path: String,
-                        bins: Int = 10, exact: Boolean = true,
-                        accuracy: Int = 10000): Unit = {
-    require(bins >= 2, s"bins must be >= 2: $bins")
-    val spark = reference.sparkSession
-    import spark.implicits._
-    if (exact) {
-      // one corpus pass: the fused profile carries edges AND counts
-      val prof = referenceProfile(reference, valueCol, bins)
-      require(prof != null,
-        s"writePsiReference: $valueCol has no non-null values — an " +
-          "empty reference is not a baseline")
-      val (edges, counts) = prof
-      spark.range(1)
-        .select(array(edges.toIndexedSeq.map(lit(_)): _*).as("_e"))
-        .write.mode("overwrite").parquet(s"$path/edges")
-      counts.toSeq.zipWithIndex.map { case (c, b) => (b.toLong, c) }
-        .toDF("bucket", "n_ref")
-        .write.mode("overwrite").parquet(s"$path/buckets")
-    } else {
-      val edges = quantileEdges(reference, valueCol, bins, exact, accuracy)
-      require(edges != null,
-        s"writePsiReference: $valueCol has no non-null values — an " +
-          "empty reference is not a baseline")
-      spark.range(1)
-        .select(array(edges.toIndexedSeq.map(lit(_)): _*).as("_e"))
-        .write.mode("overwrite").parquet(s"$path/edges")
-      // bucket with what was STORED (read back) so any write/read
-      // precision drift would surface at write time, not at monitor time
-      val stored = readStoredEdges(spark, path)
-      val counts = reference.filter(col(valueCol).isNotNull)
-        .groupBy(bucketOf(col(valueCol), stored).as("bucket"))
-        .agg(count(lit(1)).as("n_ref"))
-      spark.range(bins).select(col("id").as("bucket"))
-        .join(counts, Seq("bucket"), "left")
-        .select(col("bucket"), coalesce(col("n_ref"), lit(0L)).as("n_ref"))
-        .write.mode("overwrite").parquet(s"$path/buckets")
-    }
-  }
-
-  /** The stored reference edges as driver literals — one 1-row read,
-    * `bins − 1` doubles.
-    */
-  private def readStoredEdges(spark: org.apache.spark.sql.SparkSession,
-                              path: String): Array[Double] =
-    spark.read.parquet(s"$path/edges").head().getSeq[Double](0).toArray
-
-  /** Contract one current-side feed to `(bucket, n_cur)` against the
-    * STORED edges — a mergeable partial (integer counts, order-free):
-    * daily/hourly feeds each contract independently and
-    * [[psiFromPartials]] sums them, so a monitoring tick touches only
-    * the new increment, never the history or the reference corpus.
-    */
-  def psiCurrentPartial(spark: org.apache.spark.sql.SparkSession,
-                        path: String, current: DataFrame,
-                        valueCol: String): DataFrame =
-    psiCurrentPartial(current, valueCol, loadPsiEdges(spark, path))
-
-  /** [[psiCurrentPartial]] against ALREADY-LOADED edges — the streaming
-    * drift sinks load the (bins-sized) stored edges once per drain via
-    * [[loadPsiEdges]] and feed every micro-batch from the captured
-    * array, instead of re-reading the reference parquet per batch.
-    * Same bucketing expression, bit-identical partials.
-    */
-  def psiCurrentPartial(current: DataFrame, valueCol: String,
-                        edges: Array[Double]): DataFrame =
-    current.filter(col(valueCol).isNotNull)
-      .groupBy(bucketOf(col(valueCol), edges).as("bucket"))
-      .agg(count(lit(1)).as("n_cur"))
-
-  /** The stored scalar-PSI reference edges as a driver array — one
-    * 1-row read of `bins − 1` doubles, loadable once per monitoring
-    * drain.
-    */
-  def loadPsiEdges(spark: org.apache.spark.sql.SparkSession,
-                   path: String): Array[Double] =
-    readStoredEdges(spark, path)
-
-  /** Score merged current partials against the stored reference profile
-    * — same output schema and quantization as [[psi]], bit-identical to
-    * the full recompute over the concatenated feeds. `partials` is any
-    * union of [[psiCurrentPartial]] outputs (duplicate buckets sum).
-    * An empty side yields an EMPTY result ([[psi]]'s zero-total guard).
-    */
-  def psiFromPartials(spark: org.apache.spark.sql.SparkSession,
-                      path: String, partials: DataFrame): DataFrame = {
-    val ref = spark.read.parquet(s"$path/buckets")
-    val merged = partials.groupBy("bucket").agg(sum("n_cur").as("n_cur"))
-    val grid = ref
-      .join(merged, Seq("bucket"), "left")
-      .select(col("bucket"), col("n_ref"),
-        coalesce(col("n_cur"), lit(0L)).as("n_cur"))
-    // single-lineage window totals ([[psi]]'s shape) — the partials
-    // union is aggregated ONCE, not re-evaluated for a totals branch
-    val wAll = Window.partitionBy()
-    val withTot = grid
-      .withColumn("_tr", sum("n_ref").over(wAll))
-      .withColumn("_tc", sum("n_cur").over(wAll))
-      .filter(col("_tr") > 0 && col("_tc") > 0)
-    val pf = greatest(col("n_ref").cast("double") / col("_tr"), lit(1e-6))
-    val qf = greatest(col("n_cur").cast("double") / col("_tc"), lit(1e-6))
-    withTot
-      .select(col("bucket"), col("n_ref"), col("n_cur"),
-        round(round(pf, 6) * lit(1e6), 0).cast("long").as("p_micro"),
-        round(round(qf, 6) * lit(1e6), 0).cast("long").as("q_micro"),
-        round(round((pf - qf) * log(pf / qf), 6) * lit(1e6), 0)
-          .cast("long").as("psi_micro"))
-  }
-
-  /** One-shot monitor tick against a stored reference: contract the
-    * current snapshot, score — the reference corpus is never read.
-    */
-  def psiFromReference(spark: org.apache.spark.sql.SparkSession,
-                       path: String, current: DataFrame,
-                       valueCol: String): DataFrame =
-    psiFromPartials(spark, path,
-      psiCurrentPartial(spark, path, current, valueCol))
-
-  /** Exact two-sample Kolmogorov-Smirnov statistic — the
-    * distribution-free drift test beside [[psi]]'s binned score:
-    * `D = sup_v |F_ref(v) - F_cur(v)|`, computed EXACTLY over the
-    * merged distinct-value table with a SPLIT prefix sum (the
-    * [[graft.ops.Events.peakConcurrency]] pattern): values bucket by
-    * approximate quantile edges of the union (bucketing is monotone so
-    * it cannot change the answer — it only balances partitions),
-    * within-bucket running counts hash-partition by bucket, and the
-    * carry-in offsets come from one window over the BUCKET-grain net
-    * table (rows = `buckets`, which no data size can grow). No
-    * one-task global window anywhere.
-    *
-    * The CDF difference per value is exact integer cumulative counts
-    * through two identical IEEE divisions, micro-rounded per value;
-    * the reported row is the max by `(d_micro DESC, value ASC)` — a
-    * deterministic argmax both engines replay.
-    *
-    * Output: one row, `(n_ref, n_cur, d_micro, at_value)` with
-    * `at_value` the 4-rounded location of the supremum.
-    */
-  def ksStatistic(reference: DataFrame, current: DataFrame,
-                  valueCol: String, buckets: Int = 64): DataFrame =
-    ksFromCounts(ksSide(reference, valueCol, "nr"),
-      ksSide(current, valueCol, "nc"), buckets)
-
-  /** Distinct-value count contraction `(v, <as>)` — KS's minimal
-    * sufficient statistic per side.
-    */
-  private def ksSide(df: DataFrame, valueCol: String, as: String) = df
-    .filter(col(valueCol).isNotNull)
-    .select(col(valueCol).cast("double").as("v"))
-    .groupBy("v").agg(count(lit(1)).as(as))
-
-  /** Persist a KS monitor's REFERENCE side once — the [[writePsiReference]]
-    * discipline for the distribution-free test: the reference's
-    * distinct-value counts `(v, nr)` are KS's minimal sufficient
-    * statistic (orders of magnitude smaller than the corpus for any
-    * bounded-cardinality feature), so a monitoring tick reads them
-    * instead of rescanning the reference corpus.
-    * [[ksCurrentPartial]] / [[ksFromPartials]] make the current side
-    * mergeable integer counts, and the partial-fed statistic is
-    * bit-identical to a full [[ksStatistic]] recompute (oracle-gated
-    * as q202).
-    */
-  def writeKsReference(reference: DataFrame, valueCol: String,
-                       path: String): Unit =
-    ksSide(reference, valueCol, "nr")
-      .write.mode("overwrite").parquet(s"$path/values")
-
-  /** Contract one current-side feed to mergeable `(v, n_cur)` counts —
-    * duplicate values across feeds sum (order-free integers).
-    */
-  def ksCurrentPartial(current: DataFrame, valueCol: String): DataFrame =
-    ksSide(current, valueCol, "n_cur")
-
-  /** Exact KS against the stored reference from merged current partials
-    * — same output and quantization as [[ksStatistic]].
-    */
-  def ksFromPartials(spark: org.apache.spark.sql.SparkSession, path: String,
-                     partials: DataFrame, buckets: Int = 64): DataFrame =
-    ksFromCounts(spark.read.parquet(s"$path/values"),
-      partials.groupBy("v").agg(sum("n_cur").as("nc")), buckets)
-
-  /** One-shot monitor tick against a stored KS reference. */
-  def ksFromReference(spark: org.apache.spark.sql.SparkSession, path: String,
-                      current: DataFrame, valueCol: String,
-                      buckets: Int = 64): DataFrame =
-    ksFromPartials(spark, path, ksCurrentPartial(current, valueCol), buckets)
-
-  private def ksFromCounts(refCounts: DataFrame, curCounts: DataFrame,
-                           buckets: Int): DataFrame = {
-    require(buckets >= 1, s"buckets must be >= 1: $buckets")
-    val merged = refCounts
-      .join(curCounts, Seq("v"), "full_outer")
-      .select(col("v"), coalesce(col("nr"), lit(0L)).as("nr"),
-        coalesce(col("nc"), lit(0L)).as("nc"))
-    val ps = (1 until buckets).map(i => i.toDouble / buckets)
-    val bucketed =
-      if (buckets == 1) merged.withColumn("_b", lit(0))
-      else {
-        val edges = merged
-          .agg(expr(s"approx_percentile(v, array(${ps.mkString(", ")}), 1000)")
-            .as("_e"))
-        merged.crossJoin(broadcast(edges))
-          .withColumn("_b", size(filter(col("_e"), e => col("v") > e)))
-          .drop("_e")
-      }
-    val bucketNet = bucketed.groupBy("_b")
-      .agg(sum("nr").as("_br"), sum("nc").as("_bc"))
-    // deliberate unpartitioned windows over rows = buckets (bounded):
-    // the carry-in offsets AND the grand totals ride the SAME
-    // bucket-grain net table — a separate `tot = merged.agg(...)`
-    // branch would re-evaluate the whole merged-counts lineage just to
-    // sum two columns (the q186 duplicated-lineage lesson). The
-    // zero-total guard lives here: a zeroed total empties `offsets`,
-    // the inner join below empties the result — an empty side yields
-    // an EMPTY output, never a NaN-derived supremum row.
-    val wB = Window.orderBy("_b").rowsBetween(Window.unboundedPreceding, -1)
-    val wT = Window.orderBy("_b")
-      .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-    val offsets = bucketNet
-      .withColumn("_or", coalesce(sum("_br").over(wB), lit(0L)))
-      .withColumn("_oc", coalesce(sum("_bc").over(wB), lit(0L)))
-      .withColumn("_tr", sum("_br").over(wT))
-      .withColumn("_tc", sum("_bc").over(wT))
-      .filter(col("_tr") > 0 && col("_tc") > 0)
-      .select("_b", "_or", "_oc", "_tr", "_tc")
-    val wIn = Window.partitionBy("_b").orderBy("v")
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val diffs = bucketed
-      .withColumn("_cr", sum("nr").over(wIn))
-      .withColumn("_cc", sum("nc").over(wIn))
-      .join(broadcast(offsets), "_b")
-      .select(col("v"),
-        round(round(abs(
-          (col("_cr") + col("_or")).cast("double") / col("_tr") -
-          (col("_cc") + col("_oc")).cast("double") / col("_tc")), 6)
-          * lit(1e6), 0).cast("long").as("d_micro"),
-        col("_tr"), col("_tc"))
-    diffs
-      .orderBy(col("d_micro").desc, col("v").asc)
-      .limit(1)
-      .select(col("_tr").as("n_ref"), col("_tc").as("n_cur"),
-        col("d_micro"), round(col("v"), 4).as("at_value"))
-  }
-
-  /** [[ksStatistic]] per SLICE — the KS member of the per-group drift
-    * matrix beside [[psiByGroup]]: each group's supremum
-    * `sup_v |F_ref(v) − F_cur(v)|` is computed EXACTLY over that
-    * group's merged distinct values, so one feed's distribution shift
-    * never dilutes into a corpus-wide statistic. Same split prefix-sum
-    * as the scalar op (global quantile edges only BALANCE partitions —
-    * bucketing is monotone, per-group carries come from the bounded
-    * (group × bucket) net table), and the per-group argmax is a
-    * `max_by` HASH AGGREGATE on the lexicographic `(d_micro, −v)` key
-    * — deterministic ties to the smaller value, and never a per-group
-    * sort task. Groups empty on either side are absent (the zero-total
-    * guard, per slice); null group values are excluded (watch the
-    * group column itself with [[psiCategorical]]).
-    *
-    * Output: one row per group,
-    * `(group, n_ref, n_cur, d_micro, at_value)`.
-    */
-  def ksByGroup(reference: DataFrame, current: DataFrame, groupCol: String,
-                valueCol: String, buckets: Int = 64): DataFrame =
-    ksByGroupFromCounts(ksGroupSide(reference, groupCol, valueCol, "nr"),
-      ksGroupSide(current, groupCol, valueCol, "nc"), buckets)
-
-  /** Per-group distinct-value count contraction `(g, v, <as>)` — the
-    * per-slice KS sufficient statistic.
-    */
-  private def ksGroupSide(df: DataFrame, groupCol: String, valueCol: String,
-                          as: String): DataFrame = df
-    .filter(col(valueCol).isNotNull && col(groupCol).isNotNull)
-    .select(col(groupCol).as("g"), col(valueCol).cast("double").as("v"))
-    .groupBy("g", "v").agg(count(lit(1)).as(as))
-
-  /** Persist a PER-GROUP KS monitor's reference side —
-    * [[writeKsReference]] for the slice matrix: the per-group
-    * distinct-value counts `(g, v, nr)` are each slice's minimal
-    * sufficient statistic, so a monitoring tick reads them instead of
-    * rescanning the reference slices (q205's recompute).
-    */
-  def writeKsReferenceByGroup(reference: DataFrame, groupCol: String,
-                              valueCol: String, path: String): Unit =
-    ksGroupSide(reference, groupCol, valueCol, "nr")
-      .write.mode("overwrite").parquet(s"$path/values")
-
-  /** Contract one current-side feed to mergeable `(g, v, n_cur)`
-    * counts — duplicates across feeds sum (order-free integers).
-    */
-  def ksByGroupCurrentPartial(current: DataFrame, groupCol: String,
-                              valueCol: String): DataFrame =
-    ksGroupSide(current, groupCol, valueCol, "n_cur")
-
-  /** Exact per-group KS against the stored reference from merged
-    * current partials — same output and quantization as [[ksByGroup]],
-    * bit-identical to the full recompute (oracle-gated as q208).
-    */
-  def ksByGroupFromPartials(spark: org.apache.spark.sql.SparkSession,
-                            path: String, partials: DataFrame,
-                            buckets: Int = 64): DataFrame =
-    ksByGroupFromCounts(spark.read.parquet(s"$path/values"),
-      partials.groupBy("g", "v").agg(sum("n_cur").as("nc")), buckets)
-
-  /** One-shot per-group KS tick against a stored reference. */
-  def ksByGroupFromReference(spark: org.apache.spark.sql.SparkSession,
-                             path: String, current: DataFrame,
-                             groupCol: String, valueCol: String,
-                             buckets: Int = 64): DataFrame =
-    ksByGroupFromPartials(spark, path,
-      ksByGroupCurrentPartial(current, groupCol, valueCol), buckets)
-
-  private def ksByGroupFromCounts(refCounts: DataFrame,
-                                  curCounts: DataFrame,
-                                  buckets: Int): DataFrame = {
-    require(buckets >= 1, s"buckets must be >= 1: $buckets")
-    val merged = refCounts
-      .join(curCounts, Seq("g", "v"), "full_outer")
-      .select(col("g"), col("v"), coalesce(col("nr"), lit(0L)).as("nr"),
-        coalesce(col("nc"), lit(0L)).as("nc"))
-    val ps = (1 until buckets).map(i => i.toDouble / buckets)
-    val bucketed =
-      if (buckets == 1) merged.withColumn("_b", lit(0))
-      else {
-        val edges = merged
-          .agg(expr(s"approx_percentile(v, array(${ps.mkString(", ")}), 1000)")
-            .as("_e"))
-        merged.crossJoin(broadcast(edges))
-          .withColumn("_b", size(filter(col("_e"), e => col("v") > e)))
-          .drop("_e")
-      }
-    val bucketNet = bucketed.groupBy("g", "_b")
-      .agg(sum("nr").as("_br"), sum("nc").as("_bc"))
-    // carries over rows = groups x buckets (bounded — no data size can
-    // grow it), partitioned by group; per-group totals ride the SAME
-    // net table as full-frame window sums (the ksFromCounts shape) —
-    // never a second evaluation of `merged`'s lineage. The per-slice
-    // zero-total guard empties a group's offsets rows, and the inner
-    // join below drops that group from the output.
-    val wB = Window.partitionBy("g").orderBy("_b")
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val wT = Window.partitionBy("g").orderBy("_b")
-      .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-    val offsets = bucketNet
-      .withColumn("_or", coalesce(sum("_br").over(wB), lit(0L)))
-      .withColumn("_oc", coalesce(sum("_bc").over(wB), lit(0L)))
-      .withColumn("_tr", sum("_br").over(wT))
-      .withColumn("_tc", sum("_bc").over(wT))
-      .filter(col("_tr") > 0 && col("_tc") > 0)
-      .select("g", "_b", "_or", "_oc", "_tr", "_tc")
-    val wIn = Window.partitionBy("g", "_b").orderBy("v")
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val diffs = bucketed
-      .withColumn("_cr", sum("nr").over(wIn))
-      .withColumn("_cc", sum("nc").over(wIn))
-      .join(broadcast(offsets), Seq("g", "_b"))
-      .select(col("g"), col("v"), col("_tr"), col("_tc"),
-        round(round(abs(
-          (col("_cr") + col("_or")).cast("double") / col("_tr") -
-          (col("_cc") + col("_oc")).cast("double") / col("_tc")), 6)
-          * lit(1e6), 0).cast("long").as("d_micro"))
-    diffs.groupBy("g")
-      .agg(max_by(
-          struct(col("_tr"), col("_tc"), col("d_micro"),
-            round(col("v"), 4).as("at_value")),
-          struct(col("d_micro"), negate(col("v")))).as("_best"))
-      .select(col("g").as("group"),
-        col("_best._tr").as("n_ref"), col("_best._tc").as("n_cur"),
-        col("_best.d_micro").as("d_micro"), col("_best.at_value"))
+    val edges = quantileEdges(reference, valueCol, bins, exact, accuracy)
+    if (edges == null) return emptyPsiGrid(spark)
+    psiScore(bucketGrid(PsiEdges.Scalar(edges), bins, valueCol, None,
+      reference -> "n_ref", current -> "n_cur"), Nil)
   }
 
   /** [[psi]] per group — drift monitored per SLICE (per source, per
@@ -736,176 +414,335 @@ object Stats {
                  groupCol: String, valueCol: String, bins: Int = 10,
                  exact: Boolean = true, accuracy: Int = 10000): DataFrame = {
     require(bins >= 2, s"bins must be >= 2: $bins")
-    val spark = reference.sparkSession
-    val ps = (1 until bins).map(i => i.toDouble / bins)
     // per-group edges CANNOT collapse to driver literals (groups are
-    // data-dependent) — they stay a broadcast join; the quantile
-    // aggregate itself is the fast primitive-buffer one
-    val pctAgg =
-      if (exact)
-        graft.functions.ExactQuantiles.exactQuantiles(col(valueCol), ps)
-      else
-        expr(s"approx_percentile($valueCol, array(${ps.mkString(", ")}), " +
-          s"$accuracy)").cast("array<double>")
-    val edges = reference.filter(col(valueCol).isNotNull)
-      .groupBy(col(groupCol).as("group"))
-      .agg(pctAgg.as("_eq"))
-      .select(col("group"),
-        transform(col("_eq"), x => round(x, 4)).as("_e"))
-    def bucketed(df: DataFrame, as: String) = df
-      .filter(col(valueCol).isNotNull)
-      .select(col(groupCol).as("group"), col(valueCol))
-      .join(edges, "group")
-      .withColumn("bucket",
-        size(filter(col("_e"), e => col(valueCol) > e)).cast("long"))
-      .groupBy("group", "bucket").agg(count(lit(1)).as(as))
-    // groups × bins grid as a row-local explode (rows = groups), not a
-    // cross join — nothing for the plan audit to even gate
-    val grid = edges.select(col("group"),
-        explode(sequence(lit(0L), lit(bins - 1L))).as("bucket"))
-      .join(bucketed(reference, "n_ref"), Seq("group", "bucket"), "left")
-      .join(bucketed(current, "n_cur"), Seq("group", "bucket"), "left")
-      .select(col("group"), col("bucket"),
-        coalesce(col("n_ref"), lit(0L)).as("n_ref"),
-        coalesce(col("n_cur"), lit(0L)).as("n_cur"))
-    psiGroupScore(grid)
+    // data-dependent) — they stay a join; the quantile aggregate itself
+    // is the fast primitive-buffer one
+    val edges = roundedEdges(reference, valueCol,
+      Seq(col(groupCol).as("group")), bins, exact, accuracy)
+    psiScore(bucketGrid(PsiEdges.ByGroup(edges), bins, valueCol,
+      Some(groupCol), reference -> "n_ref", current -> "n_cur"), Seq("group"))
   }
 
-  /** Shared per-group PSI scoring tail: totals as window sums over the
-    * bounded groups × bins grid — single lineage (the scalar [[psi]]
-    * discipline per slice); a group whose current slice is empty
-    * filters out entirely.
+  /** A stored reference's form is fixed at write time: scoring it
+    * with a `group_col` it was not written with (or without the one
+    * it was) fails here, instead of joining the wrong grain and
+    * returning a plausible wrong number.
     */
-  private def psiGroupScore(grid: DataFrame): DataFrame = {
-    val wG = Window.partitionBy("group")
-    val withTot = grid
-      .withColumn("_tr", sum("n_ref").over(wG))
-      .withColumn("_tc", sum("n_cur").over(wG))
-      .filter(col("_tc") > 0)
-    val pf = greatest(col("n_ref").cast("double") / col("_tr"), lit(1e-6))
-    val qf = greatest(col("n_cur").cast("double") / col("_tc"), lit(1e-6))
-    withTot
-      .select(col("group"), col("bucket"), col("n_ref"), col("n_cur"),
-        round(round(pf, 6) * lit(1e6), 0).cast("long").as("p_micro"),
-        round(round(qf, 6) * lit(1e6), 0).cast("long").as("q_micro"),
-        round(round((pf - qf) * log(pf / qf), 6) * lit(1e6), 0)
-          .cast("long").as("psi_micro"))
-  }
+  private def requireForm(monitor: String, storedByGroup: Boolean,
+                          currentByGroup: Boolean): Unit =
+    require(storedByGroup == currentByGroup,
+      s"$monitor reference is ${if (storedByGroup) "per-group" else "scalar"}" +
+        s" but the current side is ${if (currentByGroup) "per-group" else "scalar"}" +
+        " — pass group_col exactly when the reference was written with one")
 
-  /** Persist a PER-GROUP PSI monitor's reference — [[writePsiReference]]
-    * extended to the [[psiByGroup]] slice matrix: q197-style monitors
-    * otherwise rescan every reference SLICE on every tick. Stores the
-    * per-group rounded equi-depth edges (`$path/edges`: `(group, _e)`)
-    * and the zero-filled per-(group, bucket) reference counts
-    * (`$path/buckets`: `(group, bucket, n_ref)`);
-    * [[psiByGroupFromReference]] then scores any current snapshot
-    * reading only the current side, bit-identical to a full
-    * [[psiByGroup]] recompute (oracle-gated as q207). Groups are the
-    * reference's observed slices — a group absent here has no baseline
-    * and is absent from every downstream score.
+  /** Persist a PSI monitor's REFERENCE profile once — the [[graft.ops
+    * .Compare]] profilePartial/profileMerge discipline applied to drift
+    * monitoring: [[psi]] recomputes the reference quantile edges and
+    * bucket counts on EVERY run, which at 100 TB means every monitoring
+    * tick rescans a corpus that by definition does not change. This
+    * writes the rounded edges and the zero-filled per-bucket reference
+    * counts to `path`; [[psiFromReference]] then scores any current
+    * snapshot against them reading only the current side — and
+    * [[psiCurrentPartial]] / [[psiFromPartials]] split the current side
+    * itself into mergeable integer bucket counts (order-free sums), so
+    * incremental feeds contract as they arrive. Output of the
+    * partial-fed path is bit-identical to a full [[psi]] recompute
+    * (oracle-gated as q200).
+    *
+    * The stored layout decides the form every later call uses:
+    *  - scalar (no `groupCol`): `$path/edges` is one `_e` row,
+    *    `$path/buckets` is `(bucket, n_ref)`;
+    *  - per group ([[psiByGroup]]'s slice matrix, so q197-style
+    *    monitors stop rescanning every reference SLICE per tick):
+    *    `$path/edges` is `(group, _e)`, `$path/buckets` is
+    *    `(group, bucket, n_ref)` — groups are the reference's observed
+    *    slices, and a group absent here is absent from every score
+    *    (oracle-gated as q207).
     */
-  def writePsiReferenceByGroup(reference: DataFrame, groupCol: String,
-                               valueCol: String, path: String,
-                               bins: Int = 10, exact: Boolean = true,
-                               accuracy: Int = 10000): Unit = {
+  def writePsiReference(reference: DataFrame, valueCol: String, path: String,
+                        bins: Int = 10, exact: Boolean = true,
+                        accuracy: Int = 10000,
+                        groupCol: Option[String] = None): Unit = {
     require(bins >= 2, s"bins must be >= 2: $bins")
     val spark = reference.sparkSession
-    val ps = (1 until bins).map(i => i.toDouble / bins)
-    val pctAgg =
-      if (exact)
-        graft.functions.ExactQuantiles.exactQuantiles(col(valueCol), ps)
-      else
-        expr(s"approx_percentile($valueCol, array(${ps.mkString(", ")}), " +
-          s"$accuracy)").cast("array<double>")
-    reference.filter(col(valueCol).isNotNull)
-      .groupBy(col(groupCol).as("group"))
-      .agg(pctAgg.as("_eq"))
-      .select(col("group"), transform(col("_eq"), x => round(x, 4)).as("_e"))
+    import spark.implicits._
+    def noBaseline = s"writePsiReference: $valueCol has no non-null " +
+      "values — an empty reference is not a baseline"
+    def writeEdges(edges: Array[Double]): Unit = spark.range(1)
+      .select(array(edges.toIndexedSeq.map(lit(_)): _*).as("_e"))
       .write.mode("overwrite").parquet(s"$path/edges")
-    // bucket with what was STORED (read back) — write/read drift
-    // surfaces at write time, not at monitor time
-    val stored = spark.read.parquet(s"$path/edges")
-    val counts = reference.filter(col(valueCol).isNotNull)
-      .select(col(groupCol).as("group"), col(valueCol))
-      .join(stored, "group")
-      .withColumn("bucket",
-        size(filter(col("_e"), e => col(valueCol) > e)).cast("long"))
-      .groupBy("group", "bucket").agg(count(lit(1)).as("n_ref"))
-    stored.select(col("group"),
-        explode(sequence(lit(0L), lit(bins - 1L))).as("bucket"))
-      .join(counts, Seq("group", "bucket"), "left")
-      .select(col("group"), col("bucket"),
-        coalesce(col("n_ref"), lit(0L)).as("n_ref"))
-      .write.mode("overwrite").parquet(s"$path/buckets")
+    if (exact && groupCol.isEmpty) {
+      // one corpus pass: the fused profile carries edges AND counts
+      val prof = referenceProfile(reference, valueCol, bins)
+      require(prof != null, noBaseline)
+      val (edges, counts) = prof
+      writeEdges(edges)
+      counts.toSeq.zipWithIndex.map { case (c, b) => (b.toLong, c) }
+        .toDF("bucket", "n_ref")
+        .write.mode("overwrite").parquet(s"$path/buckets")
+    } else {
+      groupCol match {
+        case None =>
+          val edges = quantileEdges(reference, valueCol, bins, exact, accuracy)
+          require(edges != null, noBaseline)
+          writeEdges(edges)
+        case Some(g) =>
+          roundedEdges(reference, valueCol, Seq(col(g).as("group")), bins,
+            exact, accuracy).write.mode("overwrite").parquet(s"$path/edges")
+      }
+      // bucket with what was STORED (read back) so any write/read
+      // precision drift surfaces at write time, not at monitor time
+      bucketGrid(loadPsiEdges(spark, path), bins, valueCol, groupCol,
+        reference -> "n_ref").write.mode("overwrite").parquet(s"$path/buckets")
+    }
   }
 
-  /** Contract one current-side feed to `(group, bucket, n_cur)` against
-    * the STORED per-group edges — mergeable integer counts, order-free
-    * under union (the [[psiCurrentPartial]] discipline per slice).
-    * Rows of groups with no stored baseline drop here (no edges to
-    * bucket against).
+  /** A stored PSI reference's edges, loaded once — the form comes from
+    * the stored schema: a scalar reference's one row becomes driver
+    * literals (`bins − 1` doubles); a per-group reference's
+    * `(group, _e)` rows are collected (bounded: groups × (bins − 1)
+    * doubles) into a LOCAL relation, which [[psiCurrentPartial]]
+    * broadcasts. A monitor that contracts
+    * many feeds or micro-batches loads this once per drain and passes
+    * it to every [[psiCurrentPartial]], so no feed re-reads the
+    * reference parquet.
     */
-  def psiByGroupCurrentPartial(spark: org.apache.spark.sql.SparkSession,
-                               path: String, current: DataFrame,
-                               groupCol: String,
-                               valueCol: String): DataFrame =
-    psiByGroupCurrentPartial(current, groupCol, valueCol,
-      spark.read.parquet(s"$path/edges"))
-
-  /** [[psiByGroupCurrentPartial]] against an ALREADY-LOADED edges frame
-    * — the streaming per-group drift sink captures the (groups × bins)
-    * edges table once per drain via [[loadPsiGroupEdges]] and feeds
-    * every micro-batch from the local form, instead of re-reading the
-    * reference parquet per batch. Same join and bucketing, bit-identical
-    * partials.
-    */
-  def psiByGroupCurrentPartial(current: DataFrame, groupCol: String,
-                               valueCol: String,
-                               edges: DataFrame): DataFrame =
-    current.filter(col(valueCol).isNotNull)
-      .select(col(groupCol).as("group"), col(valueCol))
-      .join(broadcast(edges), "group")
-      .withColumn("bucket",
-        size(filter(col("_e"), e => col(valueCol) > e)).cast("long"))
-      .groupBy("group", "bucket").agg(count(lit(1)).as("n_cur"))
-
-  /** The stored per-group PSI edges captured as a LOCAL relation —
-    * `(group, _e)` rows collected once (bounded: groups × (bins−1)
-    * doubles) and rebuilt as an in-memory frame, so a per-batch
-    * reference to it broadcasts driver rows instead of re-scanning the
-    * stored parquet.
-    */
-  def loadPsiGroupEdges(spark: org.apache.spark.sql.SparkSession,
-                        path: String): DataFrame = {
+  def loadPsiEdges(spark: org.apache.spark.sql.SparkSession,
+                   path: String): PsiEdges = {
     val stored = spark.read.parquet(s"$path/edges")
-    spark.createDataFrame(
-      java.util.Arrays.asList(stored.collect(): _*), stored.schema)
+    if (stored.columns.contains("group"))
+      PsiEdges.ByGroup(spark.createDataFrame(
+        java.util.Arrays.asList(stored.collect(): _*), stored.schema))
+    else PsiEdges.Scalar(stored.head().getSeq[Double](0).toArray)
   }
 
-  /** Score merged per-group current partials against the stored
-    * per-group reference profile — same output schema and quantization
-    * as [[psiByGroup]], bit-identical to the full recompute over the
-    * concatenated feeds.
+  /** Contract one current-side feed to `(bucket, n_cur)` — or
+    * `(group, bucket, n_cur)` with `groupCol` — against a reference's
+    * loaded edges: a mergeable partial (integer counts, order-free
+    * under union). Daily/hourly feeds or streaming micro-batches each
+    * contract independently and [[psiFromPartials]] sums them, so a
+    * monitoring tick touches only the new increment, never the history
+    * or the reference corpus. The same edges give the same partial on
+    * every call, so a replayed batch lands bit-identical rows. Per
+    * group, rows of groups with no stored baseline drop here. A
+    * `groupCol` that disagrees with the edges' form fails loudly.
     */
-  def psiByGroupFromPartials(spark: org.apache.spark.sql.SparkSession,
-                             path: String, partials: DataFrame): DataFrame = {
+  def psiCurrentPartial(current: DataFrame, valueCol: String,
+                        edges: PsiEdges,
+                        groupCol: Option[String] = None): DataFrame = {
+    requireForm("PSI", edges.isInstanceOf[PsiEdges.ByGroup],
+      groupCol.isDefined)
+    bucketCounts(current, valueCol, edges match {
+      case PsiEdges.ByGroup(e) => PsiEdges.ByGroup(broadcast(e))
+      case scalar => scalar
+    }, groupCol, "n_cur")
+  }
+
+  /** Score merged current partials against the stored reference profile
+    * — same output schema and quantization as [[psi]] (scalar) or
+    * [[psiByGroup]] (per group), bit-identical to the full recompute
+    * over the concatenated feeds. `partials` is any union of
+    * [[psiCurrentPartial]] outputs (duplicate cells sum); their form
+    * must match the stored one. An empty side yields an EMPTY result
+    * (per group: the group is absent) — [[psiScore]]'s zero-total guard.
+    */
+  def psiFromPartials(spark: org.apache.spark.sql.SparkSession,
+                      path: String, partials: DataFrame): DataFrame = {
     val ref = spark.read.parquet(s"$path/buckets")
-    val merged = partials.groupBy("group", "bucket")
+    val keys = if (ref.columns.contains("group")) Seq("group") else Nil
+    requireForm("PSI", keys.nonEmpty, partials.columns.contains("group"))
+    val cell = keys :+ "bucket"
+    val merged = partials.groupBy(cell.map(col): _*)
       .agg(sum("n_cur").as("n_cur"))
-    psiGroupScore(ref
-      .join(merged, Seq("group", "bucket"), "left")
-      .select(col("group"), col("bucket"), col("n_ref"),
-        coalesce(col("n_cur"), lit(0L)).as("n_cur")))
+    psiScore(ref.join(merged, cell, "left")
+      .select(cell.map(col) ++ Seq(col("n_ref"),
+        coalesce(col("n_cur"), lit(0L)).as("n_cur")): _*), keys)
   }
 
-  /** One-shot per-group monitor tick against a stored reference — the
-    * reference corpus is never read.
+  /** One-shot monitor tick against a stored reference: contract the
+    * current snapshot, score — the reference corpus is never read.
     */
-  def psiByGroupFromReference(spark: org.apache.spark.sql.SparkSession,
-                              path: String, current: DataFrame,
-                              groupCol: String, valueCol: String): DataFrame =
-    psiByGroupFromPartials(spark, path,
-      psiByGroupCurrentPartial(spark, path, current, groupCol, valueCol))
+  def psiFromReference(spark: org.apache.spark.sql.SparkSession,
+                       path: String, current: DataFrame, valueCol: String,
+                       groupCol: Option[String] = None): DataFrame =
+    psiFromPartials(spark, path, psiCurrentPartial(current, valueCol,
+      loadPsiEdges(spark, path), groupCol))
+
+  /** Exact two-sample Kolmogorov-Smirnov statistic — the
+    * distribution-free drift test beside [[psi]]'s binned score:
+    * `D = sup_v |F_ref(v) - F_cur(v)|`, computed EXACTLY over the
+    * merged distinct-value table with a SPLIT prefix sum (the
+    * [[graft.ops.Events.peakConcurrency]] pattern): values bucket by
+    * approximate quantile edges of the union (bucketing is monotone so
+    * it cannot change the answer — it only balances partitions),
+    * within-bucket running counts hash-partition by bucket, and the
+    * carry-in offsets come from one window over the BUCKET-grain net
+    * table (rows = `buckets`, which no data size can grow). No
+    * one-task global window anywhere.
+    *
+    * The CDF difference per value is exact integer cumulative counts
+    * through two identical IEEE divisions, micro-rounded per value;
+    * the reported row is the max by `(d_micro DESC, value ASC)` — a
+    * deterministic argmax both engines replay.
+    *
+    * Output: one row, `(n_ref, n_cur, d_micro, at_value)` with
+    * `at_value` the 4-rounded location of the supremum.
+    */
+  def ksStatistic(reference: DataFrame, current: DataFrame,
+                  valueCol: String, buckets: Int = 64): DataFrame =
+    ksCore(ksSide(reference, valueCol, "nr"), ksSide(current, valueCol, "nc"),
+      Nil, buckets)
+
+  /** [[ksStatistic]] per SLICE — the KS member of the per-group drift
+    * matrix beside [[psiByGroup]]: each group's supremum
+    * `sup_v |F_ref(v) − F_cur(v)|` is computed EXACTLY over that
+    * group's merged distinct values, so one feed's distribution shift
+    * never dilutes into a corpus-wide statistic. Same split prefix-sum
+    * and argmax as the scalar op ([[ksCore]]). Groups empty on either
+    * side are absent (the zero-total guard, per slice); null group
+    * values are excluded (watch the group column itself with
+    * [[psiCategorical]]).
+    *
+    * Output: one row per group,
+    * `(group, n_ref, n_cur, d_micro, at_value)`.
+    */
+  def ksByGroup(reference: DataFrame, current: DataFrame, groupCol: String,
+                valueCol: String, buckets: Int = 64): DataFrame =
+    ksCore(ksSide(reference, valueCol, "nr", Some(groupCol)),
+      ksSide(current, valueCol, "nc", Some(groupCol)), Seq("g"), buckets)
+
+  /** Distinct-value count contraction `(v, <as>)` — or `(g, v, <as>)`
+    * with `groupCol`, null groups excluded — KS's minimal sufficient
+    * statistic per side (per slice).
+    */
+  private def ksSide(df: DataFrame, valueCol: String, as: String,
+                     groupCol: Option[String] = None): DataFrame = {
+    val g = groupCol.map(c => col(c).as("g")).toSeq
+    df.filter(groupCol.foldLeft(col(valueCol).isNotNull)((p, c) =>
+        p && col(c).isNotNull))
+      .select(g :+ col(valueCol).cast("double").as("v"): _*)
+      .groupBy((g.map(_ => col("g")) :+ col("v")): _*)
+      .agg(count(lit(1)).as(as))
+  }
+
+  /** Persist a KS monitor's REFERENCE side once — the [[writePsiReference]]
+    * discipline for the distribution-free test: the reference's
+    * distinct-value counts are KS's minimal sufficient statistic
+    * (orders of magnitude smaller than the corpus for any
+    * bounded-cardinality feature), so a monitoring tick reads them
+    * instead of rescanning the reference corpus.
+    * [[ksCurrentPartial]] / [[ksFromPartials]] make the current side
+    * mergeable integer counts, and the partial-fed statistic is
+    * bit-identical to a full [[ksStatistic]] / [[ksByGroup]] recompute
+    * (oracle-gated as q202 / q208).
+    *
+    * The stored layout decides the form every later call uses:
+    * `$path/values` is `(v, nr)` for a scalar reference, `(g, v, nr)`
+    * for a per-group one (`groupCol`).
+    */
+  def writeKsReference(reference: DataFrame, valueCol: String, path: String,
+                       groupCol: Option[String] = None): Unit =
+    ksSide(reference, valueCol, "nr", groupCol)
+      .write.mode("overwrite").parquet(s"$path/values")
+
+  /** Contract one current-side feed to mergeable `(v, n_cur)` counts —
+    * `(g, v, n_cur)` with `groupCol` — duplicates across feeds sum
+    * (order-free integers). Reference-free: a streaming monitor needs
+    * nothing loaded, and a replayed batch lands bit-identical rows.
+    */
+  def ksCurrentPartial(current: DataFrame, valueCol: String,
+                       groupCol: Option[String] = None): DataFrame =
+    ksSide(current, valueCol, "n_cur", groupCol)
+
+  /** Exact KS against the stored reference from merged current partials
+    * — same output and quantization as [[ksStatistic]] (scalar) or
+    * [[ksByGroup]] (per group). The form is read from the stored
+    * schema; partials of the other form fail loudly.
+    */
+  def ksFromPartials(spark: org.apache.spark.sql.SparkSession, path: String,
+                     partials: DataFrame, buckets: Int = 64): DataFrame = {
+    val ref = spark.read.parquet(s"$path/values")
+    val keys = if (ref.columns.contains("g")) Seq("g") else Nil
+    requireForm("KS", keys.nonEmpty, partials.columns.contains("g"))
+    ksCore(ref, partials.groupBy((keys :+ "v").map(col): _*)
+      .agg(sum("n_cur").as("nc")), keys, buckets)
+  }
+
+  /** One-shot monitor tick against a stored KS reference. */
+  def ksFromReference(spark: org.apache.spark.sql.SparkSession, path: String,
+                      current: DataFrame, valueCol: String,
+                      buckets: Int = 64,
+                      groupCol: Option[String] = None): DataFrame =
+    ksFromPartials(spark, path, ksCurrentPartial(current, valueCol, groupCol),
+      buckets)
+
+  /** The one KS plan over `(keys…, v, nr)` / `(keys…, v, nc)` counts,
+    * `keys` empty (scalar) or `Seq("g")` (per group). Global quantile
+    * edges of the merged values only BALANCE partitions (bucketing is
+    * monotone); each key's carry-in offsets and totals ride full-frame
+    * window sums over the bounded (keys × buckets) net table — never a
+    * second evaluation of `merged`'s lineage (the q186
+    * duplicated-lineage lesson). The zero-total guard empties a key's
+    * offsets rows, and the inner join drops that key. The argmax is a
+    * `max_by` HASH AGGREGATE on `(d_micro, −v)` — ties go to the
+    * smaller value, never a sort task. Without keys that aggregate is
+    * global and returns one null row on empty input, which the
+    * `_best` filter removes: an empty side yields ZERO rows.
+    */
+  private def ksCore(refCounts: DataFrame, curCounts: DataFrame,
+                     keys: Seq[String], buckets: Int): DataFrame = {
+    require(buckets >= 1, s"buckets must be >= 1: $buckets")
+    val kv = keys :+ "v"
+    val merged = refCounts
+      .join(curCounts, kv, "full_outer")
+      .select(kv.map(col) ++ Seq(coalesce(col("nr"), lit(0L)).as("nr"),
+        coalesce(col("nc"), lit(0L)).as("nc")): _*)
+    val ps = (1 until buckets).map(i => i.toDouble / buckets)
+    val bucketed =
+      if (buckets == 1) merged.withColumn("_b", lit(0))
+      else {
+        val edges = merged
+          .agg(expr(s"approx_percentile(v, array(${ps.mkString(", ")}), 1000)")
+            .as("_e"))
+        merged.crossJoin(broadcast(edges))
+          .withColumn("_b", size(filter(col("_e"), e => col("v") > e)))
+          .drop("_e")
+      }
+    val kb = keys :+ "_b"
+    val bucketNet = bucketed.groupBy(kb.map(col): _*)
+      .agg(sum("nr").as("_br"), sum("nc").as("_bc"))
+    val wK = Window.partitionBy(keys.map(col): _*).orderBy("_b")
+    val wB = wK.rowsBetween(Window.unboundedPreceding, -1)
+    val wT = wK.rowsBetween(Window.unboundedPreceding,
+      Window.unboundedFollowing)
+    val offsets = bucketNet
+      .withColumn("_or", coalesce(sum("_br").over(wB), lit(0L)))
+      .withColumn("_oc", coalesce(sum("_bc").over(wB), lit(0L)))
+      .withColumn("_tr", sum("_br").over(wT))
+      .withColumn("_tc", sum("_bc").over(wT))
+      .filter(col("_tr") > 0 && col("_tc") > 0)
+      .select((kb ++ Seq("_or", "_oc", "_tr", "_tc")).map(col): _*)
+    val wIn = Window.partitionBy(kb.map(col): _*).orderBy("v")
+      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    val diffs = bucketed
+      .withColumn("_cr", sum("nr").over(wIn))
+      .withColumn("_cc", sum("nc").over(wIn))
+      .join(broadcast(offsets), kb)
+      .select(kv.map(col) ++ Seq(col("_tr"), col("_tc"),
+        round(round(abs(
+          (col("_cr") + col("_or")).cast("double") / col("_tr") -
+          (col("_cc") + col("_oc")).cast("double") / col("_tc")), 6)
+          * lit(1e6), 0).cast("long").as("d_micro")): _*)
+    diffs.groupBy(keys.map(col): _*)
+      .agg(max_by(
+          struct(col("_tr"), col("_tc"), col("d_micro"),
+            round(col("v"), 4).as("at_value")),
+          struct(col("d_micro"), negate(col("v")))).as("_best"))
+      .filter(col("_best").isNotNull)
+      .select(keys.map(k => col(k).as("group")) ++ Seq(
+        col("_best._tr").as("n_ref"), col("_best._tc").as("n_cur"),
+        col("_best.d_micro").as("d_micro"), col("_best.at_value")): _*)
+  }
 
   /** Categorical PSI — [[psi]] over a discrete column: the category
     * set is the UNION of both snapshots' observed values (a category
@@ -936,23 +773,9 @@ object Stats {
       .select(col("category"),
         coalesce(col("n_ref"), lit(0L)).as("n_ref"),
         coalesce(col("n_cur"), lit(0L)).as("n_cur"))
-    // window totals over the category-grain grid — single lineage (the
-    // [[psi]] fix): the r9 totals branch re-scanned both corpora. The
-    // one-task window holds exactly the category rows, the op's stated
-    // cardinality bound.
-    val wAll = Window.partitionBy()
-    val withTot = grid
-      .withColumn("_tr", sum("n_ref").over(wAll))
-      .withColumn("_tc", sum("n_cur").over(wAll))
-      .filter(col("_tr") > 0 && col("_tc") > 0)
-    val pf = greatest(col("n_ref").cast("double") / col("_tr"), lit(1e-6))
-    val qf = greatest(col("n_cur").cast("double") / col("_tc"), lit(1e-6))
-    withTot
-      .select(col("category"), col("n_ref"), col("n_cur"),
-        round(round(pf, 6) * lit(1e6), 0).cast("long").as("p_micro"),
-        round(round(qf, 6) * lit(1e6), 0).cast("long").as("q_micro"),
-        round(round((pf - qf) * log(pf / qf), 6) * lit(1e6), 0)
-          .cast("long").as("psi_micro"))
+    // the one-task scoring window holds exactly the category rows, the
+    // op's stated cardinality bound
+    psiScore(grid, Nil)
   }
 
   /** Exact pairwise Pearson correlation over `cols` — ONE pass, one

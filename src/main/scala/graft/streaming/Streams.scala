@@ -191,199 +191,45 @@ object Streams {
     written
   }
 
-  /** Continuous drift monitoring against a STORED PSI reference
-    * ([[graft.ops.Stats.writePsiReference]]): each micro-batch
-    * contracts to its integer bucket partial
-    * ([[graft.ops.Stats.psiCurrentPartial]]) and lands as one parquet
-    * increment per batch id — the mergeable-partials discipline made
-    * continuous. The monitor's CURRENT score at any point is
-    * [[graft.ops.Stats.psiFromPartials]] over the accumulated
-    * partials (order-free integer sums, so reading them in any state
-    * of the stream is consistent), bit-identical to a batch recompute
-    * over everything streamed so far — the reference corpus is never
-    * read after its one-time profile write.
+  /** Continuous mergeable-partials monitoring: each micro-batch
+    * contracts to `partial(batch)` and lands as one parquet increment
+    * at `partialsPath/batch<id>` — the mergeable-partials discipline
+    * made continuous. The monitor's CURRENT answer at any point is the
+    * matching merge over the accumulated partials (order-free integer
+    * sums or an associative top-n, so reading them in any state of the
+    * stream is consistent), bit-identical to a batch recompute over
+    * everything streamed so far:
+    *  - PSI drift: `Stats.psiCurrentPartial(_, valueCol, edges,
+    *    groupCol)`, scored by [[graft.ops.Stats.psiFromPartials]];
+    *  - KS drift: `Stats.ksCurrentPartial(_, valueCol, groupCol)`,
+    *    scored by [[graft.ops.Stats.ksFromPartials]];
+    *  - weighted reservoir: `Sampling.reservoirPartial(_, …)`, folded
+    *    by [[loadReservoir]].
+    * The partial must be a pure function of the batch: a PSI monitor
+    * loads its reference edges ONCE per drain
+    * ([[graft.ops.Stats.loadPsiEdges]]) and captures them in `partial`,
+    * so no micro-batch re-reads the reference; the reference corpus is
+    * never read after its one-time profile write.
     *
     * Replay safe: the per-batch dir is a pure function of the batch id
     * and is deleted before write (the [[writeIncrement]] contract), so
     * a crash between write and checkpoint commit re-lands the same
     * partial instead of double-counting it.
     */
-  def psiDriftSink(stream: DataFrame, refPath: String, valueCol: String,
-                   partialsPath: String, checkpoint: String): StreamingQuery = {
-    // the stored reference edges are bins-sized and IMMUTABLE for the
-    // life of the monitor — load them once per drain and feed every
-    // micro-batch from the captured array instead of re-reading the
-    // reference parquet per batch (a driver job per batch, pure
-    // protocol overhead)
-    val edges = graft.ops.Stats.loadPsiEdges(stream.sparkSession, refPath)
+  def partialsSink(stream: DataFrame, partialsPath: String,
+                   checkpoint: String)
+                  (partial: DataFrame => DataFrame): StreamingQuery =
     batchSink(stream, checkpoint) { (batch, id) =>
-      applyPsiDriftBatch(batch, edges, valueCol, partialsPath, id)
-    }
-  }
-
-  /** One micro-batch's partial — separated so the replay contract is
-    * directly testable: applying the same batch twice leaves one copy.
-    */
-  def applyPsiDriftBatch(batch: DataFrame, refPath: String, valueCol: String,
-                         partialsPath: String, id: Long): Unit =
-    applyPsiDriftBatch(batch,
-      graft.ops.Stats.loadPsiEdges(batch.sparkSession, refPath), valueCol,
-      partialsPath, id)
-
-  /** [[applyPsiDriftBatch]] from pre-loaded reference edges — the form
-    * the sink's per-batch loop uses (edges load once per drain).
-    */
-  def applyPsiDriftBatch(batch: DataFrame, edges: Array[Double],
-                         valueCol: String, partialsPath: String,
-                         id: Long): Unit =
-    landBatch(batch.sparkSession, s"$partialsPath/batch$id")(
-      graft.ops.Stats.psiCurrentPartial(batch, valueCol, edges))
-
-  /** Continuous KS drift monitoring — [[psiDriftSink]]'s discipline for
-    * the distribution-free test: each micro-batch contracts to its
-    * mergeable distinct-value counts
-    * ([[graft.ops.Stats.ksCurrentPartial]] — integer `(v, n_cur)` rows,
-    * order-free under union) and lands as one parquet increment per
-    * batch id. The monitor's CURRENT statistic at any point is
-    * [[graft.ops.Stats.ksFromPartials]] over the accumulated partials
-    * against the stored reference ([[graft.ops.Stats.writeKsReference]]),
-    * bit-identical to a batch [[graft.ops.Stats.ksStatistic]] recompute
-    * over everything streamed so far — the reference corpus is never
-    * read after its one-time value-count write.
-    *
-    * Replay safe: the per-batch dir is a pure function of the batch id
-    * and is deleted before write (the [[writeIncrement]] contract).
-    * Note the partial needs no reference access at all — value counts
-    * are reference-free — so the sink takes no refPath.
-    */
-  def ksDriftSink(stream: DataFrame, valueCol: String,
-                  partialsPath: String, checkpoint: String): StreamingQuery =
-    batchSink(stream, checkpoint) { (batch, id) =>
-      applyKsDriftBatch(batch, valueCol, partialsPath, id)
+      applyPartialsBatch(batch, partialsPath, id)(partial)
     }
 
-  /** One micro-batch's KS partial — separated so the replay contract is
-    * directly testable: applying the same batch twice leaves one copy.
+  /** One micro-batch of [[partialsSink]] — separated so the replay
+    * contract is directly testable: applying the same batch twice
+    * leaves one copy.
     */
-  def applyKsDriftBatch(batch: DataFrame, valueCol: String,
-                        partialsPath: String, id: Long): Unit =
-    landBatch(batch.sparkSession, s"$partialsPath/batch$id")(
-      graft.ops.Stats.ksCurrentPartial(batch, valueCol))
-
-  /** PER-GROUP continuous PSI drift — [[psiDriftSink]] composed with the
-    * persisted slice references ([[graft.ops.Stats.writePsiReferenceByGroup]]):
-    * each micro-batch contracts to its `(group, bucket, n_cur)` integer
-    * partial against the STORED per-group edges
-    * ([[graft.ops.Stats.psiByGroupCurrentPartial]]) and lands as one
-    * parquet increment per batch id. The monitor's slice matrix at any
-    * point is [[graft.ops.Stats.psiByGroupFromPartials]] over the
-    * accumulated partials — bit-identical to a batch
-    * [[graft.ops.Stats.psiByGroup]] recompute over everything streamed,
-    * with the reference slices never re-read after their one-time
-    * profile. Replay-safe via the per-batch-dir delete-and-rewrite
-    * contract, like every sink in this family.
-    */
-  def psiByGroupDriftSink(stream: DataFrame, refPath: String,
-                          groupCol: String, valueCol: String,
-                          partialsPath: String,
-                          checkpoint: String): StreamingQuery = {
-    // per-drain capture of the (groups × bins) stored edges as a LOCAL
-    // relation — each micro-batch broadcasts driver rows instead of
-    // re-scanning the reference parquet (the psiDriftSink discipline,
-    // per-group form)
-    val edges = graft.ops.Stats.loadPsiGroupEdges(stream.sparkSession,
-      refPath)
-    batchSink(stream, checkpoint) { (batch, id) =>
-      applyPsiByGroupDriftBatch(batch, edges, groupCol, valueCol,
-        partialsPath, id)
-    }
-  }
-
-  /** One micro-batch's per-group PSI partial — separated so the replay
-    * contract is directly testable: the same batch twice leaves one copy.
-    */
-  def applyPsiByGroupDriftBatch(batch: DataFrame, refPath: String,
-                                groupCol: String, valueCol: String,
-                                partialsPath: String, id: Long): Unit =
-    applyPsiByGroupDriftBatch(batch,
-      batch.sparkSession.read.parquet(s"$refPath/edges"), groupCol,
-      valueCol, partialsPath, id)
-
-  /** [[applyPsiByGroupDriftBatch]] from a pre-loaded edges frame — the
-    * form the sink's per-batch loop uses (edges captured once per
-    * drain).
-    */
-  def applyPsiByGroupDriftBatch(batch: DataFrame, edges: DataFrame,
-                                groupCol: String, valueCol: String,
-                                partialsPath: String, id: Long): Unit =
-    landBatch(batch.sparkSession, s"$partialsPath/batch$id")(
-      graft.ops.Stats.psiByGroupCurrentPartial(batch, groupCol, valueCol, edges))
-
-  /** PER-GROUP continuous KS drift — [[ksDriftSink]] composed with the
-    * persisted per-group value counts
-    * ([[graft.ops.Stats.writeKsReferenceByGroup]]): each micro-batch
-    * contracts to mergeable `(g, v, n_cur)` counts
-    * ([[graft.ops.Stats.ksByGroupCurrentPartial]] — reference-free, so
-    * no refPath) and lands as one increment per batch id; score any
-    * time with [[graft.ops.Stats.ksByGroupFromPartials]], bit-identical
-    * to the batch [[graft.ops.Stats.ksByGroup]] recompute.
-    */
-  def ksByGroupDriftSink(stream: DataFrame, groupCol: String,
-                         valueCol: String, partialsPath: String,
-                         checkpoint: String): StreamingQuery =
-    batchSink(stream, checkpoint) { (batch, id) =>
-      applyKsByGroupDriftBatch(batch, groupCol, valueCol,
-        partialsPath, id)
-    }
-
-  /** One micro-batch's per-group KS partial — replay-testable twin. */
-  def applyKsByGroupDriftBatch(batch: DataFrame, groupCol: String,
-                               valueCol: String, partialsPath: String,
-                               id: Long): Unit =
-    landBatch(batch.sparkSession, s"$partialsPath/batch$id")(
-      graft.ops.Stats.ksByGroupCurrentPartial(batch, groupCol, valueCol))
-
-  /** Continuous weighted sampling WITHOUT replacement over an unbounded
-    * stream — [[graft.ops.Sampling.prioritySamplePerGroup]] maintained
-    * as a reservoir. Each micro-batch contracts to ITS OWN per-group
-    * top-n under the deterministic Efraimidis–Spirakis key
-    * ([[graft.ops.Sampling.esKeyMicro]] — a pure function of id and
-    * weight, no RNG state) and lands as one parquet increment per batch
-    * id; the reservoir at any point is [[loadReservoir]], the per-group
-    * top-n over the union of partials. Because the key is deterministic,
-    * top-n is associative — top_n(A ∪ B) = top_n(top_n(A) ∪ top_n(B)) —
-    * so the streamed reservoir is bit-identical to the batch sampler run
-    * over everything streamed so far, held to the SAME DuckDB oracle
-    * (q210 vs q139).
-    *
-    * Scale: a partial never exceeds groups × n rows regardless of batch
-    * size (the contraction happens inside the batch), so the read side
-    * is bounded by batches × groups × n;
-    * [[graft.core.io.Maintenance.compactIncrements]] folds old partials
-    * when the batch count grows. Replay safe: delete-first batch dirs
-    * (the [[writeIncrement]] contract) plus the largest-key-per-id
-    * collapse in [[graft.ops.Sampling.reservoirMerge]].
-    */
-  def reservoirSampleSink(stream: DataFrame, idCol: String, groupCol: String,
-                          weightCol: String, n: Int, partialsPath: String,
-                          checkpoint: String,
-                          salt: String = "es"): StreamingQuery =
-    batchSink(stream, checkpoint) { (batch, id) =>
-      applyReservoirBatch(batch, idCol, groupCol, weightCol, n,
-        partialsPath, id, salt)
-    }
-
-  /** One micro-batch's reservoir partial — separated so the replay
-    * contract is directly testable: applying the same batch twice leaves
-    * one copy.
-    */
-  def applyReservoirBatch(batch: DataFrame, idCol: String, groupCol: String,
-                          weightCol: String, n: Int, partialsPath: String,
-                          id: Long, salt: String = "es"): Unit =
-    landBatch(batch.sparkSession, s"$partialsPath/batch$id")(
-      graft.ops.Sampling.prioritySamplePerGroup(batch, idCol, groupCol,
-          weightCol, n, salt)
-        .drop("rank")) // rank is a property of the MERGED reservoir
+  def applyPartialsBatch(batch: DataFrame, partialsPath: String, id: Long)
+                        (partial: DataFrame => DataFrame): Unit =
+    landBatch(batch.sparkSession, s"$partialsPath/batch$id")(partial(batch))
 
   /** The current reservoir: per-group top-n over the accumulated batch
     * partials ([[graft.ops.Sampling.reservoirMerge]]), with the same

@@ -83,6 +83,37 @@ class MonitorJobsSpec extends SparkSpec {
     }
   }
 
+  /** Write a per-group reference through `job` (first run, with
+    * `group_col`), then score it in the scalar form (no `group_col`):
+    * the failure it raises.
+    */
+  private def scoredWithoutGroupCol(job: graft.engine.EtlJob): Exception = {
+    import spark.implicits._
+    val root = java.nio.file.Files.createTempDirectory("graft_form").toString
+    val ref = (1 to 300).map(i => (s"g${i % 3}", (i % 50).toDouble))
+      .toDF("g", "v")
+    val cur = ref.select(col("g"), (col("v") + 5).as("v"))
+    val params = Map("value_col" -> "v", "ref_path" -> root)
+    assert(job.transform(Map("reference" -> ref, "current" -> cur), spark,
+      params + ("group_col" -> "g")).count() > 0)
+    // a later run that forgot group_col must not score the slices as
+    // one pooled distribution
+    intercept[Exception](job.transform(Map("current" -> cur), spark,
+      params).collect())
+  }
+
+  test("a per-group KS reference scored without group_col fails loudly " +
+      "and names group_col") {
+    val e = scoredWithoutGroupCol(new KsFromReferenceJob)
+    assert(e.getMessage.contains("group_col"), e.getMessage)
+  }
+
+  test("a per-group PSI reference scored without group_col fails loudly " +
+      "and names group_col") {
+    val e = scoredWithoutGroupCol(new PsiFromReferenceJob)
+    assert(e.getMessage.contains("group_col"), e.getMessage)
+  }
+
   test("compactIncrements runs from the manifest; a compacted sink " +
       "replays a crashed batch identically (dir-identity contract)") {
     import spark.implicits._
@@ -98,7 +129,7 @@ class MonitorJobsSpec extends SparkSpec {
     assert(files(0) === 1 && files(1) === 1 && files(2) === 3)
     // dir identity preserved: a crashed micro-batch replay
     // (delete-and-rewrite keyed on the batch dir — the writeIncrement /
-    // psiDriftSink contract) targets the SAME dir and converges to the
+    // partialsSink contract) targets the SAME dir and converges to the
     // same content, compacted or not
     val before = spark.read.parquet(s"$root/batch0")
       .as[Double].collect().sorted.toSeq

@@ -410,7 +410,7 @@ class StatsAnalyticsSpec extends SparkSpec {
     val feeds = Seq(
       cur.filter(col("v") <= 400), cur.filter(col("v") > 800),
       cur.filter(col("v") > 400 && col("v") <= 800))
-      .map(f => Stats.psiCurrentPartial(spark, dir, f, "v"))
+      .map(f => Stats.psiCurrentPartial(f, "v", Stats.loadPsiEdges(spark, dir)))
     assert(rows(Stats.psiFromPartials(spark, dir,
       feeds.reduce(_.unionByName(_)))) === full)
     assert(rows(Stats.psiFromPartials(spark, dir,
@@ -463,14 +463,15 @@ class StatsAnalyticsSpec extends SparkSpec {
       .orderBy("group", "bucket").collect().map(_.toSeq).toSeq
     val ksFull = Stats.ksByGroup(ref, cur, "g", "v", buckets = 8)
       .orderBy("group").collect().map(_.toSeq).toSeq
-    Stats.writePsiReferenceByGroup(ref, "g", "v", s"$dir/psiref", bins = 5)
-    Stats.writeKsReferenceByGroup(ref, "g", "v", s"$dir/ksref")
+    Stats.writePsiReference(ref, "v", s"$dir/psiref", bins = 5,
+      groupCol = Some("g"))
+    Stats.writeKsReference(ref, "v", s"$dir/ksref", Some("g"))
     def psiTick(c: org.apache.spark.sql.DataFrame) =
-      Stats.psiByGroupFromReference(spark, s"$dir/psiref", c, "g", "v")
+      Stats.psiFromReference(spark, s"$dir/psiref", c, "v", Some("g"))
         .orderBy("group", "bucket").collect().map(_.toSeq).toSeq
     def ksTick(c: org.apache.spark.sql.DataFrame) =
-      Stats.ksByGroupFromReference(spark, s"$dir/ksref", c, "g", "v",
-        buckets = 8).orderBy("group").collect().map(_.toSeq).toSeq
+      Stats.ksFromReference(spark, s"$dir/ksref", c, "v",
+        buckets = 8, groupCol = Some("g")).orderBy("group").collect().map(_.toSeq).toSeq
     assert(psiTick(cur) === psiFull)
     assert(ksTick(cur) === ksFull)
     // POISON the source the reference was profiled from: if any tick
@@ -482,24 +483,24 @@ class StatsAnalyticsSpec extends SparkSpec {
     assert(ksTick(cur) === ksFull, "ks tick read the poisoned corpus")
     // split feeds merge order-free
     val feeds = Seq(cur.filter(col("v") <= 50), cur.filter(col("v") > 50))
-    val psiParts = feeds.map(f =>
-      Stats.psiByGroupCurrentPartial(spark, s"$dir/psiref", f, "g", "v"))
-    assert(Stats.psiByGroupFromPartials(spark, s"$dir/psiref",
+    val psiParts = feeds.map(f => Stats.psiCurrentPartial(f, "v",
+      Stats.loadPsiEdges(spark, s"$dir/psiref"), Some("g")))
+    assert(Stats.psiFromPartials(spark, s"$dir/psiref",
         psiParts.reverse.reduce(_.unionByName(_)))
       .orderBy("group", "bucket").collect().map(_.toSeq).toSeq === psiFull)
-    val ksParts = feeds.map(f => Stats.ksByGroupCurrentPartial(f, "g", "v"))
-    assert(Stats.ksByGroupFromPartials(spark, s"$dir/ksref",
+    val ksParts = feeds.map(f => Stats.ksCurrentPartial(f, "v", Some("g")))
+    assert(Stats.ksFromPartials(spark, s"$dir/ksref",
         ksParts.reverse.reduce(_.unionByName(_)), buckets = 8)
       .orderBy("group").collect().map(_.toSeq).toSeq === ksFull)
     // empty current: the per-slice zero-total guard
-    assert(Stats.psiByGroupFromReference(spark, s"$dir/psiref",
-      cur.filter(lit(false)), "g", "v").isEmpty)
-    assert(Stats.ksByGroupFromReference(spark, s"$dir/ksref",
-      cur.filter(lit(false)), "g", "v").isEmpty)
+    assert(Stats.psiFromReference(spark, s"$dir/psiref",
+      cur.filter(lit(false)), "v", Some("g")).isEmpty)
+    assert(Stats.ksFromReference(spark, s"$dir/ksref",
+      cur.filter(lit(false)), "v", groupCol = Some("g")).isEmpty)
     // a group with no stored baseline is absent from the tick
     val withNew = cur.unionByName(Seq(("brand_new", 1.0)).toDF("g", "v"))
-    assert(Stats.psiByGroupFromReference(spark, s"$dir/psiref",
-        withNew, "g", "v")
+    assert(Stats.psiFromReference(spark, s"$dir/psiref",
+        withNew, "v", Some("g"))
       .select("group").distinct().collect().map(_.getString(0)).toSet
       === Set("a", "b"))
   }

@@ -287,7 +287,7 @@ class RandomizedInvariantsSpec extends SparkSpec {
       val shuffled = r2.shuffle(rows)
       val nBatches = 2 + r2.nextInt(4)
       // each random batch contracts to its own per-group top-n (exactly
-      // what applyReservoirBatch lands), then reservoirMerge folds them —
+      // what Sampling.reservoirPartial lands), then reservoirMerge folds them —
       // the deterministic E-S key makes top-n associative, so ANY split
       // must reproduce the one-shot answer bit for bit
       val partials = shuffled.grouped(

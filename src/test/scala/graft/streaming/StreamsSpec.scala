@@ -1,11 +1,14 @@
 package graft.streaming
 
 import graft.SparkSpec
+import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.util.QueryExecutionListener
 import java.sql.Timestamp
 
-class StreamsSpec extends SparkSpec {
+class StreamsSpec extends SparkSpec with AdaptiveSparkPlanHelper {
 
   test("windowedAgg: watermarked tumbling-window counts over a memory stream") {
     implicit val sqlCtx = spark.sqlContext
@@ -144,14 +147,16 @@ class StreamsSpec extends SparkSpec {
       .select("id", "grp", "w", "key_micro", "rank")
       .collect().map(_.toSeq).sortBy(_.toString)
     // three disjoint chunks through the sink's per-batch body
+    def partial(b: org.apache.spark.sql.DataFrame) =
+      graft.ops.Sampling.reservoirPartial(b, "id", "grp", "w", n = 5)
     (0 until 3).foreach { b =>
-      Streams.applyReservoirBatch(docs.filter(col("id") % 3 === b),
-        "id", "grp", "w", n = 5, s"$out/p", b.toLong)
+      Streams.applyPartialsBatch(docs.filter(col("id") % 3 === b),
+        s"$out/p", b.toLong)(partial)
     }
     // at-least-once replay of batch 1: the delete-first contract plus the
     // largest-key-per-id collapse must leave the reservoir unchanged
-    Streams.applyReservoirBatch(docs.filter(col("id") % 3 === 1),
-      "id", "grp", "w", n = 5, s"$out/p", 1L)
+    Streams.applyPartialsBatch(docs.filter(col("id") % 3 === 1),
+      s"$out/p", 1L)(partial)
     val merged = Streams.loadReservoir(spark, s"$out/p", "id", "grp", n = 5)
       .select("id", "grp", "w", "key_micro", "rank")
       .collect().map(_.toSeq).sortBy(_.toString)
@@ -250,8 +255,9 @@ class StreamsSpec extends SparkSpec {
       .coalesce(1).write.mode("append").parquet(s"$dir/feed"))
     val stream = spark.readStream.schema("v DOUBLE")
       .option("maxFilesPerTrigger", "1").parquet(s"$dir/feed")
-    val q = Streams.psiDriftSink(stream, s"$dir/ref", "v",
-      s"$dir/partials", s"$dir/ckpt")
+    val edges = Stats.loadPsiEdges(spark, s"$dir/ref")
+    val q = Streams.partialsSink(stream, s"$dir/partials", s"$dir/ckpt")(
+      Stats.psiCurrentPartial(_, "v", edges))
     try q.processAllAvailable() finally q.stop()
     def score() = Stats.psiFromPartials(spark, s"$dir/ref",
         spark.read.parquet(s"$dir/partials/batch*"))
@@ -261,10 +267,10 @@ class StreamsSpec extends SparkSpec {
     assert(score() === batchScore)
     // failure-before-checkpoint-commit replays a batch id: the partial
     // is rewritten, never double-counted
-    Streams.applyPsiDriftBatch(cur.limit(100), s"$dir/ref", "v",
-      s"$dir/partials", id = 0L)
-    Streams.applyPsiDriftBatch(cur.limit(100), s"$dir/ref", "v",
-      s"$dir/partials", id = 0L)
+    Streams.applyPartialsBatch(cur.limit(100), s"$dir/partials", id = 0L)(
+      Stats.psiCurrentPartial(_, "v", edges))
+    Streams.applyPartialsBatch(cur.limit(100), s"$dir/partials", id = 0L)(
+      Stats.psiCurrentPartial(_, "v", edges))
     val n0 = spark.read.parquet(s"$dir/partials/batch0")
       .agg(sum("n_cur")).head().getLong(0)
     assert(n0 === 100L)
@@ -283,7 +289,8 @@ class StreamsSpec extends SparkSpec {
       .coalesce(1).write.mode("append").parquet(s"$dir/feed"))
     val stream = spark.readStream.schema("v DOUBLE")
       .option("maxFilesPerTrigger", "1").parquet(s"$dir/feed")
-    val q = Streams.ksDriftSink(stream, "v", s"$dir/partials", s"$dir/ckpt")
+    val q = Streams.partialsSink(stream, s"$dir/partials", s"$dir/ckpt")(
+      Stats.ksCurrentPartial(_, "v"))
     try q.processAllAvailable() finally q.stop()
     def score() = Stats.ksFromPartials(spark, s"$dir/ref",
         spark.read.parquet(s"$dir/partials/batch*"), buckets = 16)
@@ -293,11 +300,75 @@ class StreamsSpec extends SparkSpec {
     assert(score() === batchScore)
     // failure-before-checkpoint-commit replays a batch id: the partial
     // is rewritten, never double-counted
-    Streams.applyKsDriftBatch(cur.limit(100), "v", s"$dir/partials", id = 0L)
-    Streams.applyKsDriftBatch(cur.limit(100), "v", s"$dir/partials", id = 0L)
+    Streams.applyPartialsBatch(cur.limit(100), s"$dir/partials", id = 0L)(
+      Stats.ksCurrentPartial(_, "v"))
+    Streams.applyPartialsBatch(cur.limit(100), s"$dir/partials", id = 0L)(
+      Stats.ksCurrentPartial(_, "v"))
     val n0 = spark.read.parquet(s"$dir/partials/batch0")
       .agg(sum("n_cur")).head().getLong(0)
     assert(n0 === 100L)
+  }
+
+  /** File scans under `dir` over every action `body` runs — including
+    * a stream's micro-batches, whose cloned session inherits listeners
+    * registered before the query starts. Listener events arrive async
+    * but FIFO, so a sentinel action posted last proves body's events
+    * were delivered.
+    */
+  private def scansUnder(dir: String)(body: => Unit): Int = {
+    import spark.implicits._
+    val n = new java.util.concurrent.atomic.AtomicInteger()
+    @volatile var sentinelSeen = false
+    val sentinelCol = "refscan_sentinel"
+    val l = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution,
+                             durationNs: Long): Unit =
+        if (qe.analyzed.toString.contains(sentinelCol)) sentinelSeen = true
+        else n.addAndGet(collectWithSubqueries(qe.executedPlan) {
+          case s: FileSourceScanExec => s.relation.location.rootPaths
+        }.flatten.count(_.toString.contains(dir)))
+      override def onFailure(funcName: String, qe: QueryExecution,
+                             error: Exception): Unit = ()
+    }
+    spark.listenerManager.register(l)
+    try {
+      body
+      Seq(1).toDF(sentinelCol).count()
+      val deadline = System.nanoTime + 30L * 1000 * 1000 * 1000
+      while (!sentinelSeen && System.nanoTime < deadline) Thread.sleep(10)
+      assert(sentinelSeen, "listener never delivered the sentinel action")
+      n.get()
+    } finally spark.listenerManager.unregister(l)
+  }
+
+  test("a PSI partials drain loads the reference once: no micro-batch " +
+      "scans <ref>/edges or <ref>/buckets (scalar and per-group)") {
+    import spark.implicits._
+    import graft.ops.Stats
+    val dir = java.nio.file.Files.createTempDirectory("graft_psiload").toString
+    val ref = (1 to 900).map(i => (if (i % 3 == 0) "a" else "b",
+      i.toDouble)).toDF("g", "v")
+    (0 until 3).foreach(i => ref.select(col("g"), (col("v") + 40).as("v"))
+      .filter(pmod(col("v").cast("long"), lit(3)) === i)
+      .coalesce(1).write.mode("append").parquet(s"$dir/feed"))
+    for ((form, g) <- Seq("scalar" -> None, "by_group" -> Some("g"))) {
+      val refDir = s"$dir/ref_$form"
+      Stats.writePsiReference(ref, "v", refDir, bins = 5, groupCol = g)
+      val edges = Stats.loadPsiEdges(spark, refDir) // once per drain
+      val stream = spark.readStream.schema("g STRING, v DOUBLE")
+        .option("maxFilesPerTrigger", "1").parquet(s"$dir/feed")
+      val drained = scansUnder(refDir) {
+        val q = Streams.partialsSink(stream, s"$dir/p_$form",
+          s"$dir/ckpt_$form")(Stats.psiCurrentPartial(_, "v", edges, g))
+        try q.processAllAvailable() finally q.stop()
+      }
+      assert((0 until 3).forall(b => new java.io.File(
+        s"$dir/p_$form/batch$b").isDirectory), s"$form: 3 batches landed")
+      assert(drained === 0, s"$form: micro-batches read the reference")
+      // the listener does see reference reads: scoring scans buckets
+      assert(scansUnder(refDir)(Stats.psiFromPartials(spark, refDir,
+        spark.read.parquet(s"$dir/p_$form/batch*")).collect(): Unit) > 0)
+    }
   }
 
   test("psiByGroupDriftSink / ksByGroupDriftSink: streamed per-group " +
@@ -310,41 +381,41 @@ class StreamsSpec extends SparkSpec {
       i.toDouble)).toDF("g", "v")
     val cur = (1 to 600).map(i => (if (i % 3 == 0) "a" else "b",
       i.toDouble * (if (i % 3 == 0) 1.3 else 1.0) + 40)).toDF("g", "v")
-    Stats.writePsiReferenceByGroup(ref, "g", "v", s"$dir/pref", bins = 5)
-    Stats.writeKsReferenceByGroup(ref, "g", "v", s"$dir/kref")
+    Stats.writePsiReference(ref, "v", s"$dir/pref", bins = 5,
+      groupCol = Some("g"))
+    Stats.writeKsReference(ref, "v", s"$dir/kref", Some("g"))
     (0 until 3).foreach(i => cur
       .filter(pmod(col("v").cast("long"), lit(3)) === i)
       .coalesce(1).write.mode("append").parquet(s"$dir/feed"))
     def stream = spark.readStream.schema("g STRING, v DOUBLE")
       .option("maxFilesPerTrigger", "1").parquet(s"$dir/feed")
-    val qp = Streams.psiByGroupDriftSink(stream, s"$dir/pref", "g", "v",
-      s"$dir/pp", s"$dir/pckpt")
+    val edges = Stats.loadPsiEdges(spark, s"$dir/pref")
+    def psiPartial(b: org.apache.spark.sql.DataFrame) =
+      Stats.psiCurrentPartial(b, "v", edges, Some("g"))
+    def ksPartial(b: org.apache.spark.sql.DataFrame) =
+      Stats.ksCurrentPartial(b, "v", Some("g"))
+    val qp = Streams.partialsSink(stream, s"$dir/pp", s"$dir/pckpt")(psiPartial)
     try qp.processAllAvailable() finally qp.stop()
-    val qk = Streams.ksByGroupDriftSink(stream, "g", "v",
-      s"$dir/kp", s"$dir/kckpt")
+    val qk = Streams.partialsSink(stream, s"$dir/kp", s"$dir/kckpt")(ksPartial)
     try qk.processAllAvailable() finally qk.stop()
     def canon(df: org.apache.spark.sql.DataFrame) =
       df.orderBy(df.columns.map(col): _*).collect().map(_.toSeq).toSeq
-    assert(canon(Stats.psiByGroupFromPartials(spark, s"$dir/pref",
+    assert(canon(Stats.psiFromPartials(spark, s"$dir/pref",
         spark.read.parquet(s"$dir/pp/batch*"))) ===
       canon(Stats.psiByGroup(ref, cur, "g", "v", bins = 5)),
       "streamed per-group PSI must equal the batch recompute")
-    assert(canon(Stats.ksByGroupFromPartials(spark, s"$dir/kref",
+    assert(canon(Stats.ksFromPartials(spark, s"$dir/kref",
         spark.read.parquet(s"$dir/kp/batch*"), buckets = 8)) ===
       canon(Stats.ksByGroup(ref, cur, "g", "v", buckets = 8)),
       "streamed per-group KS must equal the batch recompute")
     // failure-before-checkpoint-commit replays a batch id: partials are
     // rewritten, never double-counted
-    Streams.applyPsiByGroupDriftBatch(cur.limit(90), s"$dir/pref", "g", "v",
-      s"$dir/pp", id = 0L)
-    Streams.applyPsiByGroupDriftBatch(cur.limit(90), s"$dir/pref", "g", "v",
-      s"$dir/pp", id = 0L)
+    Streams.applyPartialsBatch(cur.limit(90), s"$dir/pp", id = 0L)(psiPartial)
+    Streams.applyPartialsBatch(cur.limit(90), s"$dir/pp", id = 0L)(psiPartial)
     assert(spark.read.parquet(s"$dir/pp/batch0")
       .agg(sum("n_cur")).head().getLong(0) === 90L)
-    Streams.applyKsByGroupDriftBatch(cur.limit(90), "g", "v",
-      s"$dir/kp", id = 0L)
-    Streams.applyKsByGroupDriftBatch(cur.limit(90), "g", "v",
-      s"$dir/kp", id = 0L)
+    Streams.applyPartialsBatch(cur.limit(90), s"$dir/kp", id = 0L)(ksPartial)
+    Streams.applyPartialsBatch(cur.limit(90), s"$dir/kp", id = 0L)(ksPartial)
     assert(spark.read.parquet(s"$dir/kp/batch0")
       .agg(sum("n_cur")).head().getLong(0) === 90L)
   }
