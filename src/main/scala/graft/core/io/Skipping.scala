@@ -3,7 +3,7 @@ package graft.core.io
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileSystem, Path}
 
 /** Planning-time file skipping over plain parquet directories — the
   * min/max-stats manifest a table format (Delta/Iceberg) carries, for
@@ -143,19 +143,27 @@ object Skipping {
     require(profiled.nonEmpty,
       s"none of ${cols.mkString(",")} has a skippable type")
     writeManifestSharded(spark, profileFiles(df, profiled, files),
-      manifestDir, files.size.toLong)
+      manifestDir, files.size.toLong, profiled)
   }
 
   /** SHARDED manifest layout: rows land in `shard=<k>` partition dirs,
     * `k = xxhash64(pathKey(file)) mod n` with `n` scaled to the file
     * count (1 shard for small datasets — today's layout, nested — up to
-    * 256 at listing scale) and pinned in a hidden `_shards` one-row
-    * parquet. Readers are unchanged (`spark.read.parquet(manifestDir)`
-    * discovers the partitions; the extra `shard` column is ignored);
-    * what changes is the TICK cost: [[appendStatsManifest]] rewrites
-    * only the shards whose membership changed, so a steady-state tick
-    * at 10⁵–10⁶ files costs ~(changed files / n)·|manifest| instead of
-    * a whole-manifest single-task rewrite.
+    * 256 at listing scale). A hidden `_meta.json` beside the shard dirs
+    * pins `n` and the sorted profiled `(column, family)` list; it is
+    * read and written through the Hadoop FS, so a tick learns both
+    * without a Spark job. The meta is written LAST, after every shard
+    * dir it describes: a manifest without it (a crash between the shard
+    * write and the meta write, or a manifest from before the meta — flat,
+    * or pinned by the old one-row `_shards` parquet) ticks as a legacy
+    * manifest and heals with one full rewrite. Readers are unchanged (`spark.read.parquet(
+    * manifestDir)` discovers the partitions; the extra `shard` column is
+    * ignored); this engine reads every manifest with the fixed
+    * [[manifestReadSchema]], so no read pays a schema-inference job.
+    * What the sharding buys is the TICK cost: [[appendStatsManifest]]
+    * rewrites only the shards whose membership changed, so a
+    * steady-state tick at 10⁵–10⁶ files costs ~(changed files /
+    * n)·|manifest| instead of a whole-manifest single-task rewrite.
     */
   /** Files per manifest shard — package-visible so specs can exercise
     * multi-shard layouts without writing thousands of files.
@@ -169,31 +177,92 @@ object Skipping {
     pmod(xxhash64(pathKeyCol(col("file"))), lit(numShards.toLong))
       .cast("int")
 
-  /** The pinned shard count, None for a legacy flat manifest. */
-  private def readManifestShards(spark: SparkSession,
-                                 manifestDir: String): Option[Int] = {
-    val p = new Path(s"$manifestDir/_shards")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) None
-    else Some(spark.read.parquet(p.toString).head().getInt(0))
-  }
-
-  private def writeManifestShardMeta(spark: SparkSession,
-                                     manifestDir: String, n: Int): Unit = {
+  /** The shards `files` hash into. The projection over a local relation
+    * folds to a LocalRelation at optimization (no `distinct`, which
+    * would not fold), so the hash runs on the driver without a job and
+    * stays the exact in-plan [[manifestShardCol]].
+    */
+  private def shardsOf(spark: SparkSession, files: Seq[String],
+                       numShards: Int): Seq[Int] = {
     import spark.implicits._
-    Seq(n).toDF("num_shards").coalesce(1)
-      .write.mode("overwrite").parquet(s"$manifestDir/_shards")
+    if (files.isEmpty) Nil
+    else files.toDF("file").select(manifestShardCol(numShards)).collect()
+      .map(_.getInt(0)).distinct.sorted.toSeq
   }
 
+  /** The manifest's pin: shard count and the profiled columns. */
+  private final case class ManifestMeta(shards: Int,
+                                        profiled: Seq[(String, String)])
+
+  private val metaFile = "_meta.json"
+  private lazy val json = new com.fasterxml.jackson.databind.ObjectMapper()
+
+  /** The pin, None when the meta is absent (or a torn write left it
+    * unreadable) — either way the manifest ticks as a legacy one.
+    */
+  private def readManifestMeta(fs: FileSystem,
+                               manifestDir: String): Option[ManifestMeta] =
+    try {
+      val in = fs.open(new Path(manifestDir, metaFile))
+      val tree = try json.readTree(in) finally in.close()
+      import scala.jdk.CollectionConverters._
+      Some(ManifestMeta(tree.path("shards").asInt(0),
+        tree.path("profiled").elements().asScala
+          .map(e => e.path(0).asText -> e.path(1).asText).toSeq))
+        .filter(m => m.shards > 0 && m.profiled.nonEmpty &&
+          m.profiled.forall { case (c, f) => c.nonEmpty && f.nonEmpty })
+    } catch {
+      case _: java.io.FileNotFoundException |
+           _: com.fasterxml.jackson.core.JacksonException => None
+    }
+
+  private def writeManifestMeta(fs: FileSystem, manifestDir: String,
+                                meta: ManifestMeta): Unit = {
+    val node = json.createObjectNode()
+    node.put("shards", meta.shards)
+    val cols = node.putArray("profiled")
+    meta.profiled.foreach { case (c, f) => cols.addArray().add(c).add(f) }
+    val out = fs.create(new Path(manifestDir, metaFile), true)
+    try out.write(json.writeValueAsBytes(node)) finally out.close()
+  }
+
+  /** The pinned shard count — the accessor specs assert the pin with. */
+  private[io] def pinnedShards(spark: SparkSession,
+                               manifestDir: String): Option[Int] =
+    readManifestMeta(new Path(manifestDir)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration), manifestDir)
+      .map(_.shards)
+
+  /** Land shard-tagged manifest rows under `dir`, a partition per
+    * shard; `shards` is how many shard dirs the rows fill and
+    * `profiledFiles` how many files were profiled into them. One shard
+    * skips the shuffle when its profiling is one footer task anyway
+    * ([[footerSlices]]): `coalesce(1)` pulls the exchange-free footer
+    * reads into the writing task, so a larger one-shard write (a build
+    * below 2·[[manifestFilesPerShard]] files) keeps its parallel reads
+    * and shuffles to one partition instead.
+    */
+  private def writeShards(spark: SparkSession, rows: DataFrame, shards: Int,
+                          dir: String, profiledFiles: Int): Unit =
+    (if (shards == 1 && footerSlices(spark, profiledFiles) == 1) rows.coalesce(1)
+     else rows.repartition(col("shard")))
+      .write.partitionBy("shard").mode("overwrite").parquet(dir)
+
+  /** Build write: shard data first, the meta last. Every listed file
+    * gets exactly one row per profiled column (the footer path emits
+    * one per column, the scan path fills rowless files), so the file
+    * count is the listing's — no read-back.
+    */
   private def writeManifestSharded(spark: SparkSession, rows: DataFrame,
-                                   manifestDir: String,
-                                   nFiles: Long): Long = {
+                                   manifestDir: String, nFiles: Long,
+                                   profiled: Seq[(String, String)]): Long = {
     val n = manifestShardsFor(nFiles)
-    rows.withColumn("shard", manifestShardCol(n))
-      .repartition(col("shard"))
-      .write.partitionBy("shard").mode("overwrite").parquet(manifestDir)
-    writeManifestShardMeta(spark, manifestDir, n)
-    spark.read.parquet(manifestDir).select("file").distinct().count()
+    writeShards(spark, rows.withColumn("shard", manifestShardCol(n)), n,
+      manifestDir, nFiles.toInt)
+    writeManifestMeta(new Path(manifestDir)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration), manifestDir,
+      ManifestMeta(n, profiled.distinct.sortBy(_._1)))
+    nFiles
   }
 
   final case class ManifestDelta(profiledFiles: Int, droppedFiles: Int,
@@ -242,7 +311,7 @@ object Skipping {
             "footers cannot profile it; use writeStatsManifest")
     }
     writeManifestSharded(spark, footerProfile(spark, files, profiled),
-      manifestDir, files.size.toLong)
+      manifestDir, files.size.toLong, profiled)
   }
 
   /** Distributed footer profiling over an explicit file list — the core
@@ -260,16 +329,20 @@ object Skipping {
     b.result()
   }
 
+  /** Tasks a footer pass over `nFiles` files runs: ≥16 footers per
+    * task (a footer read is ~ms–tens-of-ms; one task per file would be
+    * pure scheduling overhead), capped so a 1M-file listing still fans
+    * out across the cluster.
+    */
+  private def footerSlices(spark: SparkSession, nFiles: Int): Int =
+    math.min(math.max(nFiles / 16, 1),
+      math.max(spark.sparkContext.defaultParallelism * 8, 4096))
+
   private def footerProfile(spark: SparkSession, files: Seq[String],
                             profiled: Seq[(String, String)]): DataFrame = {
     val confEntries = hadoopConfEntries(spark)
-    // ≥16 footers per task (a footer read is ~ms–tens-of-ms; one task
-    // per file would be pure scheduling overhead), capped so a 1M-file
-    // listing still fans out across the cluster
-    val slices = math.min(math.max(files.size / 16, 1),
-      math.max(spark.sparkContext.defaultParallelism * 8, 4096))
     val rows = spark.sparkContext
-      .parallelize(files, slices)
+      .parallelize(files, footerSlices(spark, files.size))
       .mapPartitions { it =>
         // one Configuration rebuild per TASK, not per file — at 1M
         // files the per-file rebuild would dominate the footer reads
@@ -339,6 +412,15 @@ object Skipping {
     StructField("min_long", LongType), StructField("max_long", LongType),
     StructField("min_dbl", DoubleType), StructField("max_dbl", DoubleType),
     StructField("min_str", StringType), StructField("max_str", StringType)))
+
+  /** Every manifest read's schema: the rows plus the `shard` partition
+    * column (null on a legacy flat manifest). Fixed, so no read runs a
+    * schema-inference job.
+    */
+  private val manifestReadSchema = manifestSchema.add("shard", IntegerType)
+
+  private def readManifest(spark: SparkSession, manifestDir: String): DataFrame =
+    spark.read.schema(manifestReadSchema).parquet(manifestDir)
 
   /** One file's footer → manifest rows. Runs inside a task. */
   private def footerRows(file: String, profiled: Seq[(String, String)],
@@ -466,8 +548,14 @@ object Skipping {
     * This is the steady-state maintenance path: [[writeStatsManifest]]
     * rescans the whole directory (corpus-linear — the build cost), an
     * append tick costs ~the new files. Profiled columns and families
-    * are inherited from the manifest itself, so build and append can
-    * never diverge on what is indexed.
+    * are inherited from the manifest itself (its meta), so build and
+    * append can never diverge on what is indexed.
+    *
+    * Metadata never costs a Spark job: the pin and the profiled columns
+    * come from the meta, the new and vanished files' shards fold to a
+    * local relation, and the totals are counted on the driver. The
+    * jobs left are one exchange-free collect of the old file keys and
+    * the staged write itself.
     *
     * The tick lands PER-SHARD (see [[writeManifestSharded]]'s layout):
     * only shards whose membership changed — a new file's shard, a
@@ -477,101 +565,100 @@ object Skipping {
     * a reader sees is scanned, not skipped; a vanished file's stale row
     * is ignored — [[pruneFiles]] intersects with the disk listing), and
     * re-running the tick heals completely (missing shards read as
-    * unprofiled files → re-profiled into fresh). A legacy FLAT manifest
-    * (no `_shards` meta) migrates on its first tick with one full
-    * sharded rewrite behind a whole-dir staged swap.
+    * unprofiled files → re-profiled into fresh). The meta goes in LAST
+    * on every path: a manifest without meta ticks as legacy — a FLAT
+    * manifest from before sharding, one pinned by the old one-row
+    * `_shards` parquet, or a build cut between its shard write and its
+    * meta write — and gets one full sharded rewrite behind a whole-dir
+    * staged swap (which also drops an old `_shards`), even when no file
+    * changed.
     */
   def appendStatsManifest(spark: SparkSession, dataDir: String,
                           manifestDir: String): ManifestDelta = {
+    val fs = new Path(manifestDir)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
     val onDisk = listParquet(spark, dataDir)
     val diskKeys = onDisk.map(pathKey).toSet
-    val manifest = spark.read.parquet(manifestDir).drop("shard")
-    val profiled = manifest.select("column", "family").distinct()
-      .collect().map(r => r.getString(0) -> r.getString(1)).toSeq.sortBy(_._1)
-    val oldKeys = manifest.select("file").distinct()
-      .collect().map(r => pathKey(r.getString(0))).toSet
+    val manifest = readManifest(spark, manifestDir)
+    val meta = readManifestMeta(fs, manifestDir)
+    val profiled = meta.map(_.profiled).getOrElse(
+      manifest.select("column", "family").distinct()
+        .collect().map(r => r.getString(0) -> r.getString(1)).toSeq.sortBy(_._1))
+    require(profiled.nonEmpty, s"manifest $manifestDir profiles no column")
+    // every file has exactly one row per profiled column: one column's
+    // rows are the file list, collected without an exchange
+    val oldKeys = manifest.filter(col("column") === profiled.head._1)
+      .select("file").collect().map(r => pathKey(r.getString(0))).toSet
     val newFiles = onDisk.filterNot(f => oldKeys.contains(pathKey(f)))
-    val dropped = (oldKeys -- diskKeys).size
-    if (newFiles.isEmpty && dropped == 0)
-      return ManifestDelta(0, 0, oldKeys.size.toLong)
-    // scheme-normalize in-plan so kept-row matching never collects the
-    // (files × columns) manifest to the driver
+    val droppedKeys = (oldKeys -- diskKeys).toSeq.sorted
+    val delta = ManifestDelta(newFiles.size, droppedKeys.size,
+      (oldKeys.size - droppedKeys.size + newFiles.size).toLong)
+    if (newFiles.isEmpty && droppedKeys.isEmpty && meta.nonEmpty) return delta
+    // vanished files' rows drop in-plan, matched scheme-normalized
+    // against the vanished keys as a local relation (no key list in the
+    // plan's expressions, however many files vanished)
     import spark.implicits._
-    // no broadcast hint: AQE broadcasts the key list while it is small
-    // and degrades to a shuffle semi-join at listing scale
-    val keep = manifest.join(
-      diskKeys.toSeq.toDF("_k"), pathKeyCol(col("file")) === col("_k"),
-      "left_semi")
+    val keep =
+      if (droppedKeys.isEmpty) manifest
+      else manifest.join(droppedKeys.toDF("_k"),
+        pathKeyCol(col("file")) === col("_k"), "left_anti")
     // delta profiling: footers when every inherited column supports
     // them (per-new-file metadata cost), the row scan otherwise
     // (hive-partition columns live in dir names, not footers)
     val fresh =
-      if (newFiles.isEmpty) keep.limit(0)
+      if (newFiles.isEmpty) None
       else if (!profiled.exists { case (c, _) =>
           newFiles.exists(_.contains(s"/$c=")) })
-        footerProfile(spark, newFiles, profiled)
-      else profileFiles(spark.read
+        Some(footerProfile(spark, newFiles, profiled))
+      else Some(profileFiles(spark.read
         // schema from the FULL listed file set (a plain dataDir read
         // would miss files living in inc_*/batch* subdirs)
         .schema(spark.read.option("basePath", dataDir)
           .parquet(onDisk: _*).schema)
         .option("basePath", dataDir) // nested layouts: keep partition cols
-        .parquet(newFiles: _*), profiled, newFiles)
+        .parquet(newFiles: _*), profiled, newFiles))
+    def withFresh(rows: DataFrame, n: Int): DataFrame =
+      fresh.fold(rows)(f => rows.unionByName(
+        f.withColumn("shard", manifestShardCol(n))))
     val staged = manifestDir.stripSuffix("/") + "_staged"
-    val fs = new Path(manifestDir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
     fs.delete(new Path(staged), true)
     val target = manifestShardsFor(onDisk.size.toLong)
-    val pinned = readManifestShards(spark, manifestDir)
+    val pinned = meta.map(_.shards)
     if (pinned.forall(n => target > 4 * n || n > 4 * target)) {
       // full sharded rewrite, staged then whole-dir swapped (the input
       // plan reads the old manifest — never overwrite a dir a pending
-      // plan still reads): a legacy FLAT manifest's migration tick, or
-      // a RE-SHARD when the pinned count has drifted 4× from the file
+      // plan still reads): an unpinned manifest's migration/heal tick,
+      // or a RE-SHARD when the pinned count has drifted 4× from the file
       // count's target (a manifest built small would otherwise stay
       // 1-sharded forever as its dataset grows)
-      keep.unionByName(fresh).withColumn("shard", manifestShardCol(target))
-        .repartition(col("shard"))
-        .write.partitionBy("shard").mode("overwrite").parquet(staged)
-      writeManifestShardMeta(spark, staged, target)
+      writeShards(spark, withFresh(
+        keep.withColumn("shard", manifestShardCol(target)), target),
+        target, staged, newFiles.size)
+      writeManifestMeta(fs, staged, ManifestMeta(target, profiled))
       fs.delete(new Path(manifestDir), true)
       require(fs.rename(new Path(staged), new Path(manifestDir)),
         s"manifest swap failed: $staged -> $manifestDir")
     } else {
       val n = pinned.get
-        // shards touched by this tick: every new file's shard plus every
-        // vanished file's shard — derived in-plan (names only, no
-        // profiling run) so the driver never replicates the hash
-        val freshShards =
-          if (newFiles.isEmpty) Set.empty[Int]
-          else newFiles.toDF("file").select(manifestShardCol(n).as("s"))
-            .distinct().collect().map(_.getInt(0)).toSet
-        val droppedShards =
-          if (dropped == 0) Set.empty[Int]
-          else manifest.join(diskKeys.toSeq.toDF("_k"),
-              pathKeyCol(col("file")) === col("_k"), "left_anti")
-            .select(manifestShardCol(n).as("s"))
-            .distinct().collect().map(_.getInt(0)).toSet
-        val affected = (freshShards ++ droppedShards).toSeq.sorted
-        keep.withColumn("shard", manifestShardCol(n))
-          .filter(col("shard").isin(affected: _*))
-          .unionByName(fresh.withColumn("shard", manifestShardCol(n)))
-          .repartition(col("shard"))
-          .write.partitionBy("shard").mode("overwrite").parquet(staged)
-        affected.foreach { k =>
-          val src = new Path(staged, s"shard=$k")
-          val dst = new Path(manifestDir, s"shard=$k")
-          fs.delete(dst, true)
-          // a shard whose every file vanished stages no dir — the
-          // deletion above IS its update
-          if (fs.exists(src))
-            require(fs.rename(src, dst),
-              s"manifest shard swap failed: $src -> $dst")
-        }
-        fs.delete(new Path(staged), true)
+      // shards touched by this tick: every new file's shard plus every
+      // vanished file's shard; kept rows come from those shard dirs only
+      val affected = shardsOf(spark, newFiles ++ droppedKeys, n)
+      writeShards(spark,
+        withFresh(keep.filter(col("shard").isin(affected: _*)), n),
+        affected.size, staged, newFiles.size)
+      affected.foreach { k =>
+        val src = new Path(staged, s"shard=$k")
+        val dst = new Path(manifestDir, s"shard=$k")
+        fs.delete(dst, true)
+        // a shard whose every file vanished stages no dir — the
+        // deletion above IS its update
+        if (fs.exists(src))
+          require(fs.rename(src, dst),
+            s"manifest shard swap failed: $src -> $dst")
+      }
+      fs.delete(new Path(staged), true)
     }
-    ManifestDelta(newFiles.size, dropped,
-      spark.read.parquet(manifestDir).select("file").distinct().count())
+    delta
   }
 
   /** Shared profiling core: per-file aggregation (ONE scan regardless of
@@ -685,7 +772,7 @@ object Skipping {
     // FileSystem.listStatus (`file:/…`) — compare scheme-stripped paths,
     // read through the disk listing's spelling
     val onDisk = listParquet(spark, dataDir)
-    val manifest = spark.read.parquet(manifestDir)
+    val manifest = readManifest(spark, manifestDir)
     // a file is excluded if ANY predicate proves it cannot hold a match.
     // ts-family columns compare string bounds PREFIX-SAFELY: the row
     // filter casts "1995-06-02" to the midnight timestamp (inclusive),
@@ -749,9 +836,7 @@ object Skipping {
                              probes: Seq[(String, Seq[Any])])
       : Seq[String] = {
     val confEntries = hadoopConfEntries(spark)
-    val slices = math.min(math.max(files.size / 16, 1),
-      math.max(spark.sparkContext.defaultParallelism * 8, 4096))
-    spark.sparkContext.parallelize(files, slices)
+    spark.sparkContext.parallelize(files, footerSlices(spark, files.size))
       .mapPartitions { it =>
         val conf = new org.apache.hadoop.conf.Configuration(false)
         confEntries.foreach { case (k, v) => conf.set(k, v) }

@@ -1,6 +1,7 @@
 package graft.core.io
 
-import org.apache.spark.sql.{DataFrame, SaveMode}
+import org.apache.spark.sql.{DataFrame, DataFrameWriter, Observation, Row, SaveMode}
+import org.apache.spark.sql.functions.{count, lit}
 import graft.core.model.{DatasetSpec, JobSpec}
 
 /** Format-dispatched dataset writer (reference save_output,
@@ -22,7 +23,10 @@ import graft.core.model.{DatasetSpec, JobSpec}
   */
 object Writer {
 
-  final case class Written(path: String, mode: String)
+  /** `rows` is the count a file sink's write observed; None for jdbc and
+    * warc sinks (callers recount) or if the observation never arrived.
+    */
+  final case class Written(path: String, mode: String, rows: Option[Long])
 
   /** The single definition of a write's target path — `inc_<now>_<period>`
     * subfolder for `no_schema` incremental jobs, the expanded base
@@ -53,19 +57,31 @@ object Writer {
       if (incremental || partitionCols.nonEmpty) SaveMode.Append
       else SaveMode.ErrorIfExists
     val repartitioned = job.repartition.map(df.repartition(_)).getOrElse(df)
-    var w = repartitioned.write.mode(mode).options(out.saveOptions)
-    if (partitionCols.nonEmpty) w = w.partitionBy(partitionCols: _*)
+    // a file sink lands through a DataFrameWriter action whose completion
+    // event carries a `Dataset.observe` count of the written frame: the
+    // landed rows without a read-back
+    def landFile(save: DataFrameWriter[Row] => Unit): Option[Long] = {
+      val landed = Observation()
+      var w = repartitioned.observe(landed, count(lit(1)).as("rows"))
+        .write.mode(mode).options(out.saveOptions)
+      if (partitionCols.nonEmpty) w = w.partitionBy(partitionCols: _*)
+      save(w)
+      scala.util.Try(scala.concurrent.Await.result(landed.future,
+        scala.concurrent.duration.Duration(60, "s"))).toOption
+        .map(_.getAs[Long]("rows"))
+    }
     var actualMode = mode
-    out.format match {
-      case "csv" => w.option("header", "true").csv(path)
-      case "parquet" => w.parquet(path)
-      case "orc" => w.orc(path)
-      case "json" => w.json(path)
-      case "text" => w.text(path)
+    val rows = out.format match {
+      case "csv" => landFile(_.option("header", "true").csv(path))
+      case "parquet" => landFile(_.parquet(path))
+      case "orc" => landFile(_.orc(path))
+      case "json" => landFile(_.json(path))
+      case "text" => landFile(_.text(path))
       case "warc" =>
         require(partitionCols.isEmpty, "warc sink does not support partitionBy")
         graft.sources.Warc.write(repartitioned, graft.sources.Warc.WarcCols(),
           path, mode = if (mode == SaveMode.Append) "append" else "errorifexists")
+        None
       // append only for genuinely incremental jobs, error-if-exists
       // otherwise — a re-run of a completed job must not silently drop +
       // recreate the target table, and a non-incremental PARTITIONED job
@@ -77,9 +93,10 @@ object Writer {
         repartitioned.write.format("jdbc")
           .options(graft.sources.Jdbc.expandPreset(out.saveOptions))
           .mode(actualMode).save()
+        None
       case other => sys.error(s"unsupported output format: $other")
     }
-    Written(path, actualMode.toString)
+    Written(path, actualMode.toString, rows)
   }
 
   /** Schema sidecar: dump the output schema as JSON next to the data

@@ -21,7 +21,12 @@ trait EtlJob {
   */
 object Etl {
 
-  final case class Result(df: DataFrame, writtenPath: Option[String])
+  /** `writtenRows` is the count the write observed ([[Writer.Written]]);
+    * None when nothing was saved or the sink observes no count — callers
+    * recount `df` then.
+    */
+  final case class Result(df: DataFrame, writtenPath: Option[String],
+                          writtenRows: Option[Long] = None)
 
   /** Resolve a job's transform: inline SQL, SQL file (with param header),
     * registered class, or identity (single-input copy job).
@@ -130,7 +135,7 @@ object Etl {
                 graft.core.io.PathTemplating.expandNow(mf, now),
                 o.statsCols): Unit
             }
-            Result(out, Some(written.path))
+            Result(out, Some(written.path), written.rows)
           } else Result(out, None)
         } finally if (multiAction) { out.unpersist(); () }
       case None => Result(out, None)

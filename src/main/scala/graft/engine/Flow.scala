@@ -171,22 +171,13 @@ object MultiPass {
           now: String = Etl.defaultNow(), maxPeriods: Int = 1000,
           stopOnEmpty: Boolean = false, save: Boolean = true): Seq[PassResult] = {
     val ps = PeriodBuilder.periods(first, until).take(maxPeriods)
-    // Count the materialized increment where one exists (re-counting
-    // res.df recomputes the whole lineage). Parquet-only: a zero-row
-    // csv/json increment has no schema to read back; a partitioned sink's
-    // written path is the cumulative base; jdbc has no readable path —
-    // all of those recount the frame instead.
-    val outSpec = job.output.map(o => graft.core.model.Params.resolve(o, job.params))
-    val countableFile = outSpec.exists(_.format == "parquet") &&
-      job.incrementalMode != "partitioned"
     val out = collection.mutable.ArrayBuffer.empty[PassResult]
     ps.iterator.takeWhile { _ => !stopOnEmpty || out.lastOption.forall(_.rows > 0) }
       .foreach { p =>
         val res = Etl.runJob(spark, job, period = Some(p), now = now, save = save)
-        val rows = res.writtenPath match {
-          case Some(path) if countableFile => spark.read.parquet(path).count()
-          case _ => res.df.count()
-        }
+        // the count the write observed; recounting res.df recomputes the
+        // whole lineage, so only sinks without an observed count pay it
+        val rows = res.writtenRows.getOrElse(res.df.count())
         out += PassResult(p, rows, res.writtenPath)
       }
     out.toSeq

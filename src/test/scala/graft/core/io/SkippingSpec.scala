@@ -554,7 +554,7 @@ class SkippingSpec extends SparkSpec {
       // non-empty shards, and with 40 random part-file names hashed
       // into 10 shards, one shard is empty in ~15% of runs (10·0.9⁴⁰)
       // — asserting 10 dirs made this spec a coin flip
-      assert(spark.read.parquet(s"$mf/_shards").head().getInt(0) === 10,
+      assert(Skipping.pinnedShards(spark, mf) === Some(10),
         "40 files / 4 -> 10 shards pinned")
       assert(shards0.size >= 7 && shards0.size <= 10,
         s"shard dirs = non-empty shards only: $shards0")
@@ -587,16 +587,16 @@ class SkippingSpec extends SparkSpec {
         .write.mode("append").parquet(data)
       val dm = Skipping.appendStatsManifest(spark, data, flat)
       assert(dm.profiledFiles === 1)
-      assert(fs.exists(new org.apache.hadoop.fs.Path(s"$flat/_shards")),
+      assert(Skipping.pinnedShards(spark, flat).nonEmpty,
         "migration tick must pin the shard count")
       assert(shardFiles(flat).nonEmpty)
-      assert(spark.read.parquet(s"$flat/_shards").head().getInt(0) === 10)
+      assert(Skipping.pinnedShards(spark, flat) === Some(10))
       // RE-SHARD: pinned 10 vs a 4x-drifted target forces a full rewrite
       Skipping.manifestFilesPerShard = 1L // target = 43 > 4 * 10
       corpus().filter(col("id") === 7).coalesce(1)
         .write.mode("append").parquet(data)
       Skipping.appendStatsManifest(spark, data, mf)
-      assert(spark.read.parquet(s"$mf/_shards").head().getInt(0) === 44)
+      assert(Skipping.pinnedShards(spark, mf) === Some(44))
       val finalRead = Skipping.read(spark, data, mf,
         Seq(ColumnRange("id", Some(0L), Some(999L))))
       assert(finalRead.count() === corpus().count() + 10 + 10 + 1 + 1)

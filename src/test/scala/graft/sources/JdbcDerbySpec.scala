@@ -170,4 +170,25 @@ class JdbcDerbySpec extends SparkSpec {
     val back = Jdbc.read(spark, Jdbc.fullTableOptions(url, "ORDERS_APPEND", driverOpt))
     assert(back.count() == orders.count())
   }
+
+  test("a jdbc sink's period is recounted, never awaited as an observation") {
+    val dir = Files.createTempDirectory("graft_jdbc_pass").toString
+    orders.write.parquet(s"$dir/orders")
+    val day = orders.select("day").orderBy("day").head().getString(0)
+    val job = JobSpec(name = "land_jdbc",
+      inputs = Map("o" -> DatasetSpec(path = s"$dir/orders", incField = Some("day"))),
+      output = Some(DatasetSpec(format = "jdbc", incField = Some("day"),
+        saveOptions = Map("url" -> url, "dbtable" -> "ORDERS_PASS")
+          ++ driverOpt ++ createTypes)),
+      sql = Some("SELECT o_orderkey, o_orderstatus, day FROM o"))
+    val d = java.time.LocalDate.parse(day)
+    val passes = graft.engine.MultiPass.run(spark, job, d, d, now = "r1")
+    val want = orders.filter(col("day") === day).count()
+    assert(want > 0 && passes.map(_.rows) === Seq(want))
+    val back = Jdbc.read(spark, Jdbc.fullTableOptions(url, "ORDERS_PASS", driverOpt))
+    assert(back.count() === want)
+    // no observation rides a jdbc write: nothing to wait for
+    val res = graft.engine.Etl.runJob(spark, job, period = Some(day), now = "r2")
+    assert(res.writtenRows === None)
+  }
 }
