@@ -13,8 +13,10 @@ object Maintenance {
   final case class Compacted(filesBefore: Int, filesAfter: Int, bytes: Long)
 
   /** Rewrite a parquet directory into ~`targetFileBytes` files: read,
-    * repartition to ceil(total/target), write to a sibling temp dir, then
-    * swap via rename. The swap is atomic on HDFS/local rename semantics;
+    * repartition to ceil(total/target), then swap the rewrite in through
+    * [[DirSwap]] (staged at `.<name>_compact_tmp`, the original moved
+    * aside to `.<name>_compact_old`, healed on the next open). The swap
+    * is atomic on HDFS/local rename semantics;
     * on object stores rename is copy+delete, so there is a visibility
     * window — run compaction when no reader races the swap (or use a
     * table format with atomic commits for that case).
@@ -26,23 +28,16 @@ object Maintenance {
                      targetFileBytes: Long = 128L * 1024 * 1024): Compacted = {
     val path = new Path(dir)
     val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    recoverOrphanedSwap(fs, path,
-      new Path(path.getParent, s".${path.getName}_compact_old"))
-    require(fs.exists(path), s"no dataset at $dir")
+    val swap = DirSwap.hidden(fs, path, "_compact")
+    require(swap.open(), s"no dataset at $dir")
     val files = fs.listStatus(path)
       .filter(st => st.isFile && st.getPath.getName.endsWith(".parquet"))
     require(files.nonEmpty, s"no parquet files directly under $dir " +
       "(partitioned layouts compact per partition directory)")
     val totalBytes = files.map(_.getLen).sum
     val n = math.max(1L, (totalBytes + targetFileBytes - 1) / targetFileBytes).toInt
-
-    val tmp = new Path(path.getParent, s".${path.getName}_compact_tmp")
-    val old = new Path(path.getParent, s".${path.getName}_compact_old")
-    fs.delete(tmp, true)
-    fs.delete(old, true)
-    spark.read.parquet(dir).repartition(n)
-      .write.mode(SaveMode.Overwrite).parquet(tmp.toString)
-    val after = carrySidecarsAndSwap(spark, fs, path, tmp, old)
+    val after = swap.replace(stageWithSidecars(spark, fs, path,
+      spark.read.parquet(dir).repartition(n)))
     Compacted(files.length, after, totalBytes)
   }
 
@@ -133,17 +128,16 @@ object Maintenance {
     IncrementsCompacted(dirs, before, after)
   }
 
-  /** Sidecar carry + atomic-ish swap shared by the compactors: copy every
-    * non-parquet sidecar (_schema.json, _git_info.json, ...) into `tmp`
-    * so the swap replaces data files only, then rename `path` aside and
-    * `tmp` into place (restoring on failure). Returns the post-swap
-    * parquet file count.
+  /** The compactors' stage step: write `rows` to the staged path, then
+    * copy every non-parquet sidecar (_schema.json, _git_info.json, ...)
+    * of `path` beside them, so the swap replaces data files only.
+    * Returns the staged parquet file count.
     */
-  private def carrySidecarsAndSwap(spark: SparkSession,
-                                   fs: org.apache.hadoop.fs.FileSystem,
-                                   path: Path, tmp: Path, old: Path): Int = {
-    val after = fs.listStatus(tmp)
-      .count(st => st.isFile && st.getPath.getName.endsWith(".parquet"))
+  private def stageWithSidecars(spark: SparkSession,
+                                fs: org.apache.hadoop.fs.FileSystem, path: Path,
+                                rows: org.apache.spark.sql.DataFrame)
+                               (tmp: Path): Int = {
+    rows.write.mode(SaveMode.Overwrite).parquet(tmp.toString)
     fs.listStatus(path)
       .filter(st => st.isFile && !st.getPath.getName.endsWith(".parquet")
         && st.getPath.getName != "_SUCCESS")
@@ -152,24 +146,9 @@ object Maintenance {
           fs, new Path(tmp, st.getPath.getName), false, true,
           spark.sparkContext.hadoopConfiguration)
       }
-    require(fs.rename(path, old), s"could not move $path aside")
-    if (!fs.rename(tmp, path)) {
-      fs.rename(old, path) // restore — compaction failed, data intact
-      sys.error(s"could not swap compacted data into $path; original restored")
-    }
-    fs.delete(old, true)
-    after
+    fs.listStatus(tmp)
+      .count(st => st.isFile && st.getPath.getName.endsWith(".parquet"))
   }
-
-  /** Crash recovery for the swap: a previous run may have died between
-    * [[carrySidecarsAndSwap]]'s two renames, leaving the ONLY surviving
-    * copy at the hidden `old` path — which dataset reads silently skip
-    * (dot-prefixed). Restore it before touching `path`.
-    */
-  private def recoverOrphanedSwap(fs: org.apache.hadoop.fs.FileSystem,
-                                  path: Path, old: Path): Unit =
-    if (!fs.exists(path) && fs.exists(old))
-      require(fs.rename(old, path), s"could not restore $path from $old")
 
   final case class ZorderCompacted(partition: String, filesBefore: Int,
                                    filesAfter: Int, maxOverlapBefore: Int,
@@ -214,26 +193,15 @@ object Maintenance {
     require(dims.nonEmpty, "compactZorder needs at least one dim column")
     val root = new Path(dir)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    recoverOrphanedSwap(fs, root,
-      new Path(root.getParent, s".${root.getName}_zcompact_old"))
-    require(fs.exists(root), s"no dataset at $dir")
-    // restore any PARTITION orphaned by a crashed swap first — its
-    // visible dir is gone, so the listing below would never find it
-    fs.listStatus(root)
-      .filter(st => st.isDirectory && st.getPath.getName.startsWith(".") &&
-        st.getPath.getName.endsWith("_zcompact_old"))
-      .foreach { st =>
-        val visible = new Path(root, st.getPath.getName
-          .stripPrefix(".").stripSuffix("_zcompact_old"))
-        recoverOrphanedSwap(fs, visible, st.getPath)
-      }
-    // hidden swap leftovers (.p=a_zcompact_tmp/_old) also contain '=' —
-    // only visible dirs are data partitions
-    val partDirs = fs.listStatus(root)
-      .filter(st => st.isDirectory && st.getPath.getName.contains("=") &&
-        !st.getPath.getName.startsWith(".") &&
-        !st.getPath.getName.startsWith("_"))
-      .map(_.getPath).sortBy(_.getName)
+    require(DirSwap.hidden(fs, root, "_zcompact").open(), s"no dataset at $dir")
+    // data partitions are the visible key=value dirs, plus any whose only
+    // copy a crashed swap left aside (its own swap heals it)
+    val orphan = "^\\.(.*=.*)_zcompact_old$".r
+    val partDirs = fs.listStatus(root).filter(_.isDirectory)
+      .map(_.getPath.getName).collect {
+        case orphan(p) => p
+        case p if isPartition(p) => p
+      }.distinct.sorted.map(new Path(root, _))
     val targets = if (partDirs.nonEmpty) partDirs.toSeq else Seq(root)
     val reports = targets.map(p =>
       compactZorderOne(spark, fs, p, dims, bits, targetFileBytes,
@@ -242,6 +210,12 @@ object Maintenance {
       Skipping.appendStatsManifest(spark, dir, mf): Unit)
     reports
   }
+
+  /** A visible hive `key=value` partition dir name (hidden swap dirs
+    * such as `.p=a_zcompact_tmp` also contain '=').
+    */
+  private def isPartition(name: String): Boolean =
+    name.contains("=") && !name.startsWith(".") && !name.startsWith("_")
 
   final case class DirReport(partition: String, files: Int, bytes: Long,
                              minBytes: Long, medianBytes: Long,
@@ -264,9 +238,7 @@ object Maintenance {
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
     require(fs.exists(root), s"no dataset at $dir")
     val partDirs = fs.listStatus(root)
-      .filter(st => st.isDirectory && st.getPath.getName.contains("=") &&
-        !st.getPath.getName.startsWith(".") &&
-        !st.getPath.getName.startsWith("_"))
+      .filter(st => st.isDirectory && isPartition(st.getPath.getName))
       .map(_.getPath).sortBy(_.getName)
     val targets = if (partDirs.nonEmpty) partDirs.toSeq else Seq(root)
     targets.map { p =>
@@ -349,9 +321,7 @@ object Maintenance {
     require(fs.exists(root), s"no dataset at $dir")
     // finish or roll back any crashed delete before trusting the listing
     val leafDirs = (Seq(root) ++ fs.listStatus(root)
-      .filter(st => st.isDirectory && st.getPath.getName.contains("=") &&
-        !st.getPath.getName.startsWith(".") &&
-        !st.getPath.getName.startsWith("_"))
+      .filter(st => st.isDirectory && isPartition(st.getPath.getName))
       .map(_.getPath)).distinct
     leafDirs.foreach(p => recoverDelete(fs, p))
 
@@ -459,8 +429,8 @@ object Maintenance {
                                targetFileBytes: Long,
                                maxOverlapPerFile: Int): ZorderCompacted = {
     import org.apache.spark.sql.functions.{col, input_file_name, min, max}
-    recoverOrphanedSwap(fs, path,
-      new Path(path.getParent, s".${path.getName}_zcompact_old"))
+    val swap = DirSwap.hidden(fs, path, "_zcompact")
+    swap.open()
     val files = fs.listStatus(path)
       .filter(st => st.isFile && st.getPath.getName.endsWith(".parquet"))
     if (files.isEmpty)
@@ -487,17 +457,12 @@ object Maintenance {
     if (!degraded)
       return ZorderCompacted(path.toString, files.length, files.length,
         maxOverlap, reclustered = false)
-    val tmp = new Path(path.getParent, s".${path.getName}_zcompact_tmp")
-    val old = new Path(path.getParent, s".${path.getName}_zcompact_old")
-    fs.delete(tmp, true)
-    fs.delete(old, true)
-    spark.read.parquet(path.toString)
-      .withColumn("_z", zExpr)
-      .repartitionByRange(targetN, col("_z"))
-      .sortWithinPartitions("_z")
-      .drop("_z")
-      .write.mode(SaveMode.Overwrite).parquet(tmp.toString)
-    val after = carrySidecarsAndSwap(spark, fs, path, tmp, old)
+    val after = swap.replace(stageWithSidecars(spark, fs, path,
+      spark.read.parquet(path.toString)
+        .withColumn("_z", zExpr)
+        .repartitionByRange(targetN, col("_z"))
+        .sortWithinPartitions("_z")
+        .drop("_z")))
     ZorderCompacted(path.toString, files.length, after, maxOverlap,
       reclustered = true)
   }

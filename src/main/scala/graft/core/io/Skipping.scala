@@ -393,9 +393,8 @@ object Skipping {
                        manifestDir: String,
                        cols: Seq[String] = Nil,
                        colsParamName: String = "stats_cols"): ManifestDelta = {
-    val mp = new Path(manifestDir)
-    val fs = mp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(mp)) appendStatsManifest(spark, dataDir, manifestDir)
+    if (manifestSwap(spark, manifestDir).heal())
+      appendStatsManifest(spark, dataDir, manifestDir)
     else {
       require(cols.nonEmpty,
         s"first manifest build at $manifestDir needs the columns to " +
@@ -570,13 +569,15 @@ object Skipping {
     * manifest from before sharding, one pinned by the old one-row
     * `_shards` parquet, or a build cut between its shard write and its
     * meta write — and gets one full sharded rewrite behind a whole-dir
-    * staged swap (which also drops an old `_shards`), even when no file
-    * changed.
+    * [[DirSwap]] (which also drops an old `_shards`), even when no file
+    * changed. A crash mid-swap leaves the old manifest aside; every tick
+    * and [[pruneFiles]] heals it before reading.
     */
   def appendStatsManifest(spark: SparkSession, dataDir: String,
                           manifestDir: String): ManifestDelta = {
-    val fs = new Path(manifestDir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val swap = manifestSwap(spark, manifestDir)
+    require(swap.open(), s"no stats manifest at $manifestDir")
+    val fs = swap.fs
     val onDisk = listParquet(spark, dataDir)
     val diskKeys = onDisk.map(pathKey).toSet
     val manifest = readManifest(spark, manifestDir)
@@ -620,8 +621,6 @@ object Skipping {
     def withFresh(rows: DataFrame, n: Int): DataFrame =
       fresh.fold(rows)(f => rows.unionByName(
         f.withColumn("shard", manifestShardCol(n))))
-    val staged = manifestDir.stripSuffix("/") + "_staged"
-    fs.delete(new Path(staged), true)
     val target = manifestShardsFor(onDisk.size.toLong)
     val pinned = meta.map(_.shards)
     if (pinned.forall(n => target > 4 * n || n > 4 * target)) {
@@ -631,21 +630,21 @@ object Skipping {
       // or a RE-SHARD when the pinned count has drifted 4× from the file
       // count's target (a manifest built small would otherwise stay
       // 1-sharded forever as its dataset grows)
-      writeShards(spark, withFresh(
-        keep.withColumn("shard", manifestShardCol(target)), target),
-        target, staged, newFiles.size)
-      writeManifestMeta(fs, staged, ManifestMeta(target, profiled))
-      fs.delete(new Path(manifestDir), true)
-      require(fs.rename(new Path(staged), new Path(manifestDir)),
-        s"manifest swap failed: $staged -> $manifestDir")
+      swap.replace { staged =>
+        writeShards(spark, withFresh(
+          keep.withColumn("shard", manifestShardCol(target)), target),
+          target, staged.toString, newFiles.size)
+        writeManifestMeta(fs, staged.toString, ManifestMeta(target, profiled))
+      }
     } else {
       val n = pinned.get
       // shards touched by this tick: every new file's shard plus every
       // vanished file's shard; kept rows come from those shard dirs only
       val affected = shardsOf(spark, newFiles ++ droppedKeys, n)
+      val staged = swap.staged
       writeShards(spark,
         withFresh(keep.filter(col("shard").isin(affected: _*)), n),
-        affected.size, staged, newFiles.size)
+        affected.size, staged.toString, newFiles.size)
       affected.foreach { k =>
         val src = new Path(staged, s"shard=$k")
         val dst = new Path(manifestDir, s"shard=$k")
@@ -656,9 +655,19 @@ object Skipping {
           require(fs.rename(src, dst),
             s"manifest shard swap failed: $src -> $dst")
       }
-      fs.delete(new Path(staged), true)
+      fs.delete(staged, true)
     }
     delta
+  }
+
+  /** The manifest's whole-directory swap (`<manifest>_staged`, moved
+    * aside to `<manifest>_old`); its staged dir also carries the
+    * per-shard swap's shards.
+    */
+  private def manifestSwap(spark: SparkSession, manifestDir: String): DirSwap = {
+    val live = new Path(manifestDir.stripSuffix("/"))
+    DirSwap(live.getFileSystem(spark.sparkContext.hadoopConfiguration), live,
+      live.suffix("_staged"), live.suffix("_old"))
   }
 
   /** Shared profiling core: per-file aggregation (ONE scan regardless of
@@ -772,6 +781,8 @@ object Skipping {
     // FileSystem.listStatus (`file:/…`) — compare scheme-stripped paths,
     // read through the disk listing's spelling
     val onDisk = listParquet(spark, dataDir)
+    // heal a full rewrite that crashed with the manifest moved aside
+    manifestSwap(spark, manifestDir).heal()
     val manifest = readManifest(spark, manifestDir)
     // a file is excluded if ANY predicate proves it cannot hold a match.
     // ts-family columns compare string bounds PREFIX-SAFELY: the row
@@ -784,12 +795,11 @@ object Skipping {
           .otherwise(lit(s))
       case other => lit(other)
     }
-    // ONE aggregation job + ONE collect over the bounded manifest: per
+    // ONE exchange-free collect over the bounded manifest: per
     // (file, column) row, does ANY conjunct on that column prove
-    // exclusion? — then bool-or per file. A null comparison
-    // (wrong-typed probe, conservative footer row) coalesces to false →
-    // file kept. The previous per-range union + exceptAll shape ran 2-3
-    // tiny jobs — ~1 s of fixed driver overhead per pruned read.
+    // exclusion? — then bool-or per file on the driver. A null
+    // comparison (wrong-typed probe, conservative footer row) coalesces
+    // to false → file kept.
     val rowExcluded = ranges.map { r =>
       val noVals = col("n_vals") === 0L // all-null: these preds reject null
       val noHit = r match {
@@ -810,9 +820,9 @@ object Skipping {
       }
       col("column") === r.column && coalesce(noVals || noHit, lit(false))
     }.reduce(_ || _)
-    val flagged = manifest
-      .groupBy("file").agg(max(rowExcluded).as("_ex"))
-      .collect().map(r => pathKey(r.getString(0)) -> r.getBoolean(1))
+    val flagged = manifest.select(col("file"), rowExcluded).collect()
+      .groupMapReduce(_.getString(0))(_.getBoolean(1))(_ || _)
+      .toSeq.map { case (f, ex) => pathKey(f) -> ex }
     val listedKeys = flagged.map(_._1).toSet
     val keptKeys = flagged.collect { case (k, ex) if !ex => k }.toSet
     val kept = onDisk.filter(f => keptKeys.contains(pathKey(f)))

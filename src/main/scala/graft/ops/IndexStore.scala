@@ -5,7 +5,7 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.catalyst.TableIdentifier
 import org.apache.spark.sql.functions.{broadcast, col}
 import graft.core.Checkpoints
-import graft.core.io.{Maintenance, Writer}
+import graft.core.io.{CrashSeam, Maintenance, Writer}
 
 /** The GDPR lifecycle every persisted index family shares — fingerprint,
   * near-dup (word and token grain), BM25, PQ and IVF-clustered. A family
@@ -26,6 +26,9 @@ import graft.core.io.{Maintenance, Writer}
   *    .deleteMatching]] (whose manifest protocol owns its crash
   *    recovery); the tombstones drop last, so a crash before that drop
   *    just re-runs a no-op rewrite.
+  *  - every catalog or file mutation goes through
+  *    [[graft.core.io.CrashSeam.step]], the crash seam it shares with
+  *    [[graft.core.io.DirSwap]];
   *  - every catalog rewrite is a STAGED swap (write `<t>_vac`, DROP `t`,
   *    RENAME), and [[open]] heals a crash at any step: a `_vac`
   *    whose original is missing rolls FORWARD, one whose original is
@@ -61,7 +64,7 @@ private[graft] final case class IndexStore(
     tables: Seq[String] = Nil, aux: Seq[String] = Nil,
     dataDir: Option[String] = None,
     summary: Option[(String, () => DataFrame)] = None) {
-  import IndexStore.step
+  import CrashSeam.step
 
   private def exists(t: String): Boolean = spark.catalog.tableExists(t)
   private def tsPath = new Path(tombstones)
@@ -247,13 +250,6 @@ private[graft] final case class IndexStore(
 }
 
 private[graft] object IndexStore {
-
-  /** Test seam: called with a step label before every catalog or file
-    * mutation an index family makes, so a spec can crash at any step.
-    */
-  @volatile private[graft] var onStep: String => Unit = _ => ()
-
-  def step[T](label: String)(body: => T): T = { onStep(label); body }
 
   /** Drop index tables together with any staged `_vac` copies. */
   def dropTables(spark: SparkSession, tables: Seq[String]): Unit =

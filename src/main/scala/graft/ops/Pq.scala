@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.core.io.CrashSeam
 import graft.functions.NativeFunctions.nearestCells
 
 /** Product quantization for billion-scale ANN (Jégou et al. 2011,
@@ -322,7 +323,7 @@ object Pq {
     val bc = spark.sparkContext.broadcast(storedCentroids(spark, dir))
     val assigned = fresh.withColumn("cell", element_at(
       graft.functions.NativeFunctions.nearestCells(col("embedding"), bc, 1), 1))
-    IndexStore.step(s"append $dir/codes")(encodePq(assigned, "embedding", cb)
+    CrashSeam.step(s"append $dir/codes")(encodePq(assigned, "embedding", cb)
       .select(col("vec_id").as("cand_id"), col("cell"), col("codes"))
       .write.mode("append").partitionBy("cell").parquet(s"$dir/codes"))
   }

@@ -3,7 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery}
-import graft.core.io.Writer
+import graft.core.io.{CrashSeam, DirSwap, Writer}
 import graft.core.model.{DatasetSpec, JobSpec}
 
 /** Structured Streaming surface. The reference has no stream consumer
@@ -634,62 +634,57 @@ object Streams {
                           clustersPath: String): DataFrame = {
     val root = new org.apache.hadoop.fs.Path(clustersPath)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val base = new org.apache.hadoop.fs.Path(root, "base")
-    val old = new org.apache.hadoop.fs.Path(root, ".base_old")
-    // crash between compaction's move-aside and swap leaves the only
-    // snapshot copy at `old` — heal forward before listing
-    if (fs.exists(root) && !fs.exists(base) && fs.exists(old))
-      require(fs.rename(old, base),
-        s"could not restore $clustersPath/base from $old")
-    val incs =
-      if (!fs.exists(root)) Array.empty[String]
-      else fs.listStatus(root).collect {
-        case s if s.isDirectory && s.getPath.getName.startsWith("inc_b") =>
-          s.getPath.toString
+    // a compaction crashed between its move-aside and rename-in leaves
+    // the only snapshot copy aside: heal before listing
+    val parts =
+      if (!fs.exists(root)) Nil
+      else {
+        val base = clustersSwap(fs, root)
+        (if (base.heal()) Seq(base.live.toString) else Nil) ++
+          fs.listStatus(root).collect {
+            case s if s.isDirectory && s.getPath.getName.startsWith("inc_b") =>
+              s.getPath.toString
+          }
       }
-    val parts = (if (fs.exists(base)) Seq(base.toString) else Nil) ++ incs
     if (parts.isEmpty)
       spark.range(0).select(col("id"), col("id").as("comp"))
     else spark.read.parquet(parts: _*)
   }
 
+  /** The clusters table's `base/` snapshot swap (`.base_tmp`, `.base_old`). */
+  private def clustersSwap(fs: org.apache.hadoop.fs.FileSystem,
+                           root: org.apache.hadoop.fs.Path): DirSwap =
+    DirSwap.hidden(fs, new org.apache.hadoop.fs.Path(root, "base"), "")
+
   /** Fold every `inc_b*` delta into the `base/` snapshot and drop the
     * deltas — the cadence maintenance that bounds the inc-dir count.
-    * Atomic via the write-tmp → move-aside → swap dance; inc dirs are
-    * deleted only AFTER the swap, so every crash window leaves a state
+    * The new base goes in through [[DirSwap]]; inc dirs are deleted only
+    * AFTER the swap, so every crash window leaves a state
     * [[loadClusters]] reads correctly (leftover deltas are redundant
-    * with the new base — absorbed by the min collapse; a missing base
-    * with `.base_old` present heals forward on the next read).
+    * with the new base — absorbed by the min collapse; a base left
+    * aside heals on the next read). A read that heals the base while
+    * the swap has it aside makes the swap refuse to rename in, before
+    * any delta is dropped.
     */
   def compactClusters(spark: SparkSession, clustersPath: String): Unit = {
     val root = new org.apache.hadoop.fs.Path(clustersPath)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(root)) return
-    val base = new org.apache.hadoop.fs.Path(root, "base")
-    val tmp = new org.apache.hadoop.fs.Path(root, ".base_tmp")
-    val old = new org.apache.hadoop.fs.Path(root, ".base_old")
-    fs.delete(tmp, true)
-    loadClusters(spark, clustersPath).write.parquet(tmp.toString)
-    fs.delete(old, true)
-    if (fs.exists(base))
-      require(fs.rename(base, old), s"could not move $base aside")
-    if (!fs.rename(tmp, base)) {
-      if (fs.exists(old)) fs.rename(old, base)
-      sys.error(s"could not swap clusters base at $clustersPath; restored")
-    }
-    fs.delete(old, true)
-    fs.listStatus(root).foreach { s =>
-      if (s.isDirectory && s.getPath.getName.startsWith("inc_b"))
-        fs.delete(s.getPath, true)
-    }
+    val swap = clustersSwap(fs, root)
+    swap.open()
+    swap.replace(tmp => loadClusters(spark, clustersPath).write.parquet(tmp.toString))
+    val deltas = fs.listStatus(root)
+      .filter(s => s.isDirectory && s.getPath.getName.startsWith("inc_b"))
+    if (deltas.nonEmpty) CrashSeam.step(s"drop deltas of $root")(
+      deltas.foreach(s => fs.delete(s.getPath, true)))
   }
 
   /** CDC-apply sink: maintain an SCD2 dimension at `dimPath` under a
     * stream of snapshot batches — each micro-batch is merged with
-    * [[graft.ops.Scd.scd2Merge]] and the dimension atomically swapped
-    * (write-tmp → rename, the [[graft.core.io.Maintenance]] dance; the
-    * merged plan reads the old dim lazily, so overwriting in place would
-    * corrupt it mid-read).
+    * [[graft.ops.Scd.scd2Merge]] and the dimension swapped in through
+    * [[graft.core.io.DirSwap]] (`.<dim>_scd2_tmp`/`_old`; the merged plan
+    * reads the old dim lazily, so overwriting in place would corrupt it
+    * mid-read).
     *
     * Replay safe WITHOUT per-batch bookkeeping: re-applying the same
     * snapshot with the same date is a no-op by the merge's own semantics
@@ -717,34 +712,19 @@ object Streams {
                      tracked: Seq[String], snapshotDate: String): Unit = {
     val spark = batch.sparkSession
     val path = new org.apache.hadoop.fs.Path(dimPath)
-    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val tmp = new org.apache.hadoop.fs.Path(path.getParent,
-      s".${path.getName}_scd2_tmp")
-    val old = new org.apache.hadoop.fs.Path(path.getParent,
-      s".${path.getName}_scd2_old")
-    // Crash recovery: a prior apply can die between moving the live
-    // dimension aside and swapping the new one in, leaving the ONLY copy
-    // at the hidden `old` path — restore it before deciding bootstrap vs
-    // merge, and treat `old` as garbage only when `path` itself exists.
-    if (!fs.exists(path) && fs.exists(old))
-      require(fs.rename(old, path), s"could not restore $dimPath from $old")
+    val swap = DirSwap.hidden(
+      path.getFileSystem(spark.sparkContext.hadoopConfiguration), path, "_scd2")
+    // heal first: a dimension a crashed swap left aside must be merged
+    // into, not bootstrapped over from the batch (losing the history)
     val snapshot = batch.select((keys ++ tracked).map(col): _*)
     val merged =
-      if (fs.exists(path))
+      if (swap.open())
         graft.ops.Scd.scd2Merge(spark.read.parquet(dimPath), snapshot,
           keys, tracked, snapshotDate)
       else // first batch bootstraps the dimension: every key inserts
         snapshot.withColumn("valid_from", lit(snapshotDate))
           .withColumn("valid_to", lit(null).cast("string"))
-    fs.delete(tmp, true); fs.delete(old, true)
-    merged.write.parquet(tmp.toString)
-    if (fs.exists(path))
-      require(fs.rename(path, old), s"could not move $dimPath aside")
-    if (!fs.rename(tmp, path)) {
-      if (fs.exists(old)) fs.rename(old, path) // restore; dim intact
-      sys.error(s"could not swap SCD2 dimension into $dimPath; original restored")
-    }
-    fs.delete(old, true); ()
+    swap.replace(tmp => merged.write.parquet(tmp.toString))
   }
 }
 

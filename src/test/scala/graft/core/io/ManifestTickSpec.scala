@@ -211,4 +211,21 @@ class ManifestTickSpec extends SparkSpec {
       assert(Skipping.appendStatsManifest(spark, data, mf).totalFiles === 8L)
     }
   }
+
+  test("a pruned read's file prune runs 1 job") {
+    withShardSize(4L) {
+      val (data, mf) = freshDirs()
+      (0 until 12).foreach(i => addFile(data, i * 10L, i * 10L + 10))
+      Skipping.maintainManifest(spark, data, mf, Seq("id", "v"))
+      addFile(data, 500L, 510L) // unlisted: read conservatively
+      val ranges = Seq(Skipping.ColumnRange("id", Some(15L), Some(34L)),
+        Skipping.ColumnRange("v", Some(0L), Some(6L)))
+      val (pruned, jobs) = JobCount(spark.sparkContext)(
+        Skipping.pruneFiles(spark, data, mf, ranges))
+      info(s"prune: $jobs Spark jobs")
+      assert(jobs === 1, s"the prune ran $jobs Spark jobs")
+      assert(pruned.readFiles === 4 && pruned.manifestFiles === 12 &&
+        pruned.unlistedFiles === 1)
+    }
+  }
 }

@@ -1,6 +1,7 @@
 package graft.ops
 
 import graft.SparkSpec
+import graft.core.io.CrashSeam
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -79,7 +80,7 @@ class IndexStoreSpec extends SparkSpec {
 
 /** Every persisted-index family driven through append, vacuum and
   * compact with a crash injected before EACH catalog or file mutation
-  * ([[IndexStore.onStep]]). After each crash the index is reopened
+  * ([[CrashSeam.onStep]]). After each crash the index is reopened
   * (which heals a half-done staged swap) and checked:
   *
   *  - vacuum and compact: the visible rows equal the state before the
@@ -103,8 +104,8 @@ class IndexCrashPointSpec extends SparkSpec {
       extends RuntimeException(s"injected crash before: $step")
 
   private def withHook[T](hook: String => Unit)(body: => T): T = {
-    IndexStore.onStep = hook
-    try body finally IndexStore.onStep = _ => ()
+    CrashSeam.onStep = hook
+    try body finally CrashSeam.onStep = _ => ()
   }
 
   private def countSteps(body: => Unit): Int = {
